@@ -110,17 +110,15 @@ def main(argv: list[str] | None = None) -> int:
                     print(line)
             return 0
 
-        from csvtool_spark.functions.caching import release_stages
+        from csvtool_spark.functions.caching import persist_scope
 
         w = csv.writer(sys.stdout)
-        for df in eng.run(text):
-            try:
+        with persist_scope():
+            for df in eng.run(text):
                 w.writerow(df.columns)
                 it = df.toLocalIterator() if not args.limit else iter(df.take(args.limit))
                 for row in it:
                     w.writerow(["" if v is None else v for v in row])
-            finally:
-                release_stages(df)  # server.py symmetry: free pipe stages
         return 0
     finally:
         # the provider is CLI-scoped: in-process callers (tests, embedding

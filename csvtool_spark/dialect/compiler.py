@@ -42,6 +42,7 @@ from csvtool_spark.dialect.types import (
     parse_date,
     parse_duration_seconds,
 )
+from csvtool_spark.functions import caching
 from csvtool_spark.functions.crypto import decrypt as crypto_decrypt
 from csvtool_spark.functions.crypto import encrypt as crypto_encrypt
 from csvtool_spark.functions.scalar import (
@@ -548,10 +549,10 @@ def _attach_inc_base(df: DataFrame) -> DataFrame:
     with scan order, and range partitioning preserves its global order
     across partitions. The input is persisted so the count job and the
     main query share one computation of the upstream plan."""
-    staged = (
-        df.repartitionByRange(F.col(ROWID))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
+    staged = caching.persist(
+        df.repartitionByRange(F.col(ROWID)).withColumn(
+            "__pid", F.spark_partition_id()
+        )
     )
     counts = {
         r["__pid"]: r["count"] for r in staged.groupBy("__pid").count().collect()

@@ -34,9 +34,6 @@ def apply_stages(
     """Apply the parsed ``|>`` chain. ``engine`` is the calling CsvEngine —
     table-referencing stages (``decontaminate(..., ref=t)``) resolve their
     ref through it; column-only stages ignore it."""
-    from csvtool_spark.functions.caching import attach_stages, carried_stages
-
-    persisted: list[DataFrame] = []
     for st in stages:
         impl = STAGES.get(st.name)
         if impl is None:
@@ -45,11 +42,7 @@ def apply_stages(
                 f"{', '.join(sorted(STAGES))})"
             )
         df = impl(df, st, engine)
-        # later stages derive new frames (the Python attribute does not
-        # survive join/withColumn), so accumulate across the chain and
-        # re-attach on the final result for one release_stages call
-        persisted.extend(carried_stages(df))
-    return attach_stages(df, persisted) if persisted else df
+    return df
 
 
 # --- arg plumbing -----------------------------------------------------------
@@ -252,7 +245,6 @@ def _stage_neardup(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     highest-quality one, not the accidentally-lowest-id one). NULL
     scores lose to every real score. Compose as ``|> quality(text) |>
     neardup(text, id=doc_id, transitive=1, by=quality)``."""
-    from csvtool_spark.functions.caching import attach_stages
     from csvtool_spark.operators.dedup import near_dup_pairs_minhash
 
     _no_extra_kwargs(
@@ -292,10 +284,8 @@ def _stage_neardup(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     if transitive:
         from pyspark.sql.types import IntegralType
 
-        # validate BEFORE building the pair pipeline: near_dup_pairs
-        # persists staging frames eagerly, and an error raised after
-        # that would orphan them (the round-9 review's leak class —
-        # release_stages only sees stages attached to a RESULT)
+        # validated with the other arguments, before the pair pipeline
+        # is built: a rejected stage builds nothing
         if not isinstance(df.schema[idc].dataType, IntegralType):
             raise SemanticError(
                 f"stage 'neardup': transitive=1 needs an integral id "
@@ -333,9 +323,7 @@ def _stage_neardup(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     else:
         losers = pairs.select(F.col("id_b").alias(idc)).distinct()
         out = df.join(losers, idc, "left_anti")
-    # the pair pipeline's persisted stages ride the result so consumers
-    # can free them after the action (caching.release_stages contract)
-    return attach_stages(out, getattr(pairs, "_persisted_stages", []))
+    return out
 
 
 def _stage_langid(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:

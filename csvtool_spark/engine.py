@@ -38,6 +38,7 @@ from csvtool_spark.dialect.types import (
     T_INT,
     T_STRING,
 )
+from csvtool_spark.functions.caching import persist_scope
 from csvtool_spark.sources.csv import read_csv
 
 
@@ -221,16 +222,17 @@ class CsvEngine:
         partition — the scale path; ``save_csv`` is the single-file
         interactive path). ``partition_by`` adds hive-style partitioning."""
         written = []
-        for i, df in enumerate(self.run(text)):
-            path = out_dir if i == 0 else f"{out_dir}-{i + 1}"
-            for f in df.schema.fields:
-                if isinstance(f.dataType, T.DayTimeIntervalType):
-                    df = df.withColumn(f.name, F.col(f.name).cast("string"))
-            w = df.write.mode("overwrite").option("header", True)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.csv(path)
-            written.append(path)
+        with persist_scope():
+            for i, df in enumerate(self.run(text)):
+                path = out_dir if i == 0 else f"{out_dir}-{i + 1}"
+                for f in df.schema.fields:
+                    if isinstance(f.dataType, T.DayTimeIntervalType):
+                        df = df.withColumn(f.name, F.col(f.name).cast("string"))
+                w = df.write.mode("overwrite").option("header", True)
+                if partition_by:
+                    w = w.partitionBy(*partition_by)
+                w.csv(path)
+                written.append(path)
         return written
 
     def save_parquet(
@@ -273,16 +275,17 @@ class CsvEngine:
             )
         stem, ext = os.path.splitext(out_dir)
         written = []
-        for i, df in enumerate(self.run(text)):
-            path = out_dir if i == 0 else f"{stem}-{i + 1}{ext}"
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            if ext.lower() == ".orc":
-                w.orc(path)
-            else:
-                w.parquet(path)
-            written.append(path)
+        with persist_scope():
+            for i, df in enumerate(self.run(text)):
+                path = out_dir if i == 0 else f"{stem}-{i + 1}{ext}"
+                w = df.write.mode("overwrite")
+                if partition_by:
+                    w = w.partitionBy(*partition_by)
+                if ext.lower() == ".orc":
+                    w.orc(path)
+                else:
+                    w.parquet(path)
+                written.append(path)
         return written
 
     def to_json(self, text: str, limit: int | None = None) -> list[list[str]]:
@@ -296,13 +299,14 @@ class CsvEngine:
         ``limit=0`` to explicitly request every row (caller owns the
         memory), or any positive cap."""
         out = []
-        for df in self.run(text):
-            eff = limit
-            if eff is None:
-                eff = max(1, 20000 // max(1, len(df.columns)))
-            if eff > 0:
-                df = df.limit(eff)
-            out.append(df.toJSON().collect())
+        with persist_scope():
+            for df in self.run(text):
+                eff = limit
+                if eff is None:
+                    eff = max(1, 20000 // max(1, len(df.columns)))
+                if eff > 0:
+                    df = df.limit(eff)
+                out.append(df.toJSON().collect())
         return out
 
     def save_csv(self, text: str, out_path: str) -> list[str]:
@@ -317,7 +321,6 @@ class CsvEngine:
         ``.parquet``/``.orc`` delegate to the native columnar directory
         sink, anything else the reference's comma CSV (dispatch lives in
         ``write_single_result`` — one shared lane with the GUI save)."""
-        results = self.run(text)
         # a bare name (no extension) gets '.csv' appended in EVERY
         # branch — the reference's pathChecker rule (files.go:173-178),
         # applied here too because the CLI's -o lane calls save_csv
@@ -329,10 +332,12 @@ class CsvEngine:
         if not ext and not codec:
             base = out_path + ".csv"
         written = []
-        for i, df in enumerate(results):
-            p = numbered_sink_path(base, i, len(results))
-            write_single_result(df, p)
-            written.append(p)
+        with persist_scope():
+            results = self.run(text)
+            for i, df in enumerate(results):
+                p = numbered_sink_path(base, i, len(results))
+                write_single_result(df, p)
+                written.append(p)
         return written
 
 

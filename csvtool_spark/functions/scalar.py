@@ -81,11 +81,6 @@ def csv_div(a: Column, b: Column, int_result: bool) -> Column:
     return q.cast("long") if int_result else q
 
 
-def csv_pow(a: Column, b: Column) -> Column:
-    """``^`` is exponentiation (value.go:476-487, scanner.go:95)."""
-    return F.pow(a, b)
-
-
 # ---------------------------------------------------------------------------
 # Stateful / generator functions
 # ---------------------------------------------------------------------------

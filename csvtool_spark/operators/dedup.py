@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from csvtool_spark.functions import caching
 from csvtool_spark.operators.textstats import tokens
 
 #: Skip LSH buckets bigger than this: a bucket with B members yields B²/2
@@ -337,17 +338,15 @@ def candidate_pairs(banded: DataFrame, id_col: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from csvtool_spark.functions.caching import attach_stages
-
     # Deserialized level: the default MEMORY_AND_DISK columnar-encodes
     # (and compresses) each cached batch, which cost ~1.7 s of the
     # q_dedup_minhash COLD pass at sf0.1 for three fixed-width columns
     # that compress poorly anyway (round-14 probe: fill 2.6 s vs 0.92 s
     # deserialized, recompute itself 0.95 s; reads identical at ~0.05 s).
-    # The table is (id, band_id, band_key) — narrow — and is dropped by
-    # release_stages right after the pair expansion, so the transient
-    # memory trade is bounded (guide §5.1).
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    # The table is (id, band_id, band_key) — narrow — and is dropped when
+    # the enclosing persist_scope exits, right after the action that reads
+    # the pairs, so the transient memory trade is bounded (guide §5.1).
+    banded = caching.persist(banded, StorageLevel.MEMORY_AND_DISK_DESER)
     sizes = banded.groupBy("band_id", "band_key").agg(F.count(F.lit(1)).alias("__bn"))
     pruned = banded.join(
         sizes.filter((F.col("__bn") >= 2) & (F.col("__bn") <= MAX_BUCKET)),
@@ -363,11 +362,10 @@ def candidate_pairs(banded: DataFrame, id_col: str) -> DataFrame:
         "transform(slice(`__ids`, i + 2, size(`__ids`)), "
         "b -> named_struct('a', least(a, b), 'b', greatest(a, b))))))"
     )
-    return attach_stages(
+    return (
         buckets.select(pair.alias("p"))
         .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-        .distinct(),
-        [banded],
+        .distinct()
     )
 
 
@@ -454,21 +452,16 @@ def near_dup_pairs_minhash(
     # pre-signature stage keeps the signature pipeline computed ONCE (a
     # sigs-sourced join would re-inline the whole minhash fold per branch);
     # persisted because BOTH verify-join sides read it.
-    toks_only = df.select(
+    toks_only = caching.persist(df.select(
         F.col(id_col), tokens(normalized(F.col(text_col))).alias("__toks")
-    ).persist()
+    ))
     ta = toks_only.select(F.col(id_col).alias("id_a"), F.col("__toks").alias("__ta"))
     tb = toks_only.select(F.col(id_col).alias("id_b"), F.col("__toks").alias("__tb"))
-    from csvtool_spark.functions.caching import attach_stages
-
-    # propagate candidate_pairs' persisted banded stage alongside our own
-    # token stage so release_stages on THIS result frees everything
-    return attach_stages(
+    return (
         pairs.join(ta, "id_a")
         .join(tb, "id_b")
         .select("id_a", "id_b", jaccard(F.col("__ta"), F.col("__tb")).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold),
-        getattr(pairs, "_persisted_stages", []) + [toks_only],
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -482,14 +475,14 @@ def ngram_jaccard_pairs(
 
     Worst case is quadratic in documents sharing a hot shingle (this is the
     exact operator; use MinHash banding for web-scale approximate dedup).
-    The persisted shingle stage is attached to the result
-    (``functions.caching.release_stages`` frees it once consumed)."""
-    from csvtool_spark.functions.caching import attach_stages
-
+    The shingle stage is persisted through ``functions.caching.persist``
+    (an enclosing ``persist_scope`` frees it once the action is done)."""
     toks = tokens(normalized(F.col(text_col)))
     # persisted: three consumers (sizes + both sides of the shingle
     # equi-join) would otherwise re-shingle the corpus.
-    base = df.select(F.col(id_col), word_shingles(toks, k).alias("__sh")).persist()
+    base = caching.persist(
+        df.select(F.col(id_col), word_shingles(toks, k).alias("__sh"))
+    )
     sizes = base.select(id_col, F.size("__sh").alias("__n"))
     ex = base.select(id_col, F.explode("__sh").alias("__s"))
     inter = (
@@ -502,7 +495,7 @@ def ngram_jaccard_pairs(
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
     union = (F.col("__na") + F.col("__nb") - F.col("__i")).cast("double")
-    return attach_stages(
+    return (
         inter.join(F.broadcast(sa), "id_a")
         .join(F.broadcast(sb), "id_b")
         .select(
@@ -512,8 +505,7 @@ def ngram_jaccard_pairs(
                 "jaccard"
             ),
         )
-        .filter(F.col("jaccard") >= threshold),
-        [base],
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -686,7 +678,7 @@ def near_dup_pairs_simhash(
     else:
         staged = df.select(F.col(id_col), toks.alias("__toks"))
         sim_expr = simhash64(F.col("__toks"), hash_family)
-    sigs = staged.select(F.col(id_col), sim_expr.alias("__sim")).persist()
+    sigs = caching.persist(staged.select(F.col(id_col), sim_expr.alias("__sim")))
     chunks = sigs.select(
         id_col,
         "__sim",
@@ -1270,23 +1262,22 @@ def cross_corpus_neardup(
     follow-up; here both sides stage fresh (one linear pass each). The
     two banded tables stay persisted for the life of the returned lazy
     (data-dependent-size) DataFrame — there is no safe in-function
-    unpersist point; they are attached to the result via
-    ``functions.caching.attach_stages`` so long-lived sessions can call
-    ``release_stages(result)`` after consuming it. Cluster deployments
+    unpersist point; they are persisted through
+    ``functions.caching.persist`` so an enclosing ``persist_scope``
+    releases them after the consuming action. Cluster deployments
     should write the ref banded table out instead of caching it."""
-    from csvtool_spark.functions.caching import attach_stages
     rows = n_hashes // bands
     band_hash = "string" if hash_family == "md5" else "xx64"
-    b_new = _banded(
+    b_new = caching.persist(_banded(
         _minhash_signatures(new_df, text_col, id_col, n_hashes, shingle_k,
                             kernel, hash_family),
         id_col, "__sig", bands, rows, band_hash,
-    ).persist()
-    b_ref = _banded(
+    ))
+    b_ref = caching.persist(_banded(
         _minhash_signatures(ref_df, text_col, id_col, n_hashes, shingle_k,
                             kernel, hash_family),
         id_col, "__sig", bands, rows, band_hash,
-    ).persist()
+    ))
 
     def capped(b: DataFrame) -> DataFrame:
         sizes = b.groupBy("band_id", "band_key").agg(
@@ -1315,13 +1306,12 @@ def cross_corpus_neardup(
         F.col(id_col).alias("ref_id"),
         tokens(normalized(F.col(text_col))).alias("__tb"),
     )
-    return attach_stages(
+    return (
         cand.join(tn, "new_id")
         .join(tr, "ref_id")
         .select("new_id", "ref_id",
                 jaccard(F.col("__ta"), F.col("__tb")).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold),
-        [b_new, b_ref],
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -1362,12 +1352,11 @@ def minhash_recall_eval(
     Both counts come from ONE pass over the truth set (truth LEFT JOIN
     candidates — the expensive exact-pair plan never evaluates twice),
     and every persisted stage — the sampled projection plus the child
-    operators' shingle and banded stages — is attached to the result for
-    ``release_stages`` (the tuning loop calls this repeatedly on a
-    long-lived session; leaked corpus-sized caches are the round-4
-    ADVICE class).
+    operators' shingle and banded stages — goes through
+    ``functions.caching.persist``, so a tuning loop that calls this
+    repeatedly on a long-lived session wraps each call's action in a
+    ``persist_scope`` and leaks no corpus-sized cache.
     """
-    from csvtool_spark.functions.caching import attach_stages
     from csvtool_spark.functions.hashing import md5_prefix_long
 
     if not 0.0 < sample_frac <= 1.0:
@@ -1384,9 +1373,11 @@ def minhash_recall_eval(
     coin = md5_prefix_long(
         F.concat_ws("#", F.lit(salt), F.col(id_col).cast("string"))
     )
-    sample = df.filter(coin < F.lit(int(sample_frac * 4294967296))).select(
-        id_col, text_col
-    ).persist()
+    sample = caching.persist(
+        df.filter(coin < F.lit(int(sample_frac * 4294967296))).select(
+            id_col, text_col
+        )
+    )
 
     truth = ngram_jaccard_pairs(
         sample, text_col, id_col, threshold=threshold, k=shingle_k
@@ -1402,7 +1393,7 @@ def minhash_recall_eval(
     hit = truth.select("id_a", "id_b").join(
         cand.withColumn("__hit", F.lit(1)), ["id_a", "id_b"], "left"
     )
-    return attach_stages(
+    return (
         hit.agg(
             F.count(F.lit(1)).alias("__nt"),
             F.sum(F.coalesce(F.col("__hit"), F.lit(0))).alias("__nf"),
@@ -1413,10 +1404,7 @@ def minhash_recall_eval(
                 F.col("__nt") > 0,
                 F.col("__nf").cast("double") / F.col("__nt").cast("double"),
             ).alias("recall"),
-        ),
-        [sample]
-        + getattr(truth, "_persisted_stages", [])
-        + getattr(cand, "_persisted_stages", []),
+        )
     )
 
 

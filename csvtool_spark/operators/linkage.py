@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from csvtool_spark.functions import caching
+
 
 def char_grams(col: Column, n: int = 3) -> Column:
     """Distinct character n-grams of ``lower(trim(col))``; strings shorter
@@ -67,12 +69,9 @@ def fuzzy_string_pairs(
 
     Persist lifecycle: up to four gram tables stay cached for the life
     of the returned lazy result (multi-consumer stages — freq aggregate,
-    prune join, sizes, cross-side join). They are attached to the result
-    via ``functions.caching.attach_stages``; long-lived sessions should
-    call ``release_stages(result)`` once the pairs are consumed."""
-    from csvtool_spark.functions.caching import attach_stages
-
-    stages: list[DataFrame] = []
+    prune join, sizes, cross-side join). They are persisted through
+    ``functions.caching.persist``, so an enclosing ``persist_scope``
+    releases them once the action that consumes the pairs is done."""
 
     def side(df: DataFrame, idc: str, colc: str, alias: str):
         g = df.select(
@@ -83,14 +82,12 @@ def fuzzy_string_pairs(
         # shuffles, so without the persist the scan+explode re-runs per
         # consumer (the ngram_jaccard_pairs precedent; BM25's tf had the
         # same review finding).
-        g = g.persist()
-        stages.append(g)
+        g = caching.persist(g)
         if max_gram_freq is not None:
             freq = g.groupBy("g").agg(F.count(F.lit(1)).alias("__f"))
-            g = g.join(
+            g = caching.persist(g.join(
                 freq.filter(F.col("__f") <= int(max_gram_freq)), "g"
-            ).drop("__f").persist()
-            stages.append(g)
+            ).drop("__f"))
         sizes = g.groupBy(alias).agg(F.count(F.lit(1)).alias(f"__n_{alias}"))
         return g, sizes
 
@@ -106,12 +103,11 @@ def fuzzy_string_pairs(
         / (F.col("__n_a_id") + F.col("__n_b_id") - F.col("__i")).cast("double"),
         6,
     )
-    return attach_stages(
+    return (
         inter.join(sa, "a_id")
         .join(sb, "b_id")
         .select("a_id", "b_id", sim.alias("sim"))
-        .filter(F.col("sim") >= float(threshold)),
-        stages,
+        .filter(F.col("sim") >= float(threshold))
     )
 
 

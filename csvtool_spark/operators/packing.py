@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from csvtool_spark.functions import caching
+
 
 def pack_sequences(
     df: DataFrame, id_col: str, n_tokens_col: str, budget: int
@@ -50,7 +52,7 @@ def pack_sequences(
         .withColumn("__part", F.spark_partition_id())
     )
     w = Window.partitionBy("__part").orderBy("__id")
-    d = d.withColumn("__local_end", F.sum("__n").over(w)).persist()
+    d = caching.persist(d.withColumn("__local_end", F.sum("__n").over(w)))
 
     totals = sorted(
         d.groupBy("__part").agg(F.sum("__n").alias("__t")).collect(),

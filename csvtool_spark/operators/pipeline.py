@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csvtool_spark.functions import caching
 from csvtool_spark.operators import dedup, textstats
 
 
@@ -90,13 +91,6 @@ def curate(
     return kept
 
 
-def curation_report(df: DataFrame, curated: DataFrame, id_col: str = "doc_id") -> dict:
-    """Driver-side summary: kept/dropped counts (two jobs, small results)."""
-    total = df.count()
-    kept = curated.count()
-    return {"total": total, "kept": kept, "dropped": total - kept}
-
-
 def quality_gate(
     df: DataFrame,
     text_col: str,
@@ -117,10 +111,10 @@ def quality_gate(
     # persisted: the scored frame feeds BOTH the threshold aggregate and
     # the gating join probe — without it the quality expression (three
     # string_split passes per row) runs over the corpus twice
-    scored = df.select(
+    scored = caching.persist(df.select(
         F.col(id_col), F.col(group_col),
         textstats.quality_score(F.col(text_col)).alias("quality"),
-    ).persist()
+    ))
     # The threshold is rounded to the 6-decimal precision quality_score
     # itself emits (and the oracle rounds identically): Spark `percentile`
     # and DuckDB `quantile_cont` interpolate with different expression

@@ -30,6 +30,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csvtool_spark.functions import caching
 from csvtool_spark.functions.fixedpoint import half_away
 
 from csvtool_spark.operators.dedup import normalized
@@ -90,10 +91,10 @@ def bm25_scores(
     # shuffle. Persisted: the dfreq collect below AND the returned scoring
     # plan both read it; without the persist the corpus tokenize + explode
     # + shuffle (the dominant cost) would run twice (the near_dup_pairs
-    # pattern). Tiny: matching docs × |q| rows. Attached to the result
-    # (functions.caching) so repeated calls in a long-lived session can
-    # release_stages() after consuming the ranking.
-    tf = (
+    # pattern). Tiny: matching docs × |q| rows. Persisted through
+    # functions.caching, so an enclosing persist_scope releases it once
+    # the ranking is consumed.
+    tf = caching.persist(
         df.select(
             F.col(id_col),
             F.size(toks).alias("__dl"),
@@ -102,7 +103,7 @@ def bm25_scores(
         .filter(F.col("__tok").isin(*terms))
         .groupBy(id_col, "__dl", "__tok")
         .agg(F.count(F.lit(1)).alias("__tf"))
-    ).persist()
+    )
 
     # per-term df → idf6 literal map (≤|q| rows; same ln formula as oracle)
     dfreq = {r["__tok"]: int(r["n"]) for r in
@@ -113,8 +114,6 @@ def bm25_scores(
         )
         for t, dfn in dfreq.items()
     }
-    from csvtool_spark.functions.caching import attach_stages
-
     if not idf6:  # no term matched any document
         tf.unpersist()
         return (
@@ -140,7 +139,7 @@ def bm25_scores(
     part = (idf_map[F.col("__tok")].cast("double") / F.lit(_SCALE)) * tfpart
     part6 = F.floor(part * F.lit(_SCALE) + F.lit(0.5)).cast("long")  # part ≥ 0
 
-    return attach_stages(
+    return (
         tf.select(F.col(id_col), part6.alias("__p6"))
         .groupBy(id_col)
         .agg(F.sum("__p6").alias("score_fp"))
@@ -150,8 +149,7 @@ def bm25_scores(
             F.round(F.col("score_fp") / F.lit(_SCALE), 6).alias("score"),
         )
         .orderBy(F.desc("score_fp"), F.asc(id_col))
-        .limit(int(top_k)),
-        [tf],
+        .limit(int(top_k))
     )
 
 

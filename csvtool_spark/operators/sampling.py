@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from csvtool_spark.functions import caching
+
 #: hash buckets for split assignment — fractions resolve to 1/10000ths.
 _BUCKETS = 10_000
 
@@ -216,7 +218,7 @@ def mixture_resample(
     )
     # persisted: the validation below and the budget/rates plan both read
     # it — one corpus-counting scan, #sources rows of state
-    sized = counts.join(F.broadcast(w), source_col).persist()
+    sized = caching.persist(counts.join(F.broadcast(w), source_col))
     # A target source absent from df (or contributing zero tokens) would
     # silently vanish in the inner join above and skew the realized
     # mixture away from the requested shares — fail with the source names
@@ -312,16 +314,11 @@ def temperature_mixture(
     the tiny rate table onto the corpus scan — the corpus never
     shuffles.
     """
-    from csvtool_spark.functions.caching import attach_stages
-
     df = df.filter(F.col(source_col).isNotNull())
-    rates, counts = _temperature_rates(df, source_col, token_count_col, alpha)
+    rates = _temperature_rates(df, source_col, token_count_col, alpha)
     coin = mixture_coin(F.col(key_col))
-    return attach_stages(
-        df.join(F.broadcast(rates), source_col).filter(
-            coin < F.col("keep_ppm")
-        ),
-        [counts],
+    return df.join(F.broadcast(rates), source_col).filter(
+        coin < F.col("keep_ppm")
     )
 
 
@@ -337,79 +334,67 @@ def temperature_rates(
     ``mixture_apply`` as pre-computed rates) without sampling anything.
     Same semantics and guards as the operator: NULL sources excluded,
     zero-mass sources raise, rates clamped to [1, 1e6] ppm."""
-    from csvtool_spark.functions.caching import attach_stages
-
-    rates, counts = _temperature_rates(
+    return _temperature_rates(
         df.filter(F.col(source_col).isNotNull()),
         source_col, token_count_col, alpha,
     )
-    return attach_stages(rates, [counts])
 
 
 def _temperature_rates(
     df: DataFrame, source_col: str, token_count_col: str, alpha: float
-) -> tuple[DataFrame, DataFrame]:
-    """(rates, persisted counts) — NULL-source rows must already be
-    filtered by the caller (their token mass is excluded from n_min)."""
+) -> DataFrame:
+    """The rate table over a persisted per-source count table — NULL-source
+    rows must already be filtered by the caller (their token mass is
+    excluded from n_min)."""
     if not 0.0 <= float(alpha) <= 1.0:
         raise ValueError(f"alpha must be in [0, 1], got {alpha}")
     # persisted: the zero-guard action, the global min, and the rate
     # projection all read it — ONE corpus-counting scan, #sources rows
     # of state (mixture_resample's `sized` discipline)
-    counts = df.groupBy(source_col).agg(
+    counts = caching.persist(df.groupBy(source_col).agg(
         F.sum(token_count_col).cast("long").alias("__tok")
-    ).persist()
-    # anything after the persist can raise (the zero-guard collect is a
-    # real Spark job; the rate construction is analysis) — unpersist on
-    # ANY exception, not just the zero-mass ValueError, or the cached
-    # frame leaks for the life of the shared session (round-12 review
-    # found the narrow case; round-13 ADVICE generalized it)
-    try:
-        # a zero/negative-token source would set n_min<=0 and collapse
-        # EVERY source's rate to the 1 ppm clamp — a silent near-empty
-        # corpus that the twin reproduces (shared-semantic-bug class);
-        # fail with names instead, matching mixture_resample's
-        # missing-source discipline
-        dead = sorted(
-            r[0] for r in counts.filter(F.col("__tok") <= 0)
-            .select(source_col).collect()
+    ))
+    # a zero/negative-token source would set n_min<=0 and collapse
+    # EVERY source's rate to the 1 ppm clamp — a silent near-empty
+    # corpus that the twin reproduces (shared-semantic-bug class);
+    # fail with names instead, matching mixture_resample's
+    # missing-source discipline
+    dead = sorted(
+        r[0] for r in counts.filter(F.col("__tok") <= 0)
+        .select(source_col).collect()
+    )
+    if dead:
+        raise ValueError(
+            f"temperature_mixture: sources with no positive token "
+            f"mass would collapse every rate to the 1 ppm clamp: "
+            f"{dead}"
         )
-        if dead:
-            raise ValueError(
-                f"temperature_mixture: sources with no positive token "
-                f"mass would collapse every rate to the 1 ppm clamp: "
-                f"{dead}"
-            )
-        mn = counts.agg(F.min("__tok").alias("__mn"))
-        ratio = (
-            F.col("__mn").cast("double") / F.col("__tok").cast("double")
-        )
-        exp = 1.0 - float(alpha)
-        if exp == 0.5:
-            powed = F.sqrt(ratio)
-        elif exp == 0.25:
-            # alpha=0.75 rides sqrt∘sqrt — BOTH ops are correctly
-            # rounded (IEEE 754), so like the alpha=0.5 lane the
-            # realized rate table is bit-identical cross-engine;
-            # pow(x, 0.25) is not (the twin mirrors the same two-sqrt
-            # composition, round 12)
-            powed = F.sqrt(F.sqrt(ratio))
-        else:
-            powed = F.pow(ratio, F.lit(exp))
-        rates = counts.crossJoin(F.broadcast(mn)).select(
-            source_col,
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.least(
-                    F.lit(1_000_000).cast("long"),
-                    F.floor(F.lit(1_000_000.0) * powed).cast("long"),
-                ),
-            ).alias("keep_ppm"),
-        )
-    except Exception:
-        counts.unpersist()
-        raise
-    return rates, counts
+    mn = counts.agg(F.min("__tok").alias("__mn"))
+    ratio = (
+        F.col("__mn").cast("double") / F.col("__tok").cast("double")
+    )
+    exp = 1.0 - float(alpha)
+    if exp == 0.5:
+        powed = F.sqrt(ratio)
+    elif exp == 0.25:
+        # alpha=0.75 rides sqrt∘sqrt — BOTH ops are correctly
+        # rounded (IEEE 754), so like the alpha=0.5 lane the
+        # realized rate table is bit-identical cross-engine;
+        # pow(x, 0.25) is not (the twin mirrors the same two-sqrt
+        # composition, round 12)
+        powed = F.sqrt(F.sqrt(ratio))
+    else:
+        powed = F.pow(ratio, F.lit(exp))
+    return counts.crossJoin(F.broadcast(mn)).select(
+        source_col,
+        F.greatest(
+            F.lit(1).cast("long"),
+            F.least(
+                F.lit(1_000_000).cast("long"),
+                F.floor(F.lit(1_000_000.0) * powed).cast("long"),
+            ),
+        ).alias("keep_ppm"),
+    )
 
 
 def negative_pairs(

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from csvtool_spark.functions import caching
+
 
 def _vec_d(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -880,11 +882,11 @@ def semantic_dedup(
         if centroids is not None
         else ivf_centroids(df, vec_col, id_col, n_cells)
     )
-    assigned = df.select(
+    assigned = caching.persist(df.select(
         F.col(id_col),
         _vec_d(F.col(vec_col)).alias("__v"),
         ivf_cell(F.col(vec_col), cents).alias("__cell"),
-    ).persist()
+    ))
     a = assigned.select(
         "__cell", F.col(id_col).alias("id_a"), F.col("__v").alias("__va")
     )
@@ -1160,9 +1162,9 @@ def ann_recall_eval(
     # persisted: the exact and the LSH branch both read this scan (their
     # pre-window filters differ, so Spark cannot reuse the exchange) —
     # without the persist the corpus scan + |corpus|·|Q| cosine matrix
-    # (the dominant cost) would compute twice. Attached to the result
-    # (functions.caching) so long-lived sessions can release_stages()
-    # after consuming the bounded |Q|-row output (the bm25 pattern).
+    # (the dominant cost) would compute twice. Persisted through
+    # functions.caching, so an enclosing persist_scope releases it after
+    # the bounded |Q|-row output is consumed (the bm25 pattern).
     if kernel == "arrow":
         from pyspark.sql.pandas.functions import pandas_udf
 
@@ -1194,7 +1196,7 @@ def ann_recall_eval(
             "struct<dots:array<double>,nv:double,rb:array<long>>",
         )
         den = F.col("__s.nv") * F.col("q.qn")
-        scored = (
+        scored = caching.persist(
             df.select(F.col(id_col), udf(F.col(vec_col)).alias("__s"))
             .select(F.col(id_col), "__s", F.explode(qmeta).alias("q"))
             .filter(F.col(id_col) != F.col("q.qid"))  # self never counts
@@ -1210,7 +1212,7 @@ def ann_recall_eval(
                     F.col("__s.rb"), F.col("q.probes")
                 ).alias("__cand"),
             )
-        ).persist()
+        )
     else:
         qarr = F.array(
             *[
@@ -1238,7 +1240,7 @@ def ann_recall_eval(
                 for t in range(n_tables)
             ]
         )
-        scored = (
+        scored = caching.persist(
             df.select(
                 F.col(id_col), v.alias("__v"), row_buckets.alias("__rb"),
                 F.explode(qarr).alias("q"),
@@ -1250,7 +1252,7 @@ def ann_recall_eval(
                 cosine(F.col("__v"), F.col("q.qv")).alias("cos"),
                 F.arrays_overlap(F.col("__rb"), F.col("q.probes")).alias("__cand"),
             )
-        ).persist()
+        )
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col(id_col))
     exact = (
         scored.withColumn("rn", F.row_number().over(w))
@@ -1263,7 +1265,7 @@ def ann_recall_eval(
         .filter(F.col("rn") <= k)
         .select("qid", id_col)
     )
-    return _recall_output(df, id_col, exact, approx, queries, k, [scored])
+    return _recall_output(df, id_col, exact, approx, queries, k)
 
 
 def _recall_output(
@@ -1273,30 +1275,24 @@ def _recall_output(
     approx: DataFrame,
     queries: dict,
     k: int,
-    stages: list[DataFrame],
 ) -> DataFrame:
     """(qid, n_hits, recall) from two per-query top-k id sets — THE one
     recall@k output contract, shared by ``ann_recall_eval`` and
     ``pq_recall_eval`` so the null-hits convention and the exact double
     division by k can never drift between evals."""
-    from csvtool_spark.functions.caching import attach_stages
-
     hits = exact.join(approx, ["qid", id_col]).groupBy("qid").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
     qids = df.sparkSession.createDataFrame(
         [(int(q),) for q in sorted(queries)], "qid long"
     )
-    return attach_stages(
-        qids.join(hits, "qid", "left").select(
-            "qid",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-            (
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-                / F.lit(float(k))
-            ).alias("recall"),
-        ),
-        stages,
+    return qids.join(hits, "qid", "left").select(
+        "qid",
+        F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
+        (
+            F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
+            / F.lit(float(k))
+        ).alias("recall"),
     )
 
 
@@ -2008,7 +2004,8 @@ def pq_recall_eval(
     full |corpus|·|Q| matrix, so the eval is meant for a BOUNDED sampled
     query set. Two qid-partitioned windows rank both sides
     (WindowGroupLimit keeps k rows per query alive); the scored frame is
-    persisted because both windows read it (``attach_stages`` contract).
+    persisted because both windows read it (``caching.persist`` — an
+    enclosing ``persist_scope`` releases it).
 
     All-integer distances and one exact double division by the literal k
     — bit-stable cross-engine, full DuckDB twin (q_pq_recall)."""
@@ -2037,7 +2034,7 @@ def pq_recall_eval(
             F.element_at(F.col("q")["tbl"], s + 1),
             F.col("__pc")["pq"][s] + 1,
         ).cast("long")
-    scored = (
+    scored = caching.persist(
         base.select(F.col(id_col), F.col("__pc"), F.explode(F.array(*qlits)).alias("q"))
         .filter(F.col(id_col) != F.col("q")["qid"])
         .select(
@@ -2046,7 +2043,6 @@ def pq_recall_eval(
             _izdist2(F.col("__pc")["codes"], F.col("q")["qc"]).alias("exact_d2"),
             adc.alias("adc_d2"),
         )
-        .persist()
     )
     we = Window.partitionBy("qid").orderBy(
         F.col("exact_d2").asc(), F.col(id_col).asc()
@@ -2064,7 +2060,7 @@ def pq_recall_eval(
         .filter(F.col("rn") <= k)
         .select("qid", id_col)
     )
-    return _recall_output(df, id_col, exact, approx, queries, k, [scored])
+    return _recall_output(df, id_col, exact, approx, queries, k)
 
 
 def pq_recall_compare(
@@ -2086,8 +2082,8 @@ def pq_recall_compare(
     corpus), so the int8 code array is computed ONCE per row and each
     lane's m-lookup ADC plus the exact distance score during the same
     scan; the scored frame persists because every lane's window reads it
-    (``attach_stages`` contract — callers release after consuming the
-    bounded |Q|-row output). All-integer rankings with (distance, id)
+    (``caching.persist`` — an enclosing ``persist_scope`` releases it
+    after the bounded |Q|-row output is consumed). All-integer rankings with (distance, id)
     tie-breaks, one exact double division by k — bit-stable
     cross-engine, full DuckDB twin (q_pq_compare)."""
     from pyspark.sql import Window
@@ -2139,7 +2135,7 @@ def pq_recall_compare(
                 F.col(f"pq_{n}")[s] + 1,
             ).cast("long")
         lane_adc.append(adc.alias(f"adc_{n}"))
-    scored = (
+    scored = caching.persist(
         base.select(
             F.col(id_col),
             F.col("__codes"),
@@ -2153,7 +2149,6 @@ def pq_recall_compare(
             _izdist2(F.col("__codes"), F.col("q")["qc"]).alias("exact_d2"),
             *lane_adc,
         )
-        .persist()
     )
     we = Window.partitionBy("qid").orderBy(
         F.col("exact_d2").asc(), F.col(id_col).asc()
@@ -2174,16 +2169,14 @@ def pq_recall_compare(
             .select("qid", id_col)
         )
         lane = _recall_output(
-            df, id_col, exact, approx, queries, k, []
+            df, id_col, exact, approx, queries, k
         ).select(
             "qid",
             F.col("n_hits").alias(f"n_hits_{n}"),
             F.col("recall").alias(f"recall_{n}"),
         )
         out = lane if out is None else out.join(lane, "qid")
-    from csvtool_spark.functions.caching import attach_stages
-
-    return attach_stages(out.orderBy("qid"), [scored])
+    return out.orderBy("qid")
 
 
 # --- IVF × PQ composed index ----------------------------------------------
@@ -2408,7 +2401,7 @@ def ivf_pq_recall_eval(
             F.element_at(F.col("q")["tbl"], s + 1),
             F.col("__pq")[s] + 1,
         ).cast("long")
-    scored = (
+    scored = caching.persist(
         base.select(
             F.col(id_col), "__codes", "__cell", "__pq",
             F.explode(F.array(*qlits)).alias("q"),
@@ -2423,7 +2416,6 @@ def ivf_pq_recall_eval(
                 F.col("q")["probes"], F.col("__cell")
             ).alias("__cand"),
         )
-        .persist()
     )
     we = Window.partitionBy("qid").orderBy(
         F.col("exact_d2").asc(), F.col(id_col).asc()
@@ -2442,7 +2434,7 @@ def ivf_pq_recall_eval(
         .filter(F.col("rn") <= k)
         .select("qid", id_col)
     )
-    return _recall_output(df, id_col, exact, approx, queries, k, [scored])
+    return _recall_output(df, id_col, exact, approx, queries, k)
 
 
 def ivf_pq_nprobe_sweep(
@@ -2524,7 +2516,7 @@ def ivf_pq_nprobe_sweep(
             F.element_at(F.col("q")["tbl"], s + 1),
             F.col("__pq")[s] + 1,
         ).cast("long")
-    scored = (
+    scored = caching.persist(
         base.select(
             F.col(id_col), "__codes", "__cell", "__pq",
             F.explode(F.array(*qlits)).alias("q"),
@@ -2541,7 +2533,6 @@ def ivf_pq_nprobe_sweep(
                 F.col("q")["probes"], F.col("__cell")
             ).alias("__prank"),
         )
-        .persist()
     )
     we = Window.partitionBy("qid").orderBy(
         F.col("exact_d2").asc(), F.col(id_col).asc()
@@ -2564,13 +2555,11 @@ def ivf_pq_nprobe_sweep(
             .filter(F.col("rn") <= k)
             .select("qid", id_col)
         )
-        block = _recall_output(df, id_col, exact, approx, queries, k, []).select(
+        block = _recall_output(df, id_col, exact, approx, queries, k).select(
             F.lit(np_).cast("long").alias("nprobe"), "qid", "n_hits", "recall"
         )
         out = block if out is None else out.union(block)
-    from csvtool_spark.functions.caching import attach_stages
-
-    return attach_stages(out, [scored])
+    return out
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
@@ -2618,18 +2607,14 @@ def cross_embedding_neardup(
         return spark.createDataFrame(
             [], f"new_id {id_type}, ref_id {id_type}, cos double"
         )
-    from csvtool_spark.functions.caching import attach_stages
-
     planes = hyperplanes(dim, n_planes, seed)
-    stages: list[DataFrame] = []
 
     def capped(side: DataFrame) -> DataFrame:
         # the signed side is read twice (bucket-size agg + the bucket
         # join), so persist it once — without this each side pays its
         # O(dim·n_planes) SRP fold twice (the cross_corpus_neardup
-        # persist+attach_stages pattern; round-7 ADVICE)
-        side = side.persist()
-        stages.append(side)
+        # caching.persist pattern)
+        side = caching.persist(side)
         sizes = side.groupBy("__sig").agg(F.count(F.lit(1)).alias("__bn"))
         return side.join(
             sizes.filter(F.col("__bn") <= int(max_bucket)), "__sig"
@@ -2655,7 +2640,7 @@ def cross_embedding_neardup(
         )
     )
     den = F.col("__na") * F.col("__nb")
-    return attach_stages(
+    return (
         a.join(b, "__sig")
         .select(
             "new_id",
@@ -2666,6 +2651,5 @@ def cross_embedding_neardup(
                 6,
             ).alias("cos"),
         )
-        .filter(F.col("cos") >= threshold),
-        stages,
+        .filter(F.col("cos") >= threshold)
     )

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from csvtool_spark.functions import caching
+
 #: BPE-ish token pattern: word pieces, digit runs, or single punctuation.
 BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -55,21 +57,6 @@ def distinct_token_ratio(col: Column) -> Column:
     return F.when(n > 0, F.size(F.array_distinct(tokens(col))).cast("double") / n.cast("double"))
 
 
-def punct_ratio(col: Column) -> Column:
-    n = F.length(col)
-    punct = F.length(F.regexp_replace(col, r"[^.!?,;:]", ""))
-    return F.when(n > 0, punct.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def mean_token_len(col: Column) -> Column:
-    n = F.size(tokens(col))
-    # total chars minus separators, over token count
-    return F.when(
-        n > 0,
-        (F.length(col) - (n - 1)).cast("double") / n.cast("double"),
-    )
-
-
 def quality_score(col: Column) -> Column:
     """Composite quality heuristic in [0,1]: favors documents with a sane
     token count, word diversity and stopword presence — the standard cheap
@@ -82,19 +69,6 @@ def quality_score(col: Column) -> Column:
     )
     stop_ok = F.when(stop > 0.02, 1.0).otherwise(0.5)
     return F.round((length_ok * 0.4 + diversity * 0.4 + stop_ok * 0.2), 6)
-
-
-def _marker_filter(ws: list[str]):
-    # NB: a two-arg lambda would be treated as (element, index) by F.filter
-    return lambda t: t.isin(*ws)
-
-
-def lang_marker_counts(col: Column) -> dict[str, Column]:
-    low = F.lower(col)
-    return {
-        lang: F.size(F.filter(tokens(low), _marker_filter(ws))).cast("long")
-        for lang, ws in LANG_MARKERS.items()
-    }
 
 
 def _packed_marker_total(col: Column) -> Column:
@@ -954,11 +928,10 @@ def collocations(df, text_col: str, k: int = 50, min_count: int = 5):
     # persisted: the vocabulary aggregate feeds three consumers (two
     # joins + the total-count fold) — unpersisted, each re-explodes the
     # full token stream from the scan
-    uni = (
+    uni = caching.persist(
         df.select(F.explode(toks).alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()
     )
     n_tot = uni.agg(F.sum("c").cast("long").alias("__N"))
     scored = (
@@ -1101,17 +1074,15 @@ class KNModel:
     the persisted bigram-count stage once every scorer built from the
     model has been materialized."""
 
-    def __init__(self, cb, cx, cw, d_ppb: int, nb: int, stages=()):
+    def __init__(self, cb, cx, cw, d_ppb: int, nb: int):
         self.cb = cb          # (bg, c_bg)        bigram counts
         self.cx = cx          # (prev, c_prev, n1v) context totals + fanout
         self.cw = cw          # (nxt, n1w)         continuation counts
         self.d_ppb = d_ppb    # absolute discount D in parts-per-billion
         self.nb = nb          # total distinct bigrams (Pcont denominator)
-        self._stages = tuple(stages)
 
     def release(self) -> None:
-        for s in self._stages:
-            s.unpersist()
+        self.cb.unpersist()
 
 
 def kn_bigram_model(train, text_col: str, id_col: str = "doc_id") -> KNModel:
@@ -1143,11 +1114,10 @@ def kn_bigram_model(train, text_col: str, id_col: str = "doc_id") -> KNModel:
     bigram/context (the ppb products; same honest bound as
     ``lm_surprisal_bigram``'s) — shard the train corpus or lower the
     scale factor beyond that."""
-    cb = (
+    cb = caching.persist(
         _doc_bigram_tf(train, text_col, id_col)
         .groupBy("bg")
         .agg(F.sum("tf").cast("long").alias("c_bg"))
-        .persist()
     )
     consts = cb.agg(
         F.count(F.lit(1)).cast("long").alias("nb"),
@@ -1169,7 +1139,7 @@ def kn_bigram_model(train, text_col: str, id_col: str = "doc_id") -> KNModel:
     cw = cb.groupBy(F.split(F.col("bg"), " ")[1].alias("nxt")).agg(
         F.count(F.lit(1)).cast("long").alias("n1w")
     )
-    return KNModel(cb, cx, cw, d_ppb, nb, stages=(cb,))
+    return KNModel(cb, cx, cw, d_ppb, nb)
 
 
 def kn_score(df, model: KNModel, text_col: str, id_col: str = "doc_id"):
@@ -1190,12 +1160,10 @@ def kn_score(df, model: KNModel, text_col: str, id_col: str = "doc_id"):
     Scale shape: per-doc bigram counts first (same bound as the model
     pass), then three LEFT equi-joins against the Zipf-bounded model
     tables (AQE broadcasts them when they fit) and one per-doc aggregate.
-    No collect, no window, no all-pairs. The model's persisted stage is
-    attached to the result (``functions.caching`` contract) so a one-shot
-    caller can ``release_stages`` it; when scoring several corpora from
-    one model, call ``model.release()`` after the LAST scorer instead."""
-    from csvtool_spark.functions.caching import attach_stages
-
+    No collect, no window, no all-pairs. The model's bigram table is
+    persisted through ``functions.caching``: a model trained inside a
+    ``persist_scope`` is released when the scope exits; outside one,
+    call ``model.release()`` after the LAST scorer."""
     tf = _doc_bigram_tf(df, text_col, id_col)
     j = (
         tf.join(model.cb, "bg", "left")
@@ -1227,7 +1195,7 @@ def kn_score(df, model: KNModel, text_col: str, id_col: str = "doc_id"):
             ),
         )
     )
-    return attach_stages(out, list(model._stages))
+    return out
 
 
 def kn_oracle_sql(
@@ -1576,7 +1544,6 @@ def kn_perplexity_buckets(
     ``minhash_recall_eval`` tune-on-sample precedent) and pass them
     through this same labeling by unioning the sample's cutoffs — the
     rank rule itself is unchanged."""
-    from csvtool_spark.functions.caching import attach_stages, carried_stages
     from csvtool_spark.operators.stats import group_quantiles
 
     if len(qs) != 2 or not (0.0 < qs[0] < qs[1] <= 1.0):
@@ -1593,7 +1560,7 @@ def kn_perplexity_buckets(
     # the rank rule, so its documents must reach their own cutoffs too —
     # a plain equi-join would silently drop them (oracle twin uses
     # IS NOT DISTINCT FROM)
-    out = (
+    return (
         scored.join(
             F.broadcast(piv), F.col(group_col).eqNullSafe(F.col("__g"))
         )
@@ -1605,9 +1572,6 @@ def kn_perplexity_buckets(
         )
         .drop("__g", "__c_lo", "__c_hi")
     )
-    # composition drops the Python attribute, so re-attach the input's
-    # persisted stages (kn_score's bigram table) for release_stages
-    return attach_stages(out, carried_stages(scored))
 
 
 def kn_buckets_oracle_sql(
@@ -1686,10 +1650,10 @@ def boilerplate_stats(
     # array_to_string(NULL) emits a NULL shingle that never equi-joins —
     # with the coalesce both engines agree ('' shingle, countable).
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    base = df.select(
+    base = caching.persist(df.select(
         F.col(id_col),
         word_shingles(tokens(normalized(txt)), k).alias("__sh"),
-    ).persist()  # two consumers: per-doc totals + the exploded table
+    ))  # two consumers: per-doc totals + the exploded table
     ex = base.select(id_col, F.explode("__sh").alias("__s"))
     hot = (
         ex.groupBy("__s")

@@ -2331,22 +2331,17 @@ def q_kn_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = textstats.kn_bigram_model(
         d.filter(F.length("source") == 4), "text", "doc_id"
     )
-    from csvtool_spark.functions.caching import attach_stages, carried_stages
-
     scored = textstats.kn_score(
         d.filter(F.length("source") == 5), model, "text", "doc_id"
     )
     b = textstats.kn_perplexity_buckets(
         scored.join(d.select("doc_id", "source"), "doc_id"), "source"
     )
-    out = b.groupBy("source", "bucket").agg(
+    return b.groupBy("source", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.min("kn_surprisal_ppb").alias("min_ppb"),
         F.max("kn_surprisal_ppb").alias("max_ppb"),
     )
-    # the join/groupBy composition drops the attach_stages attribute, so
-    # re-attach the model's persisted bigram table for release_stages
-    return attach_stages(out, carried_stages(scored))
 
 
 # --- contrastive negative mining ------------------------------------------

@@ -226,14 +226,18 @@ def query_response(engine, text: str, runner=None, password: str | None = None,
                 numbered_sink_path(base, i, len(stmts))
                 for i in range(len(stmts))
             ]
-        from csvtool_spark.functions.caching import release_stages
+        from csvtool_spark.functions import caching
 
-        for stmt, out_path in zip(stmts, out_paths):
-            df = engine.sql(stmt)
-            numcols = len(df.columns)
-            show_limit = max(1, SHOW_CAP // max(1, numcols))
-            collect = lambda: df.limit(show_limit + 1).collect()  # noqa: E731,B023
-            try:
+        # one scope per request: every staging frame the statements persist
+        # (pipe neardup/decontaminate, BM25, linkage, inc(), pack, …) is
+        # freed when the request ends, on success or error — a long-running
+        # server must not leak cache per request
+        with caching.persist_scope():
+            for stmt, out_path in zip(stmts, out_paths):
+                df = engine.sql(stmt)
+                numcols = len(df.columns)
+                show_limit = max(1, SHOW_CAP // max(1, numcols))
+                collect = lambda: df.limit(show_limit + 1).collect()  # noqa: E731,B023
                 if out_path is not None:
                     # One computation feeds both the file and the display:
                     # persist the plan, write the full result FIRST (fills the
@@ -243,44 +247,34 @@ def query_response(engine, text: str, runner=None, password: str | None = None,
                     # of the saved file (the reference streams display and
                     # saver off the same scan, scanner.go). The write runs
                     # under the job wrapper so it's cancellable like collects.
-                    df = df.persist()
-                    try:
-                        # the SAME extension dispatch as engine.save_csv
-                        # (.tsv tab / .txt raw lines / .parquet/.orc
-                        # columnar) — a GUI save to out.tsv must not
-                        # produce a comma body (round-11 advice)
-                        write = lambda: write_single_result(df, out_path)  # noqa: E731,B023
-                        if runner is not None:
-                            runner(write)
-                        else:
-                            write()
-                        rows = runner(collect) if runner is not None else collect()
-                    finally:
-                        df.unpersist()
-                else:
-                    rows = runner(collect) if runner is not None else collect()
-            finally:
-                # free any persisted staging tables the plan attached
-                # (pipe neardup/decontaminate, BM25, linkage…) — a
-                # long-running server must not leak cache per request
-                release_stages(df)
-            clipped = len(rows) > show_limit
-            if clipped:
-                rows = rows[:show_limit]
-                ret["clipped"] = True
-            ret["entries"].append(
-                {
-                    "numrows": len(rows),
-                    "showLimit": show_limit,
-                    "numcols": numcols,
-                    "types": [_dialect_type(f.dataType) for f in df.schema.fields],
-                    "colnames": list(df.columns),
-                    "vals": [[_json_val(v) for v in r] for r in rows],
-                    "status": DAT_GOOD,
-                    "query": stmt.strip(),
-                    "clipped": clipped,
-                }
-            )
+                    df = caching.persist(df)
+                    # the SAME extension dispatch as engine.save_csv
+                    # (.tsv tab / .txt raw lines / .parquet/.orc
+                    # columnar) — a GUI save to out.tsv must not
+                    # produce a comma body
+                    write = lambda: write_single_result(df, out_path)  # noqa: E731,B023
+                    if runner is not None:
+                        runner(write)
+                    else:
+                        write()
+                rows = runner(collect) if runner is not None else collect()
+                clipped = len(rows) > show_limit
+                if clipped:
+                    rows = rows[:show_limit]
+                    ret["clipped"] = True
+                ret["entries"].append(
+                    {
+                        "numrows": len(rows),
+                        "showLimit": show_limit,
+                        "numcols": numcols,
+                        "types": [_dialect_type(f.dataType) for f in df.schema.fields],
+                        "colnames": list(df.columns),
+                        "vals": [[_json_val(v) for v in r] for r in rows],
+                        "status": DAT_GOOD,
+                        "query": stmt.strip(),
+                        "clipped": clipped,
+                    }
+                )
         ret["status"] |= DAT_GOOD
         ret["message"] = "Query successful. Returning data"
         if ret["clipped"]:
@@ -336,18 +330,16 @@ def explain_response(engine, text: str, password: str | None = None) -> dict:
         finally:
             set_thread_password_provider(None)
     try:
-        from csvtool_spark.functions.caching import release_stages
+        from csvtool_spark.functions.caching import persist_scope
 
         jvm = engine.spark._jvm
-        for stmt in (s for s in text.split(";") if s.strip()):
-            df = engine.sql(stmt)
-            try:
+        with persist_scope():
+            for stmt in (s for s in text.split(";") if s.strip()):
+                df = engine.sql(stmt)
                 plan = jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"
                 )
-            finally:
-                release_stages(df)
-            ret["plans"].append({"query": stmt.strip(), "plan": plan})
+                ret["plans"].append({"query": stmt.strip(), "plan": plan})
         ret["status"] |= DAT_GOOD
         ret["message"] = "Explain successful"
     except PasswordRequired as e:

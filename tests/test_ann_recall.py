@@ -43,13 +43,13 @@ def test_recall_is_one_when_probe_covers_every_bucket(spark):
 
 
 def test_recall_release_contract(spark):
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
 
     e = _emb(spark)
-    out = ann_recall_eval(e, "embedding", "vec_id", _queries(e, 2), k=5)
-    out.collect()
-    assert release_stages(out) == 1  # the persisted scored stage
-    assert release_stages(out) == 0  # idempotent
+    with persist_scope() as staged:
+        ann_recall_eval(e, "embedding", "vec_id", _queries(e, 2), k=5).collect()
+    assert len(staged) == 1  # the persisted scored stage
+    assert all(not s.storageLevel.useMemory for s in staged)
 
 
 def test_recall_kernel_differential(spark):

@@ -21,7 +21,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from csvtool_spark.functions.caching import release_stages
+from csvtool_spark.functions.caching import persist_scope
 from csvtool_spark.operators.dedup import (
     MAX_BUCKET,
     _banded,
@@ -71,9 +71,8 @@ def test_over_cap_bucket_contributes_zero_pairs(spark):
         # the attack worked: every band has a 10k-member hot bucket
         hot = [k for k, n in sizes.items() if n == N_HOT]
         assert len(hot) == BANDS
-        pairs = candidate_pairs(banded, "doc_id")
-        got = pairs.collect()
-        release_stages(pairs)
+        with persist_scope():
+            got = candidate_pairs(banded, "doc_id").collect()
         # (a) exact bound: only 2..MAX_BUCKET buckets expand
         bound = sum(
             n * (n - 1) // 2 for n in sizes.values() if 2 <= n <= MAX_BUCKET
@@ -96,12 +95,11 @@ def test_within_cap_hot_bucket_expands_bounded_and_verifies(spark):
     verifies at Jaccard 1.0."""
     n_hot = 300
     df = _corpus(spark, n_hot)
-    pairs = near_dup_pairs_minhash(
-        df, "text", "doc_id", threshold=0.9, n_hashes=BANDS * ROWS,
-        bands=BANDS,
-    )
-    got = pairs.collect()
-    release_stages(pairs)
+    with persist_scope():
+        got = near_dup_pairs_minhash(
+            df, "text", "doc_id", threshold=0.9, n_hashes=BANDS * ROWS,
+            bands=BANDS,
+        ).collect()
     hot_pairs = [r for r in got if r["id_a"] < n_hot and r["id_b"] < n_hot]
     assert len(hot_pairs) == n_hot * (n_hot - 1) // 2
     assert all(r["jaccard"] == 1.0 for r in hot_pairs)
@@ -129,16 +127,16 @@ def test_neardup_stage_composes_after_exact_on_skew(spark):
     from csvtool_spark.dialect.stages import apply_stages
 
     df = _corpus(spark, N_HOT)
-    out = apply_stages(
-        df,
-        parse_pipeline(
-            "dedup(text, id=doc_id) "
-            "|> neardup(text, id=doc_id, threshold=0.5, transitive=1, "
-            f"n_hashes={BANDS * ROWS}, bands={BANDS})"
-        ),
-    )
-    kept = sorted(r["doc_id"] for r in out.collect())
-    release_stages(out)
+    with persist_scope():
+        out = apply_stages(
+            df,
+            parse_pipeline(
+                "dedup(text, id=doc_id) "
+                "|> neardup(text, id=doc_id, threshold=0.5, transitive=1, "
+                f"n_hashes={BANDS * ROWS}, bands={BANDS})"
+            ),
+        )
+        kept = sorted(r["doc_id"] for r in out.collect())
     assert kept == [0, N_HOT, N_HOT + 2, N_HOT + 3, N_HOT + 4]
 
 
@@ -157,12 +155,11 @@ def test_cross_corpus_over_cap_side_prunes(spark):
     ref_rows = [(0, BOILER), (1, BOILER),
                 (2, "alpha beta gamma delta epsilon zeta eta theta iota kappa")]
     ref = spark.createDataFrame(ref_rows, "doc_id long, text string")
-    pairs = cross_corpus_neardup(
-        new, ref, "text", "doc_id", threshold=0.9,
-        n_hashes=BANDS * ROWS, bands=BANDS,
-    )
-    got = pairs.collect()
-    release_stages(pairs)
+    with persist_scope():
+        got = cross_corpus_neardup(
+            new, ref, "text", "doc_id", threshold=0.9,
+            n_hashes=BANDS * ROWS, bands=BANDS,
+        ).collect()
     # no pair touches the over-cap boilerplate block on the new side
     assert all(r["new_id"] >= n_hot for r in got)
     # the distinct near-dup still decontaminates (new id n_hot == ref 2)
@@ -181,12 +178,12 @@ def test_cross_corpus_in_cap_fanout_is_exact(spark):
     ref = spark.createDataFrame(
         [(0, BOILER), (1, BOILER)], "doc_id long, text string"
     )
-    pairs = cross_corpus_neardup(
-        new, ref, "text", "doc_id", threshold=0.9,
-        n_hashes=BANDS * ROWS, bands=BANDS,
-    )
-    got = [r for r in pairs.collect() if r["new_id"] < n_hot]
-    release_stages(pairs)
+    with persist_scope():
+        pairs = cross_corpus_neardup(
+            new, ref, "text", "doc_id", threshold=0.9,
+            n_hashes=BANDS * ROWS, bands=BANDS,
+        )
+        got = [r for r in pairs.collect() if r["new_id"] < n_hot]
     assert len(got) == n_hot * 2
     assert all(r["jaccard"] == 1.0 for r in got)
 

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from csvtool_spark.dialect.errors import ParseError, SemanticError
 from csvtool_spark.dialect.parser import parse
 from csvtool_spark.engine import CsvEngine
-from csvtool_spark.functions.caching import release_stages
+from csvtool_spark.functions.caching import persist_scope
 
 SF = "/root/testdata/sf0.001"
 
@@ -86,22 +86,24 @@ def test_dedup_stage_matches_exact_dedup(eng, docs):
 
 
 def test_neardup_stage_matches_pairs(eng, docs):
-    out = eng.sql(
-        "select doc_id, text from documents "
-        "|> neardup(text, id=doc_id, threshold=0.4)"
-    )
     from csvtool_spark.operators.dedup import near_dup_pairs_minhash
 
-    pairs = near_dup_pairs_minhash(
-        docs, "text", "doc_id", threshold=0.4, n_hashes=32, bands=8,
-        hash_family="md5",
-    )
-    losers = {r["id_b"] for r in pairs.collect()}
-    release_stages(pairs)
+    with persist_scope():
+        pairs = near_dup_pairs_minhash(
+            docs, "text", "doc_id", threshold=0.4, n_hashes=32, bands=8,
+            hash_family="md5",
+        )
+        losers = {r["id_b"] for r in pairs.collect()}
     all_ids = {r["doc_id"] for r in docs.select("doc_id").collect()}
-    got = {r["doc_id"] for r in out.collect()}
+    with persist_scope() as staged:
+        out = eng.sql(
+            "select doc_id, text from documents "
+            "|> neardup(text, id=doc_id, threshold=0.4)"
+        )
+        got = {r["doc_id"] for r in out.collect()}
     assert got == all_ids - losers
-    assert release_stages(out) >= 1  # banded/token stages ride the result
+    assert len(staged) == 2  # the banded and token stages
+    assert all(not s.storageLevel.useMemory for s in staged)
 
 
 def test_column_stages_match_operators(eng, docs):
@@ -698,34 +700,33 @@ def test_second_review_fixes_round8(eng, spark):
 
 
 def test_neardup_transitive_keeps_one_per_cluster(eng, docs):
-    from csvtool_spark.functions.caching import release_stages
     from csvtool_spark.operators.components import dedup_clusters
     from csvtool_spark.operators.dedup import near_dup_pairs_minhash
 
-    out = eng.sql(
-        "select doc_id, text from documents "
-        "|> neardup(text, id=doc_id, threshold=0.4, transitive=1)"
-    )
-    pairs = near_dup_pairs_minhash(
-        docs, "text", "doc_id", threshold=0.4, n_hashes=32, bands=8,
-        hash_family="md5",
-    )
-    expect = {
-        r["doc_id"]
-        for r in dedup_clusters(docs.select("doc_id"), pairs, "doc_id")
-        .filter("is_survivor").collect()
-    }
-    release_stages(pairs)
-    got = {r["doc_id"] for r in out.collect()}
+    with persist_scope():
+        pairs = near_dup_pairs_minhash(
+            docs, "text", "doc_id", threshold=0.4, n_hashes=32, bands=8,
+            hash_family="md5",
+        )
+        expect = {
+            r["doc_id"]
+            for r in dedup_clusters(docs.select("doc_id"), pairs, "doc_id")
+            .filter("is_survivor").collect()
+        }
+    with persist_scope():
+        out = eng.sql(
+            "select doc_id, text from documents "
+            "|> neardup(text, id=doc_id, threshold=0.4, transitive=1)"
+        )
+        got = {r["doc_id"] for r in out.collect()}
     assert got == expect
-    release_stages(out)
     # transitive removes at least as many rows as greedy
-    greedy = eng.sql(
-        "select doc_id, text from documents "
-        "|> neardup(text, id=doc_id, threshold=0.4)"
-    )
-    greedy_ids = {r["doc_id"] for r in greedy.collect()}
-    release_stages(greedy)
+    with persist_scope():
+        greedy = eng.sql(
+            "select doc_id, text from documents "
+            "|> neardup(text, id=doc_id, threshold=0.4)"
+        )
+        greedy_ids = {r["doc_id"] for r in greedy.collect()}
     assert got <= greedy_ids
 
 
@@ -736,29 +737,29 @@ def test_neardup_transitive_by_keeps_best_member(eng, docs):
     from csvtool_spark.operators.components import canonical_select
     from csvtool_spark.operators.dedup import near_dup_pairs_minhash
 
-    out = eng.sql(
-        "select doc_id, n_chars, text from documents "
-        "|> neardup(text, id=doc_id, threshold=0.4, transitive=1, by=n_chars)"
-    )
-    pairs = near_dup_pairs_minhash(
-        docs, "text", "doc_id", threshold=0.4, n_hashes=32, bands=8,
-        hash_family="md5",
-    )
-    expect = {
-        r["doc_id"]
-        for r in canonical_select(docs, pairs, "doc_id", "n_chars")
-        .filter("is_kept").collect()
-    }
-    release_stages(pairs)
-    got = {r["doc_id"] for r in out.collect()}
-    release_stages(out)
+    with persist_scope():
+        pairs = near_dup_pairs_minhash(
+            docs, "text", "doc_id", threshold=0.4, n_hashes=32, bands=8,
+            hash_family="md5",
+        )
+        expect = {
+            r["doc_id"]
+            for r in canonical_select(docs, pairs, "doc_id", "n_chars")
+            .filter("is_kept").collect()
+        }
+    with persist_scope():
+        out = eng.sql(
+            "select doc_id, n_chars, text from documents "
+            "|> neardup(text, id=doc_id, threshold=0.4, transitive=1, by=n_chars)"
+        )
+        got = {r["doc_id"] for r in out.collect()}
     assert got == expect
-    minid = eng.sql(
-        "select doc_id, text from documents "
-        "|> neardup(text, id=doc_id, threshold=0.4, transitive=1)"
-    )
-    minid_ids = {r["doc_id"] for r in minid.collect()}
-    release_stages(minid)
+    with persist_scope():
+        minid = eng.sql(
+            "select doc_id, text from documents "
+            "|> neardup(text, id=doc_id, threshold=0.4, transitive=1)"
+        )
+        minid_ids = {r["doc_id"] for r in minid.collect()}
     assert len(got) == len(minid_ids)
 
 
@@ -866,11 +867,11 @@ def test_neardup_transitive_rejects_string_id(docs):
         apply_stages(
             sdocs, parse_pipeline("neardup(text, id=sid, transitive=1)")
         )
-    out = apply_stages(
-        sdocs.limit(20), parse_pipeline("neardup(text, id=sid)")
-    )
-    assert out.count() >= 1  # greedy pair removal still works on strings
-    release_stages(out)
+    with persist_scope():
+        out = apply_stages(
+            sdocs.limit(20), parse_pipeline("neardup(text, id=sid)")
+        )
+        assert out.count() >= 1  # greedy pair removal still works on strings
 
 
 def test_salted_coins_keep_split_fractions(eng, docs):

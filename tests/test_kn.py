@@ -96,14 +96,14 @@ def test_kn_degenerate_discount_and_empty_train(spark):
 
 
 def test_kn_release_contract(spark):
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
 
     train = _docs(spark, [("a b c a b", "tr")])
-    m = kn_bigram_model(train, "text", "doc_id")
-    out = kn_score(_docs(spark, [("a b", "sc")]), m, "text", "doc_id")
-    out.collect()
-    assert release_stages(out) == 1
-    assert release_stages(out) == 0  # idempotent
+    with persist_scope() as staged:
+        m = kn_bigram_model(train, "text", "doc_id")
+        kn_score(_docs(spark, [("a b", "sc")]), m, "text", "doc_id").collect()
+    assert len(staged) == 1  # the model's bigram stage
+    assert all(not s.storageLevel.useMemory for s in staged)
 
 
 @pytest.mark.parametrize("seed", range(3))
@@ -355,22 +355,19 @@ def test_kn_buckets_keep_null_group(spark):
 
 
 def test_kn_buckets_release_contract(spark):
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
     from csvtool_spark.operators.textstats import kn_perplexity_buckets
 
     d = _docs(spark, [("a b c a b", "tr"), ("b c a b", "sc"),
                       ("c a b c", "sc"), ("a c b a", "sc")])
-    m = kn_bigram_model(d.filter(F.col("source") == "tr"), "text", "doc_id")
-    scored = kn_score(
-        d.filter(F.col("source") == "sc"), m, "text", "doc_id"
-    ).join(d.select("doc_id", "source"), "doc_id")
-    # the join dropped the attribute; re-attach like q_kn_buckets does
-    from csvtool_spark.functions.caching import attach_stages
-
-    scored = attach_stages(scored, list(m._stages))
-    out = kn_perplexity_buckets(scored, "source")
-    out.collect()
-    assert release_stages(out) == 1  # the model's bigram stage propagated
+    with persist_scope() as staged:
+        m = kn_bigram_model(d.filter(F.col("source") == "tr"), "text", "doc_id")
+        scored = kn_score(
+            d.filter(F.col("source") == "sc"), m, "text", "doc_id"
+        ).join(d.select("doc_id", "source"), "doc_id")
+        kn_perplexity_buckets(scored, "source").collect()
+    assert len(staged) == 1  # the model's bigram stage, through the join
+    assert all(not s.storageLevel.useMemory for s in staged)
 
 
 def test_kn_score_map_single_fold_plan(spark):

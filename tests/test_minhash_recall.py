@@ -71,16 +71,16 @@ def test_recall_rejects_bad_banding(spark):
 
 
 def test_recall_release_contract_frees_all_stages(spark):
-    """release_stages must free EVERY persisted stage the plan reads —
+    """persist_scope must free EVERY persisted stage the plan reads —
     the sampled projection plus the child operators' shingle and banded
     stages (leaking them per tuning-loop call was a review finding)."""
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
 
     d = _docs(spark)
-    out = minhash_recall_eval(d, "text", "doc_id", sample_frac=0.3)
-    out.collect()
-    assert release_stages(out) == 3  # sample + ngram shingles + banded
-    assert release_stages(out) == 0  # idempotent
+    with persist_scope() as staged:
+        minhash_recall_eval(d, "text", "doc_id", sample_frac=0.3).collect()
+    assert len(staged) == 3  # sample + ngram shingles + banded
+    assert all(not s.storageLevel.useMemory for s in staged)
 
 
 def test_recall_tolerates_null_text(spark):

@@ -76,18 +76,18 @@ def test_quality_null_parity(corpus, con):
 
 
 def test_minhash_pairs_null_parity(corpus, con):
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
     from csvtool_spark.operators.dedup import (
         minhash_pairs_cte_sql,
         near_dup_pairs_minhash,
     )
 
-    pairs = near_dup_pairs_minhash(
-        corpus, "text", "doc_id", threshold=0.4, n_hashes=32, bands=8,
-        hash_family="md5",
-    )
-    got = _rows(pairs, ["id_a", "id_b", "jaccard"])
-    release_stages(pairs)
+    with persist_scope():
+        pairs = near_dup_pairs_minhash(
+            corpus, "text", "doc_id", threshold=0.4, n_hashes=32, bands=8,
+            hash_family="md5",
+        )
+        got = _rows(pairs, ["id_a", "id_b", "jaccard"])
     want = _sql(
         con,
         "WITH " + minhash_pairs_cte_sql("documents", threshold=0.4)

@@ -792,11 +792,12 @@ def test_group_quantiles_rejects_non_numeric(spark):
         winsorize(d, "v", ["g"])
 
 
-def test_fuzzy_linkage_release_stages_unpersists(spark):
-    """fuzzy_string_pairs attaches its persisted gram tables to the
-    result; release_stages drops them all (round-4 ADVICE — a long-lived
-    session must not accumulate corpus-sized cached blocks)."""
-    from csvtool_spark.functions.caching import release_stages
+def test_fuzzy_linkage_scope_unpersists(spark):
+    """fuzzy_string_pairs persists its gram tables through
+    functions.caching; the enclosing persist_scope drops them all (a
+    long-lived session must not accumulate corpus-sized cached
+    blocks)."""
+    from csvtool_spark.functions.caching import persist_scope
     from csvtool_spark.operators.linkage import fuzzy_string_pairs
 
     a = spark.createDataFrame(
@@ -805,20 +806,18 @@ def test_fuzzy_linkage_release_stages_unpersists(spark):
     b = spark.createDataFrame(
         [(10, "acme corp."), (20, "yak inc")], "id long, name string"
     )
-    out = fuzzy_string_pairs(a, b, "name", "name", "id", "id", threshold=0.3)
-    pairs = {(r["a_id"], r["b_id"]) for r in out.collect()}
+    with persist_scope() as staged:
+        out = fuzzy_string_pairs(a, b, "name", "name", "id", "id", threshold=0.3)
+        pairs = {(r["a_id"], r["b_id"]) for r in out.collect()}
+        assert all(s.storageLevel.useMemory for s in staged)
     assert (1, 10) in pairs
-    stages = list(getattr(out, "_persisted_stages"))
-    assert len(stages) == 4  # raw + pruned per side
-    assert all(s.storageLevel.useMemory for s in stages)
-    assert release_stages(out) == 4
-    assert all(not s.storageLevel.useMemory for s in stages)
-    assert release_stages(out) == 0  # idempotent
+    assert len(staged) == 4  # raw + pruned per side
+    assert all(not s.storageLevel.useMemory for s in staged)
 
 
 def test_bm25_and_cross_dedup_attach_release_handles(spark):
-    """The other two flagged persist sites carry the same release handle."""
-    from csvtool_spark.functions.caching import release_stages
+    """The other two flagged persist sites register with the same scope."""
+    from csvtool_spark.functions.caching import persist_scope
     from csvtool_spark.operators import dedup
     from csvtool_spark.operators.retrieval import bm25_scores
 
@@ -826,15 +825,18 @@ def test_bm25_and_cross_dedup_attach_release_handles(spark):
         [(1, "red fox jumps"), (2, "red red wall"), (3, "blue sky")],
         "doc_id long, text string",
     )
-    ranked = bm25_scores(docs, "text", "doc_id", ["red", "fox"])
-    assert ranked.count() >= 1
-    assert release_stages(ranked) == 1
+    with persist_scope() as staged:
+        ranked = bm25_scores(docs, "text", "doc_id", ["red", "fox"])
+        assert ranked.count() >= 1
+    assert len(staged) == 1
+    assert all(not s.storageLevel.useMemory for s in staged)
 
     new = docs.filter("doc_id <= 2")
     ref = docs.filter("doc_id > 2")
-    pairs = dedup.cross_corpus_neardup(
-        new, ref, "text", "doc_id", threshold=0.3, n_hashes=16, bands=4,
-        hash_family="md5",
-    )
-    pairs.count()
-    assert release_stages(pairs) == 2
+    with persist_scope() as staged:
+        dedup.cross_corpus_neardup(
+            new, ref, "text", "doc_id", threshold=0.3, n_hashes=16, bands=4,
+            hash_family="md5",
+        ).count()
+    assert len(staged) == 2
+    assert all(not s.storageLevel.useMemory for s in staged)

@@ -15,6 +15,7 @@ import pytest
 from csvtool_spark.dialect.stage_oracles import STAGE_TWINS, chain_oracle_sql
 from csvtool_spark.dialect_queries import _SMP_COIN
 from csvtool_spark.engine import CsvEngine
+from csvtool_spark.functions.caching import persist_scope
 from csvtool_spark.oracle import compare
 
 SF = "/root/testdata/sf0.001"
@@ -631,23 +632,19 @@ def test_temperature_mixture_over_file_bases(engine, duck, seed):
     DuckDB twin."""
     rng = random.Random(2400 + seed)
     base_text, base_sql, cols, stage_text, chain = _gen_temp_chain(rng)
-    try:
-        sdf = engine.sql(f"{base_text} |> {stage_text}")
-    except ValueError as e:
-        if "no positive token mass" in str(e):
-            pytest.skip(f"zero-mass source under temperature mixture: {e}")
-        raise
     sql, _ = chain_oracle_sql(base_sql, cols, chain)
-    # every temperature chain attaches a persisted rate-counts frame —
-    # free it even when compare raises, so 30 seeds against the
-    # module-scoped session don't accumulate cached blocks (round-12
-    # review; same discipline as test_random_pipe_chain_matches_oracle)
-    from csvtool_spark.functions.caching import release_stages
-
-    try:
+    # every temperature chain persists a rate-counts frame — the scope
+    # frees it even when the build or compare raises, so 30 seeds against
+    # the module-scoped session don't accumulate cached blocks (same
+    # discipline as test_random_pipe_chain_matches_oracle)
+    with persist_scope():
+        try:
+            sdf = engine.sql(f"{base_text} |> {stage_text}")
+        except ValueError as e:
+            if "no positive token mass" in str(e):
+                pytest.skip(f"zero-mass source under temperature mixture: {e}")
+            raise
         err = compare(sdf, duck, sql)
-    finally:
-        release_stages(sdf)
     assert err is None, f"base `{base_text}` chain `{stage_text}`: {err}"
 
 
@@ -656,27 +653,24 @@ def test_random_pipe_chain_matches_oracle(engine, duck, seed):
     rng = random.Random(1000 + seed)
     base_text, base_sql, base_cols, base_tokens = rng.choice(BASES)
     stage_text, chain = _gen_chain(rng, base_cols, base_tokens)
-    try:
-        sdf = engine.sql(f"{base_text} |> {stage_text}")
-    except ValueError as e:
-        # documented engine/twin divergence (round-12 ADVICE): upstream
-        # stages can empty one source's token mass, and the engine's
-        # temperature mixture REFUSES (n_min=0 would clamp every rate to
-        # 1 ppm) while the SQL twin can only clamp — an expected skip,
-        # but only for that exact error under a drawn temperature stage
-        if "no positive token mass" in str(e) and any(
-            n == "mixture" and "temperature" in p for n, p in chain
-        ):
-            pytest.skip(f"zero-mass source under temperature mixture: {e}")
-        raise
     sql, _ = chain_oracle_sql(base_sql, base_cols, chain)
-    # a drawn neardup attaches persisted MinHash staging frames — free
-    # them even when compare RAISES, so a failing seed doesn't leave the
-    # remaining seeds under accumulated cached blocks
-    from csvtool_spark.functions.caching import release_stages
-
-    try:
+    # a drawn neardup persists MinHash staging frames — the scope frees
+    # them even when the build or compare RAISES, so a failing seed
+    # doesn't leave the remaining seeds under accumulated cached blocks
+    with persist_scope():
+        try:
+            sdf = engine.sql(f"{base_text} |> {stage_text}")
+        except ValueError as e:
+            # documented engine/twin divergence: upstream
+            # stages can empty one source's token mass, and the engine's
+            # temperature mixture REFUSES (n_min=0 would clamp every rate
+            # to 1 ppm) while the SQL twin can only clamp — an expected
+            # skip, but only for that exact error under a drawn
+            # temperature stage
+            if "no positive token mass" in str(e) and any(
+                n == "mixture" and "temperature" in p for n, p in chain
+            ):
+                pytest.skip(f"zero-mass source under temperature mixture: {e}")
+            raise
         err = compare(sdf, duck, sql)
-    finally:
-        release_stages(sdf)
     assert err is None, f"base `{base_text}` chain `{stage_text}`: {err}"

@@ -93,7 +93,7 @@ def test_readme_curation_recipe(spark):
     stage is deterministic md5 machinery, so the sf0.001 row counts are
     exact pins (the README documents the sf0.1 run of the same text)."""
     from csvtool_spark.engine import CsvEngine
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
 
     eng = CsvEngine(spark)
     eng.register_dir(SF_SMALL, ["documents"])
@@ -103,22 +103,22 @@ def test_readme_curation_recipe(spark):
         .select("doc_id", "text")
     )
     eng.register("bench", bench)
-    out = eng.sql(
-        "select doc_id, source, text from documents "
-        "where source != 'src0' "
-        "|> normalize(text) "
-        "|> clean(text, terminal=0) "
-        "|> langid(text, keep=en) "
-        "|> quality(text, min=0.7) "
-        "|> neardup(text, id=doc_id, threshold=0.4, transitive=1) "
-        "|> decontaminate(text, id=doc_id, ref=bench, k=4) "
-        "|> quota(source, cap=75, order=doc_id) "
-        "|> tokens(text) "
-        "|> pack(n_tokens, id=doc_id, budget=512) "
-        "|> shard(n=64, key=doc_id)"
-    )
-    rows = out.collect()
-    release_stages(out)
+    with persist_scope():
+        out = eng.sql(
+            "select doc_id, source, text from documents "
+            "where source != 'src0' "
+            "|> normalize(text) "
+            "|> clean(text, terminal=0) "
+            "|> langid(text, keep=en) "
+            "|> quality(text, min=0.7) "
+            "|> neardup(text, id=doc_id, threshold=0.4, transitive=1) "
+            "|> decontaminate(text, id=doc_id, ref=bench, k=4) "
+            "|> quota(source, cap=75, order=doc_id) "
+            "|> tokens(text) "
+            "|> pack(n_tokens, id=doc_id, budget=512) "
+            "|> shard(n=64, key=doc_id)"
+        )
+        rows = out.collect()
     assert out.columns == [
         "doc_id", "source", "text", "lang_guess", "quality",
         "n_tokens", "seq_id", "seq_offset", "n_tok", "shard",

@@ -284,16 +284,16 @@ def test_pq_recall_eval_perfect_reconstruction(spark):
 
 
 def test_pq_recall_eval_release_contract(spark):
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
     from csvtool_spark.operators.similarity import pq_recall_eval
 
     vecs = _rand_corpus(71, 15, 8)
     d = _vecs(spark, vecs)
-    out = pq_recall_eval(d, "embedding", "vec_id", {0: vecs[0]},
-                         k=3, m=2, n_cents=4)
-    out.collect()
-    assert release_stages(out) == 1
-    assert release_stages(out) == 0
+    with persist_scope() as staged:
+        pq_recall_eval(d, "embedding", "vec_id", {0: vecs[0]},
+                       k=3, m=2, n_cents=4).collect()
+    assert len(staged) == 1
+    assert all(not s.storageLevel.useMemory for s in staged)
 
 
 @pytest.mark.parametrize("seed", range(2))
@@ -583,7 +583,7 @@ def test_ivf_pq_nprobe_sweep_matches_one_shot(spark):
     row-identical to ivf_pq_recall_eval run separately at each nprobe,
     and pin to recall 1.0 when every cell is probed and the codebook is
     the corpus itself (both loss terms vanish)."""
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
     from csvtool_spark.operators.similarity import (
         ivf_pq_nprobe_sweep,
         ivf_pq_recall_eval,
@@ -593,23 +593,22 @@ def test_ivf_pq_nprobe_sweep_matches_one_shot(spark):
     df = _vecs(spark, corpus)
     queries = {i: corpus[i] for i in (0, 7, 23)}
     nps = [1, 2, 4, 8]
-    sweep = ivf_pq_nprobe_sweep(
-        df, "embedding", "vec_id", queries, nprobes=nps, k=5,
-        n_cells=8, m=4, n_cents=48,
-    )
-    got = {
-        (r["nprobe"], r["qid"]): (r["n_hits"], r["recall"])
-        for r in sweep.collect()
-    }
-    release_stages(sweep)
+    with persist_scope():
+        sweep = ivf_pq_nprobe_sweep(
+            df, "embedding", "vec_id", queries, nprobes=nps, k=5,
+            n_cells=8, m=4, n_cents=48,
+        )
+        got = {
+            (r["nprobe"], r["qid"]): (r["n_hits"], r["recall"])
+            for r in sweep.collect()
+        }
     assert len(got) == len(nps) * len(queries)
     for np_ in nps:
-        one = ivf_pq_recall_eval(
-            df, "embedding", "vec_id", queries, k=5,
-            n_cells=8, nprobe=np_, m=4, n_cents=48,
-        )
-        rows = one.collect()
-        release_stages(one)
+        with persist_scope():
+            rows = ivf_pq_recall_eval(
+                df, "embedding", "vec_id", queries, k=5,
+                n_cells=8, nprobe=np_, m=4, n_cents=48,
+            ).collect()
         for r in rows:
             assert got[(np_, r["qid"])] == (r["n_hits"], r["recall"]), (
                 f"nprobe={np_} qid={r['qid']} diverged from one-shot eval"

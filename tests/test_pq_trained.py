@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from csvtool_spark.functions.caching import release_stages
+from csvtool_spark.functions.caching import persist_scope
 from csvtool_spark.operators.similarity import (
     PQCodebook,
     _izdist2,
@@ -68,12 +68,13 @@ def test_trained_mean_recall_ge_sampled(emb):
     trained = pq_train_kmeans(
         emb, "embedding", "vec_id", m=8, n_cents=16, iters=2
     )
-    out = pq_recall_compare(
-        emb, "embedding", "vec_id", _queries(emb, 16), 10,
-        {"sampled": sampled, "trained": trained},
-    )
-    rows = out.collect()
-    assert release_stages(out) == 1
+    with persist_scope() as staged:
+        rows = pq_recall_compare(
+            emb, "embedding", "vec_id", _queries(emb, 16), 10,
+            {"sampled": sampled, "trained": trained},
+        ).collect()
+    assert len(staged) == 1
+    assert all(not s.storageLevel.useMemory for s in staged)
     n = len(rows)
     assert n == 16
     mean_s = sum(r["recall_sampled"] for r in rows) / n
@@ -148,16 +149,18 @@ def test_ivf_pq_recall_subsumes_pq_recall(emb):
 
     qs = _queries(emb, 4)
     cb = pq_train(emb, "embedding", "vec_id", m=8, n_cents=16)
-    full = ivf_pq_recall_eval(
-        emb, "embedding", "vec_id", qs, k=10,
-        n_cells=8, nprobe=8, codebook=cb,
-    )
-    plain = pq_recall_eval(
-        emb, "embedding", "vec_id", qs, k=10, codebook=cb
-    )
-    a = [tuple(r) for r in full.orderBy("qid").collect()]
-    b = [tuple(r) for r in plain.orderBy("qid").collect()]
-    assert release_stages(full) == 1 and release_stages(plain) == 1
+    with persist_scope() as staged:
+        full = ivf_pq_recall_eval(
+            emb, "embedding", "vec_id", qs, k=10,
+            n_cells=8, nprobe=8, codebook=cb,
+        )
+        plain = pq_recall_eval(
+            emb, "embedding", "vec_id", qs, k=10, codebook=cb
+        )
+        a = [tuple(r) for r in full.orderBy("qid").collect()]
+        b = [tuple(r) for r in plain.orderBy("qid").collect()]
+    assert len(staged) == 2  # one scored stage each
+    assert all(not s.storageLevel.useMemory for s in staged)
     assert a == b
 
 
@@ -175,12 +178,13 @@ def test_ivf_pq_recall_no_loss_regime(spark):
     ]
     d = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     qs = {i: rows[i][1] for i in range(3)}
-    out = ivf_pq_recall_eval(
-        d, "embedding", "vec_id", qs, k=5,
-        n_cells=4, nprobe=4, m=4, n_cents=30,
-    )
-    got = out.collect()
-    assert release_stages(out) == 1
+    with persist_scope() as staged:
+        got = ivf_pq_recall_eval(
+            d, "embedding", "vec_id", qs, k=5,
+            n_cells=4, nprobe=4, m=4, n_cents=30,
+        ).collect()
+    assert len(staged) == 1
+    assert all(not s.storageLevel.useMemory for s in staged)
     assert all(r["recall"] == 1.0 for r in got)
 
 
@@ -212,12 +216,13 @@ def test_trained_stack_grid_report(emb):
     grid = {}
     for ci, cv in cents.items():
         for bi, bv in cbs.items():
-            out = ivf_pq_recall_eval(
-                emb, "embedding", "vec_id", qs, k=10,
-                n_cells=8, nprobe=2, centroids=cv, codebook=bv,
-            )
-            rows = out.collect()
-            assert release_stages(out) == 1
+            with persist_scope() as staged:
+                rows = ivf_pq_recall_eval(
+                    emb, "embedding", "vec_id", qs, k=10,
+                    n_cells=8, nprobe=2, centroids=cv, codebook=bv,
+                ).collect()
+            assert len(staged) == 1
+            assert all(not s.storageLevel.useMemory for s in staged)
             assert len(rows) == 8
             grid[ci + bi] = sum(r["recall"] for r in rows) / len(rows)
     assert all(0.0 <= v <= 1.0 for v in grid.values())

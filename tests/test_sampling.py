@@ -463,14 +463,12 @@ def test_temperature_mixture_a75_bit_exact_vs_duckdb(spark):
 
     from csvtool_spark.operators.sampling import temperature_rates
 
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
 
     df = _temp_rate_corpus(spark)
-    rt = temperature_rates(df, "source", "tok", alpha=0.75)
-    try:
+    with persist_scope():
+        rt = temperature_rates(df, "source", "tok", alpha=0.75)
         got = {(r["source"], r["keep_ppm"]) for r in rt.collect()}
-    finally:
-        release_stages(rt)
     pdf = df.toPandas()
     con = duckdb.connect()
     con.register("t", pdf)
@@ -503,14 +501,12 @@ def test_temperature_mixture_pow_lane_one_ppm_band(spark):
     pdf = df.toPandas()
     con = duckdb.connect()
     con.register("t", pdf)
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
 
     for alpha in (0.3, 0.62, 0.9):
-        rt = temperature_rates(df, "source", "tok", alpha=alpha)
-        try:
+        with persist_scope():
+            rt = temperature_rates(df, "source", "tok", alpha=alpha)
             got = {r["source"]: r["keep_ppm"] for r in rt.collect()}
-        finally:
-            release_stages(rt)
         want = dict(con.execute(f"""
             WITH c AS (SELECT source, CAST(sum(tok) AS BIGINT) AS tok
                        FROM t GROUP BY source),

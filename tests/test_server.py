@@ -16,6 +16,7 @@ from csvtool_spark.server import (
     browse_dir,
     query_response,
 )
+from tests.conftest import SF_SMALL
 
 V = " '/root/repo/tests/data/violations.csv' "
 
@@ -734,22 +735,74 @@ def test_query_response_curation_pipe(eng):
 
 
 def test_query_response_releases_pipe_stages(spark):
-    """Round-8 ADVICE: a query whose plan carries persisted staging
+    """A query whose plan reads persisted staging
     tables (pipe neardup / BM25 / linkage) must not leak cached blocks
     per HTTP request — query_response frees them after the collects."""
-    from csvtool_spark.functions.caching import attach_stages
+    from csvtool_spark.functions import caching
 
-    stage = spark.range(5).persist()
-    stage.count()
-    assert stage.storageLevel.useMemory
+    staged = []
 
     class FakeEngine:
         def sql(self, stmt):
-            return attach_stages(spark.range(3), [stage])
+            stage = caching.persist(spark.range(5))
+            stage.count()
+            assert stage.storageLevel.useMemory
+            staged.append(stage)
+            return spark.range(3)
 
     ret = query_response(FakeEngine(), "select pretend-pipe-query")
     assert ret["status"] & DAT_GOOD
-    assert not stage.storageLevel.useMemory  # released, not leaked
+    assert len(staged) == 1
+    assert not staged[0].storageLevel.useMemory  # released, not leaked
+
+
+def _cached_entries(spark) -> int:
+    """Entries in the session's CacheManager — one per persisted plan."""
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+_DOCS = f" '{SF_SMALL}/documents.parquet' "
+
+
+@pytest.mark.parametrize(
+    "query, fails",
+    [
+        ("select doc_id, text from" + _DOCS + "where doc_id > {i}", False),
+        ("select inc() n, doc_id from" + _DOCS + "where doc_id > {i}", False),
+        (
+            "select doc_id, text from" + _DOCS + "where doc_id > {i} "
+            "|> tokens(text) |> pack(n_tokens, id=doc_id, budget=256)",
+            False,
+        ),
+        (
+            "select doc_id, source, text from" + _DOCS + "where doc_id > {i} "
+            "|> tokens(text) |> mixture(source, key=doc_id, tokens=n_tokens, "
+            "src0=500000, src1=500000)",
+            False,
+        ),
+        (
+            "select doc_id, text from" + _DOCS + "where doc_id > {i} "
+            "|> neardup(text, id=doc_id, threshold=0.4)",
+            False,
+        ),
+        # a stage that raises after neardup persisted its staging frames
+        (
+            "select doc_id, text from" + _DOCS + "where doc_id > {i} "
+            "|> neardup(text, id=doc_id) |> frobnicate(text)",
+            True,
+        ),
+    ],
+    ids=["plain", "inc", "pack", "mixture", "neardup", "neardup_then_error"],
+)
+def test_query_response_cache_returns_to_baseline(eng, spark, query, fails):
+    """A long-lived server runs distinct queries back to back; every
+    cache entry a request creates is gone when its response returns,
+    whether the request succeeded or raised."""
+    base = _cached_entries(spark)
+    for i in range(3):
+        ret = query_response(eng, query.format(i=i))
+        assert bool(ret["status"] & DAT_ERROR) == fails, ret["message"]
+    assert _cached_entries(spark) == base
 
 
 def test_explain_response_contract(eng):

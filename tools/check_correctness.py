@@ -12,7 +12,32 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+from csvtool_spark.functions.caching import persist_scope
 from csvtool_spark.oracle import compare, duck_connect
+
+
+def _check(name, fn, spark, sf_dir, con, oracles) -> tuple[str | None, str]:
+    """(error or None, PASS-line suffix) for one catalog entry: its SQL
+    oracle when it has one, else its invariant oracle."""
+    from csvtool_spark.queries import INVARIANT_ORACLES
+
+    try:
+        sdf = fn(spark, sf_dir)
+    except Exception as e:  # noqa: BLE001
+        return f"spark error: {e}", ""
+    if name not in oracles:
+        # xx64-family entries: invariant oracle instead of SQL equality
+        inv = INVARIANT_ORACLES.get(name)
+        if inv is None:
+            return "neither SQL nor invariant oracle", ""
+        try:
+            return inv(sdf, con), " (invariant)"
+        except Exception as e:  # noqa: BLE001
+            return f"error: {e}", " (invariant)"
+    try:
+        return compare(sdf, con, oracles[name]), ""
+    except Exception as e:  # noqa: BLE001
+        return f"error: {e}", ""
 
 
 def main() -> int:
@@ -25,11 +50,7 @@ def main() -> int:
     spark = get_spark("correctness-check")
     con = duck_connect(sf_dir)
 
-    from csvtool_spark.queries import (
-        INVARIANT_ORACLES,
-        SHADOW_ORACLES,
-        SHADOW_QUERIES,
-    )
+    from csvtool_spark.queries import SHADOW_ORACLES, SHADOW_QUERIES
 
     qs = dict(entrymod.queries())
     oracles = dict(entrymod.oracle_sql())
@@ -40,50 +61,17 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            # xx64-family entries: invariant oracle instead of SQL equality
-            inv = INVARIANT_ORACLES.get(name)
-            if inv is None:
-                failures.append(name)
-                print(f"FAIL {name}: neither SQL nor invariant oracle")
-                continue
-            try:
-                err = inv(sdf, con)
-            except Exception as e:  # noqa: BLE001
-                err = f"error: {e}"
-            finally:
-                from csvtool_spark.functions.caching import release_stages
-
-                release_stages(sdf)
-            if err:
-                failures.append(name)
-                print(f"FAIL {name}: {err}")
-            else:
-                print(f"PASS {name} (invariant)")
-            continue
-        try:
-            err = compare(sdf, con, oracles[name])
-        except Exception as e:  # noqa: BLE001
-            err = f"error: {e}"
-        finally:
-            # operators that return lazy plans over persisted stages
-            # (recall evals, BM25, linkage, ...) attach them for release;
-            # a 128-entry sweep in one session would otherwise accumulate
-            # corpus-sized cached blocks until LRU eviction
-            from csvtool_spark.functions.caching import release_stages
-
-            release_stages(sdf)
+        # operators that return lazy plans over persisted stages (recall
+        # evals, BM25, linkage, ...) register them with this scope; a
+        # 156-entry sweep in one session would otherwise accumulate
+        # corpus-sized cached blocks until LRU eviction
+        with persist_scope():
+            err, label = _check(name, fn, spark, sf_dir, con, oracles)
         if err:
             failures.append(name)
             print(f"FAIL {name}: {err}")
         else:
-            print(f"PASS {name}")
+            print(f"PASS {name}{label}")
 
     total = len(only) if only else len(qs)
     print(f"\n{total - len(failures)}/{total} pass")

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from csvtool_spark.operators import components
 from csvtool_spark import queries as catalog
-from csvtool_spark.functions.caching import release_stages
+from csvtool_spark.functions.caching import persist_scope
 from csvtool_spark.queries import load
 from csvtool_spark.session import get_spark
 
@@ -73,12 +73,10 @@ def make_cc(eager: bool):
 def run_variant(eager: bool) -> float:
     components.connected_components = make_cc(eager)
     try:
-        t0 = time.perf_counter()
-        df = q(spark, sf_dir)
-        noop(df)
-        dt = time.perf_counter() - t0
-        release_stages(df)
-        return dt
+        with persist_scope():
+            t0 = time.perf_counter()
+            noop(q(spark, sf_dir))
+            return time.perf_counter() - t0
     finally:
         components.connected_components = _orig_cc
 

@@ -36,7 +36,7 @@ def main() -> int:
     import test_pipe_chain_fuzz as fz
     from csvtool_spark.dialect.stage_oracles import chain_oracle_sql
     from csvtool_spark.engine import CsvEngine
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
     from csvtool_spark.oracle import compare, duck_connect
     from csvtool_spark.session import get_spark
 
@@ -56,24 +56,25 @@ def main() -> int:
         else:
             base_text, base_sql, base_cols, base_tokens = rng.choice(fz.BASES)
             stage_text, chain = fz._gen_chain(rng, base_cols, base_tokens)
-        try:
-            sdf = eng.sql(f"{base_text} |> {stage_text}")
-        except ValueError as e:
-            # documented engine/twin divergence: temperature mixture
-            # refuses zero-mass sources the twin can only clamp — an
-            # expected skip (see tests/test_pipe_chain_fuzz.py)
-            if "no positive token mass" in str(e) and any(
-                nm == "mixture" and "temperature" in p for nm, p in chain
-            ):
-                print(f"SKIP seed={seed} zero-mass source: {e}")
-                continue
-            raise
-        try:
-            err = compare(sdf, con, chain_oracle_sql(base_sql, base_cols, chain)[0])
-        except Exception as e:  # noqa: BLE001 — a fuzz run reports, not dies
-            err = f"exception: {e}"
-        finally:
-            release_stages(sdf)
+        with persist_scope():
+            try:
+                sdf = eng.sql(f"{base_text} |> {stage_text}")
+            except ValueError as e:
+                # documented engine/twin divergence: temperature mixture
+                # refuses zero-mass sources the twin can only clamp — an
+                # expected skip (see tests/test_pipe_chain_fuzz.py)
+                if "no positive token mass" in str(e) and any(
+                    nm == "mixture" and "temperature" in p for nm, p in chain
+                ):
+                    print(f"SKIP seed={seed} zero-mass source: {e}")
+                    continue
+                raise
+            try:
+                err = compare(
+                    sdf, con, chain_oracle_sql(base_sql, base_cols, chain)[0]
+                )
+            except Exception as e:  # noqa: BLE001 — a fuzz run reports, not dies
+                err = f"exception: {e}"
         if err:
             failures += 1
             print(f"FAIL seed={seed} base=`{base_text}` chain=`{stage_text}`: {err}")

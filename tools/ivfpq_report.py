@@ -30,7 +30,7 @@ sys.path.insert(0, "/root/repo")
 
 
 def main() -> int:
-    from csvtool_spark.functions.caching import release_stages
+    from csvtool_spark.functions.caching import persist_scope
     from csvtool_spark.operators.similarity import (
         ivf_centroids,
         ivf_pq_recall_eval,
@@ -67,12 +67,11 @@ def main() -> int:
     grid = {}
     for ci, cv in cents.items():
         for bi, bv in cbs.items():
-            out = ivf_pq_recall_eval(
-                e, "embedding", "vec_id", queries, k=10,
-                n_cells=n_cells, nprobe=nprobe, centroids=cv, codebook=bv,
-            )
-            rows = out.collect()
-            release_stages(out)
+            with persist_scope():
+                rows = ivf_pq_recall_eval(
+                    e, "embedding", "vec_id", queries, k=10,
+                    n_cells=n_cells, nprobe=nprobe, centroids=cv, codebook=bv,
+                ).collect()
             grid[f"ivf_{ci}.pq_{bi}"] = round(
                 sum(r["recall"] for r in rows) / len(rows), 4
             )
@@ -83,12 +82,11 @@ def main() -> int:
     nps = sorted({p for p in (1, 2, 4, 8, 16, 32) if p <= n_cells})
     sweep = {}
     for ci, cv in cents.items():
-        out = ivf_pq_nprobe_sweep(
-            e, "embedding", "vec_id", queries, nprobes=nps, k=10,
-            n_cells=n_cells, centroids=cv, codebook=cbs["trained"],
-        )
-        rows = out.collect()
-        release_stages(out)
+        with persist_scope():
+            rows = ivf_pq_nprobe_sweep(
+                e, "embedding", "vec_id", queries, nprobes=nps, k=10,
+                n_cells=n_cells, centroids=cv, codebook=cbs["trained"],
+            ).collect()
         by_np: dict[int, list[float]] = {}
         for r in rows:
             by_np.setdefault(int(r["nprobe"]), []).append(r["recall"])

@@ -46,7 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F
 
-from csvtool_spark.functions.caching import release_stages
+from csvtool_spark.functions.caching import persist_scope
 from csvtool_spark.operators.dedup import (
     _banded,
     _minhash_signatures,
@@ -187,18 +187,18 @@ def scaled_embeddings(base: DataFrame, m: int) -> DataFrame:
 def probe_minhash(docs: DataFrame) -> dict:
     """Within-corpus lane: the count-only candidate aggregate (the exact
     quantity MAX_BUCKET bounds) plus the full verified-pair pipeline."""
-    cand = candidate_pairs(
-        _banded(
-            _minhash_signatures(docs, "text", "doc_id", 64, 3, "arrow", "xx64"),
-            "doc_id", "__sig", 16, 4, "xx64",
-        ),
-        "doc_id",
-    )
-    n_cand, cand_work, cand_wall = counted(cand)
-    release_stages(cand)
-    pairs = near_dup_pairs_minhash(docs, "text", "doc_id", threshold=0.6)
-    n_pairs, pair_work, pair_wall = counted(pairs)
-    release_stages(pairs)
+    with persist_scope():
+        cand = candidate_pairs(
+            _banded(
+                _minhash_signatures(docs, "text", "doc_id", 64, 3, "arrow", "xx64"),
+                "doc_id", "__sig", 16, 4, "xx64",
+            ),
+            "doc_id",
+        )
+        n_cand, cand_work, cand_wall = counted(cand)
+    with persist_scope():
+        pairs = near_dup_pairs_minhash(docs, "text", "doc_id", threshold=0.6)
+        n_pairs, pair_work, pair_wall = counted(pairs)
     return {
         "candidate_pairs": n_cand,
         "verified_pairs": n_pairs,
@@ -216,22 +216,22 @@ def probe_simhash(docs: DataFrame) -> dict:
     (a) ``cross_copy_pairs`` == 0 — disjoint sub-corpora never verify
     against each other — and (b) shuffle records ~linear; ``pairs`` is
     recorded raw for the curve, not ratio-normalized."""
-    pairs = near_dup_pairs_simhash(docs, "text", "doc_id", max_hamming=8)
-    out = pairs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(
-                F.floor(F.col("id_a") / ID_STRIDE)
-                != F.floor(F.col("id_b") / ID_STRIDE),
-                1,
-            ).otherwise(0)
-        ).alias("cross"),
-    )
-    t0 = time.perf_counter()
-    row = out.collect()[0]
-    wall = time.perf_counter() - t0
-    work = plan_work_metrics(out)
-    release_stages(pairs)
+    with persist_scope():
+        pairs = near_dup_pairs_simhash(docs, "text", "doc_id", max_hamming=8)
+        out = pairs.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.when(
+                    F.floor(F.col("id_a") / ID_STRIDE)
+                    != F.floor(F.col("id_b") / ID_STRIDE),
+                    1,
+                ).otherwise(0)
+            ).alias("cross"),
+        )
+        t0 = time.perf_counter()
+        row = out.collect()[0]
+        wall = time.perf_counter() - t0
+        work = plan_work_metrics(out)
     return {
         "pairs": row["n"],
         "cross_copy_pairs": int(row["cross"] or 0),
@@ -244,18 +244,20 @@ def probe_ngram(docs: DataFrame) -> dict:
     """Exact n-gram-Jaccard lane: the shingle equi-join is the EXACT
     operator (documented quadratic on hot shingles) — on the
     disjoint-shingle corpus its join work must still scale linearly."""
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
-    n, work, wall = counted(pairs)
-    release_stages(pairs)
+    with persist_scope():
+        n, work, wall = counted(
+            ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.5)
+        )
     return {"pairs": n, "wall_sec": round(wall, 3), **work}
 
 
 def probe_cross(docs: DataFrame, ref: DataFrame) -> dict:
     """Decontamination lane: new side scales, ref side fixed — matches
     grow with the planted contamination (linear in corpus size)."""
-    hits = cross_corpus_neardup(docs, ref, "text", "doc_id", threshold=0.6)
-    n, work, wall = counted(hits)
-    release_stages(hits)
+    with persist_scope():
+        n, work, wall = counted(
+            cross_corpus_neardup(docs, ref, "text", "doc_id", threshold=0.6)
+        )
     return {"matches": n, "wall_sec": round(wall, 3), **work}
 
 
