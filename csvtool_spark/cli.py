@@ -21,9 +21,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("-c", "--command", help="query text (default: read stdin)")
     ap.add_argument(
         "-o", "--output",
-        help="write results to this path (.csv/.tsv/.txt/.jsonl single "
-        "file, optional .gz/.bz2/.deflate suffix; .parquet/.orc write a "
-        "distributed directory)",
+        help="write results to this path, in the format its extension "
+        "names, as the GUI save does (a columnar format writes a "
+        "directory; a bare name gets the CSV extension)",
     )
     ap.add_argument("--json", action="store_true", help="print JSON lines instead of CSV")
     ap.add_argument("--limit", type=int, default=0, help="cap printed rows (0 = all)")
@@ -94,14 +94,7 @@ def main(argv: list[str] | None = None) -> int:
                 df.explain("formatted")
             return 0
         if args.output:
-            # sink dispatch by extension: .parquet/.orc → distributed
-            # columnar dir, anything else → the reference's single-file
-            # CSV shape
-            if args.output.lower().endswith((".parquet", ".orc")):
-                paths = eng.save_parquet(text, args.output)
-            else:
-                paths = eng.save_csv(text, args.output)
-            for p in paths:
+            for p in eng.save_csv(text, args.output):
                 print(p)
             return 0
         if args.json:

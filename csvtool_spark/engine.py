@@ -7,20 +7,24 @@
 
 Tables come from these places (superset of the reference, which only
 accepts ``.csv`` paths — utils.go:508,531):
-- CSV / TSV paths (quoted or bare, ``~`` expanded) → sampling schema
-  inference (sources/csv.py; tab separator for ``.tsv``);
-- parquet / ORC paths (engine extensions — both columnar formats Spark
-  ships natively, typed straight from the file footer);
-- JSONL paths with bounded inference (sources/jsonl.py);
-- raw ``.txt`` lines (one-document-per-line corpus ingest, single
-  ``line`` column);
+- file paths (quoted or bare, ``~`` expanded, shard globs allowed), read
+  by the format table ``FORMATS``: CSV / TSV through sampling schema
+  inference (sources/csv.py), JSONL with bounded inference
+  (sources/jsonl.py), raw text lines as one ``line`` column, and
+  parquet / ORC typed straight from the file footer; line formats may
+  carry a ``CODECS`` suffix;
 - names registered via ``register(name, df)`` (engine extension) — dialect
   types derived from the Spark schema.
-"""
+
+The same table drives the sinks: ``write_single_result`` (behind
+``save_csv``, the CLI's ``-o`` and the GUI save), ``save_parquet``'s
+name check and the server's file browser, so every name a sink writes
+reads back and shows in the browser."""
 
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +58,137 @@ def _dialect_type(dt: T.DataType) -> int:
     return T_STRING
 
 
+# --- the format table -----------------------------------------------------
+
+
+class Format(NamedTuple):
+    """One row of the format table. ``spark`` names the DataFrameReader
+    and DataFrameWriter method, ``options`` the writer options (the CSV
+    reader takes ``sep`` too). A columnar format is read and written as a
+    Spark directory, a line format as one file."""
+
+    spark: str
+    options: dict = {}
+    columnar: bool = False
+
+
+_JSON_LINES = Format("json", {"ignoreNullFields": False})
+
+#: the extension a bare sink name gets, and the format of a sink name the
+#: table does not know — the reference's comma CSV (files.go:85-178)
+DEFAULT_EXT = ".csv"
+
+#: THE file-format table: the only code that knows file extensions.
+#: ``_load`` reads through it, ``write_single_result`` writes through it,
+#: ``save_parquet`` checks its names against it, and the server's file
+#: browser lists what it reads. Every row but CSV is an engine extension
+#: (the reference reads and writes CSV only, files.go).
+FORMATS = {
+    DEFAULT_EXT: Format("csv", {"header": True, "sep": ","}),
+    ".tsv": Format("csv", {"header": True, "sep": "\t"}),
+    # raw lines: one string column named ``line``, no header
+    ".txt": Format("text"),
+    # explicit nulls: Spark's default omits null fields, and a column that
+    # is all-null in one result would vanish from the file
+    ".jsonl": _JSON_LINES,
+    ".ndjson": _JSON_LINES,
+    ".json": _JSON_LINES,
+    # internally compressed, so they take no codec suffix
+    ".parquet": Format("parquet", columnar=True),
+    ".orc": Format("orc", columnar=True),
+}
+
+#: codec suffix -> Spark compression name, for the line formats. Only
+#: the codecs this distribution ships: without its Hadoop codec a zstd
+#: or xz file would read back as raw compressed bytes, not an error.
+CODECS = {".gz": "gzip", ".bz2": "bzip2", ".deflate": "deflate"}
+
+
+def _exts(columnar: bool) -> str:
+    return "/".join(e for e, f in FORMATS.items() if f.columnar == columnar)
+
+
+def split_sink_name(path: str) -> tuple[str, str, str]:
+    """``(stem, format_ext, codec_ext)`` for a file name — codec-AWARE:
+    ``out.jsonl.gz`` → ``('out', '.jsonl', '.gz')``, where a naive
+    splitext would number it ``out.jsonl-2.gz``, a name no dispatch
+    reads back."""
+    codec = ""
+    base = path
+    for cext in CODECS:
+        if path.lower().endswith(cext):
+            codec = path[-len(cext):]
+            base = path[: -len(cext)]
+            break
+    stem, ext = os.path.splitext(base)
+    return stem, ext, codec
+
+
+def file_format(path: str, verb: str) -> tuple[Format | None, str | None]:
+    """``(format, Spark codec)`` for a file name by the table, matched
+    case-insensitively; the format is None when the extension is not in
+    the table. A codec suffix over a columnar or an unknown format names
+    a file no lane can round-trip, so it raises ``cannot {verb} …``."""
+    _stem, ext, codec = split_sink_name(path)
+    fmt = FORMATS.get(ext.lower())
+    if codec and fmt is None:
+        raise SemanticError(
+            f"cannot {verb} {path}: a codec suffix needs a known line "
+            f"format before it ({_exts(columnar=False)})"
+        )
+    if codec and fmt.columnar:
+        raise SemanticError(
+            f"cannot {verb} {path}: {_exts(columnar=True)} files are "
+            f"internally compressed and take no {'/'.join(CODECS)} codec "
+            f"suffix — drop it"
+        )
+    return fmt, CODECS.get(codec.lower())
+
+
+def table_format(name: str) -> Format | None:
+    """The format ``_load`` reads ``name`` as, or None."""
+    try:
+        return file_format(name, "open file")[0]
+    except SemanticError:
+        return None
+
+
+def sink_path(path: str) -> str:
+    """The name rule of every single-file sink (``save_csv``, so CLI
+    ``-o``, and the GUI save) — the reference's pathChecker
+    (files.go:158-178) without its parent-directory check, which stays
+    with the server. ``~`` expands. A trailing slash or an existing
+    directory is valid only for a columnar name, which Spark writes as a
+    directory (re-saving over your own ``out.parquet`` overwrites it). A
+    bare name gets ``DEFAULT_EXT``."""
+    full = os.path.expanduser(path)
+    p = full.rstrip("/")
+    fmt = table_format(p)
+    if (p != full or os.path.isdir(p)) and not (fmt and fmt.columnar):
+        raise SemanticError(
+            f"Invalid path: {path} (directory, need a file name)"
+        )
+    _stem, ext, codec = split_sink_name(p)
+    return p if ext or codec else p + DEFAULT_EXT
+
+
+def numbered_sink_path(path: str, i: int, n: int) -> str:
+    """The sink path for statement ``i`` of ``n`` (0-based): a single
+    statement keeps the requested name; multiple statements ALL get -N
+    suffixes (-1, -2, ... — files.go:85-156), inserted before the FORMAT
+    extension with any codec suffix kept outermost — ``out.jsonl.gz`` →
+    ``out-2.jsonl.gz``. Every sink numbers its outputs this way."""
+    if n == 1:
+        return path
+    stem, ext, codec = split_sink_name(path)
+    return f"{stem}-{i + 1}{ext}{codec}"
+
+
+def _typed(df: DataFrame) -> tuple[DataFrame, list[str], list[int]]:
+    types = [_dialect_type(f.dataType) for f in df.schema.fields]
+    return df, list(df.columns), types
+
+
 class CsvEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -71,12 +206,15 @@ class CsvEngine:
     # --- table resolution -------------------------------------------------
 
     def _load(self, ref: ast.FileRef) -> tuple[DataFrame, list[str], list[int]]:
-        path = os.path.expanduser(ref.path)
         if ref.path in self._registry:
-            df = self._registry[ref.path]
-            names = list(df.columns)
-            types = [_dialect_type(f.dataType) for f in df.schema.fields]
-            return df, names, types
+            return _typed(self._registry[ref.path])
+        # the format table's read dispatch: the name is matched
+        # case-insensitively, every read uses the original path, and
+        # Spark's line readers decompress by the codec suffix
+        path = os.path.expanduser(ref.path)
+        fmt, _codec = file_format(path, "open file")
+        if fmt is None:
+            raise SemanticError(f"unknown table or file {ref.path!r}")
         # Shard globs ('shards/*.csv') read as ONE table — the multi-file
         # scan a single-process engine cannot do; Spark lists and splits
         # the matches. The existence check becomes "glob matches something
@@ -84,84 +222,29 @@ class CsvEngine:
         # must not be rejected because '[' looks like a glob); an empty
         # pattern still fails with a clear error. Hadoop brace globs
         # ('{a,b}') are not recognized here.
-        def _missing(p: str) -> bool:
-            import glob as _glob
+        import glob
 
-            if any(ch in p for ch in "*?["):
-                return not _glob.glob(p) and not os.path.exists(p)
-            return not os.path.exists(p)
-
-        # extension dispatch is CASE-INSENSITIVE (OUT.ORC written by the
-        # sink's lowered dispatch must read back — round-10 review);
-        # `low` is for matching only, every read uses the original path
-        low = path.lower()
-        if low.endswith((".parquet", ".orc")):
-            # columnar self-describing formats Spark ships natively —
-            # same typed-schema lane (engine extension; the reference
-            # reads CSV only, files.go). Same clean missing-path error
-            # as the line formats instead of a raw AnalysisException.
-            if _missing(path):
-                raise SemanticError(f"cannot open file {ref.path}")
-            reader = (
-                self.spark.read.parquet
-                if low.endswith(".parquet")
-                else self.spark.read.orc
-            )
-            df = reader(path)
-            names = list(df.columns)
-            types = [_dialect_type(f.dataType) for f in df.schema.fields]
-            return df, names, types
-        # Spark's text-based readers decompress by file extension —
-        # ONLY for codecs this distribution actually ships (gzip, bzip2,
-        # deflate). zstd/xz are deliberately not listed: without their
-        # Hadoop codecs the reader would return raw compressed bytes as
-        # garbage rows instead of erroring.
-        base = low
-        for codec_ext in (".gz", ".bz2", ".deflate"):
-            if base.endswith(codec_ext):
-                base = base[: -len(codec_ext)]
-                break
-        if base != low and base.endswith((".parquet", ".orc")):
-            # data.parquet.gz slipped past the columnar check above and
-            # would otherwise fall through every line-format branch to
-            # the generic unknown-file error (round-10 advice): columnar
-            # files are internally compressed — no codec suffix lane
-            raise SemanticError(
-                f"cannot open file {ref.path}: .parquet/.orc files are "
-                f"internally compressed and take no .gz/.bz2/.deflate "
-                f"suffix — drop the codec suffix"
-            )
-        if base.endswith((".jsonl", ".ndjson", ".json")):
-            from csvtool_spark.sources.jsonl import read_jsonl
-
-            if _missing(path):
-                raise SemanticError(f"cannot open file {ref.path}")
-            df = read_jsonl(self.spark, path)
-            names = list(df.columns)
-            types = [_dialect_type(f.dataType) for f in df.schema.fields]
-            return df, names, types
-        if base.endswith((".csv", ".tsv")):
-            # .tsv rides the SAME inference lane with a tab separator
-            # (engine extension; the reference is comma-only)
-            if _missing(path):
-                raise SemanticError(f"cannot open file {ref.path}")
+        if not os.path.exists(path) and not (
+            any(ch in path for ch in "*?[") and glob.glob(path)
+        ):
+            raise SemanticError(f"cannot open file {ref.path}")
+        if fmt.spark == "csv":
             return read_csv(
                 self.spark, path, noheader=ref.noheader,
-                multiline=ref.multiline,
-                sep="\t" if base.endswith(".tsv") else ",",
+                multiline=ref.multiline, sep=fmt.options["sep"],
             )
-        if base.endswith(".txt"):
-            # raw line-oriented text (engine extension): one row per
-            # line, single string column ``line`` — the ingest shape for
-            # one-document-per-line LLM corpora, feeding the curation
-            # pipe directly ("select line as text from 'corpus.txt' |>
-            # ..."). Spark's text reader splits and decompresses like
-            # the other line formats.
-            if _missing(path):
-                raise SemanticError(f"cannot open file {ref.path}")
-            df = self.spark.read.text(path).withColumnRenamed("value", "line")
-            return df, ["line"], [T_STRING]
-        raise SemanticError(f"unknown table or file {ref.path!r}")
+        if fmt.spark == "json":
+            from csvtool_spark.sources.jsonl import read_jsonl
+
+            return _typed(read_jsonl(self.spark, path))
+        if fmt.spark == "text":
+            # one row per line, single string column ``line`` — the
+            # one-document-per-line corpus shape the curation pipe ingests
+            return _typed(
+                self.spark.read.text(path).withColumnRenamed("value", "line")
+            )
+        # columnar formats are typed straight from the file footer
+        return _typed(getattr(self.spark.read, fmt.spark)(path))
 
     # --- query execution --------------------------------------------------
 
@@ -223,12 +306,12 @@ class CsvEngine:
         interactive path). ``partition_by`` adds hive-style partitioning."""
         written = []
         with persist_scope():
-            for i, df in enumerate(self.run(text)):
-                path = out_dir if i == 0 else f"{out_dir}-{i + 1}"
-                for f in df.schema.fields:
-                    if isinstance(f.dataType, T.DayTimeIntervalType):
-                        df = df.withColumn(f.name, F.col(f.name).cast("string"))
-                w = df.write.mode("overwrite").option("header", True)
+            results = self.run(text)
+            for i, df in enumerate(results):
+                path = numbered_sink_path(out_dir, i, len(results))
+                w = _intervals_as_strings(df).write.mode("overwrite").option(
+                    "header", True
+                )
                 if partition_by:
                     w = w.partitionBy(*partition_by)
                 w.csv(path)
@@ -239,52 +322,27 @@ class CsvEngine:
         self, text: str, out_dir: str, partition_by: list[str] | None = None
     ) -> list[str]:
         """Columnar sink (engine extension — the reference only writes
-        CSV): parquet by default, ORC when ``out_dir`` ends in ``.orc``
-        (the same extension dispatch the read side uses, so a written
-        path is always readable back). Multi-statement -N suffixes go
-        BEFORE the extension (``out-2.parquet``, mirroring
-        ``save_csv``)."""
-        # same rejection lane as write_single_result (round-13 ADVICE:
-        # this sink's old check only caught x.parquet.gz/x.orc.gz, so
-        # save_parquet('out.csv.gz') or 'out.gz' wrote a parquet
-        # directory under a name _load strips to .csv/unknown and can
-        # never read back — the mangled-round-trip class)
-        _stem0, ext0, codec0 = split_sink_name(out_dir)
-        if codec0:
-            if ext0.lower() in (".parquet", ".orc"):
-                # x.orc.gz keeps its TARGETED message
-                raise SemanticError(
-                    f"cannot save {out_dir}: .parquet/.orc are "
-                    f"internally compressed and take no codec suffix — "
-                    f"drop it"
-                )
+        CSV): one Spark directory per statement, in the columnar format
+        the format table gives the name (parquet for a name it does not
+        know), so a written path always reads back."""
+        _stem, ext, codec = split_sink_name(out_dir)
+        fmt = FORMATS.get(ext.lower())
+        if codec or (fmt and not fmt.columnar):
             raise SemanticError(
-                f"cannot save {out_dir}: columnar sinks take no codec "
-                f"suffix (.parquet/.orc are internally compressed) — "
-                f"use save_csv for codec'd line formats"
+                f"cannot save {out_dir}: save_parquet writes "
+                f"{_exts(columnar=True)} directories, which are internally "
+                f"compressed and take no codec suffix; line formats go "
+                f"through save_csv"
             )
-        if ext0.lower() in (
-            ".csv", ".tsv", ".txt", ".jsonl", ".ndjson", ".json"
-        ):
-            # a parquet DIRECTORY under a line-format name re-reads
-            # through the wrong lane — reject, mirroring the read side
-            raise SemanticError(
-                f"cannot save {out_dir}: {ext0} is a line format — "
-                f"save_parquet writes .parquet/.orc directories; use "
-                f"save_csv/save_csv_dir for line formats"
-            )
-        stem, ext = os.path.splitext(out_dir)
         written = []
         with persist_scope():
-            for i, df in enumerate(self.run(text)):
-                path = out_dir if i == 0 else f"{stem}-{i + 1}{ext}"
+            results = self.run(text)
+            for i, df in enumerate(results):
+                path = numbered_sink_path(out_dir, i, len(results))
                 w = df.write.mode("overwrite")
                 if partition_by:
                     w = w.partitionBy(*partition_by)
-                if ext.lower() == ".orc":
-                    w.orc(path)
-                else:
-                    w.parquet(path)
+                getattr(w, fmt.spark if fmt else "parquet")(path)
                 written.append(path)
         return written
 
@@ -310,27 +368,12 @@ class CsvEngine:
         return out
 
     def save_csv(self, text: str, out_path: str) -> list[str]:
-        """Run statements and write each result as ONE delimited file;
-        multi-query outputs get -N suffixes before the extension
-        (files.go:85-156). The separator follows the extension so the
-        written path always reads back through ``_load``'s dispatch
-        (round-10 review: a comma-separated body under a ``.tsv`` name
-        re-parsed as one mangled column): ``.tsv`` writes
-        tab-separated, ``.txt`` writes RAW LINES (single string column
-        required — no header, the one-doc-per-line ingest shape),
-        ``.parquet``/``.orc`` delegate to the native columnar directory
-        sink, anything else the reference's comma CSV (dispatch lives in
-        ``write_single_result`` — one shared lane with the GUI save)."""
-        # a bare name (no extension) gets '.csv' appended in EVERY
-        # branch — the reference's pathChecker rule (files.go:173-178),
-        # applied here too because the CLI's -o lane calls save_csv
-        # directly without the server's check_save_path (round-11
-        # second review: '-o out' wrote an extensionless file for one
-        # statement but out-1.csv/out-2.csv for two)
-        base = out_path
-        _stem, ext, codec = split_sink_name(out_path)
-        if not ext and not codec:
-            base = out_path + ".csv"
+        """Run statements and write each result through
+        ``write_single_result`` — the single-file sink the CLI's ``-o``
+        and the GUI save share. The name follows ``sink_path``;
+        multi-statement outputs get -N suffixes before the extension
+        (files.go:85-156)."""
+        base = sink_path(out_path)
         written = []
         with persist_scope():
             results = self.run(text)
@@ -341,95 +384,66 @@ class CsvEngine:
         return written
 
 
-#: write-side codec map — the same three codecs ``_load`` strips on read,
-#: so every name this dispatch accepts reads back through the same lane
-_WRITE_CODECS = {".gz": "gzip", ".bz2": "bzip2", ".deflate": "deflate"}
-
-
-def split_sink_name(path: str) -> tuple[str, str, str]:
-    """``(stem, format_ext, codec_ext)`` for a sink path — codec-AWARE:
-    ``out.jsonl.gz`` → ``('out', '.jsonl', '.gz')``. A naive splitext
-    would put a multi-statement -N suffix between ``.jsonl`` and ``.gz``
-    (``out.jsonl-2.gz``), a name neither dispatch can ever read back
-    (round-11 review)."""
-    codec = ""
-    base = path
-    for cext in _WRITE_CODECS:
-        if path.lower().endswith(cext):
-            codec = path[-len(cext):]
-            base = path[: -len(cext)]
-            break
-    stem, ext = os.path.splitext(base)
-    return stem, ext, codec
-
-
-def numbered_sink_path(path: str, i: int, n: int) -> str:
-    """The sink path for statement ``i`` of ``n`` (0-based): a single
-    statement keeps the requested name; multiple statements ALL get -N
-    suffixes (-1, -2, ... — files.go:85-156), inserted before the FORMAT
-    extension with any codec suffix kept outermost — ``out.jsonl.gz`` →
-    ``out-2.jsonl.gz``, never ``out.jsonl-2.gz`` (round-11 review)."""
-    if n == 1:
-        return path
-    stem, ext, codec = split_sink_name(path)
-    return f"{stem}-{i + 1}{ext}{codec}"
-
-
 def write_single_result(df: DataFrame, path: str) -> None:
-    """THE extension dispatch for writing one result to one user-named
-    path — shared by ``CsvEngine.save_csv`` and the GUI save flow
-    (server.query_response), so a saved name always reads back through
-    ``_load``'s read-side dispatch (round-10/11 reviews: two divergent
-    dispatches produced comma bodies under ``.tsv`` names):
+    """Write one result to one user-named path through the format table,
+    so a saved name always reads back through ``_load``. A columnar name
+    writes Spark's directory. A line format writes ONE file (coalesce(1),
+    the reference's one-file contract for interactive use; large
+    extracts go through ``save_csv_dir``), compressed when the name has
+    a codec suffix. A name the table does not know gets the reference's
+    comma CSV (files.go:85-156)."""
+    import shutil
+    import tempfile
 
-    - ``.txt``    → raw lines (``write_single_text``, 1 string column)
-    - ``.tsv``    → tab-separated single file
-    - ``.jsonl``/``.ndjson``/``.json`` → JSON lines (explicit nulls, so
-      an all-null column round-trips instead of vanishing)
-    - ``.parquet``/``.orc`` → native columnar DIRECTORY sink (delegated
-      to Spark; columnar data has no single-file text shape)
-    - anything else → the reference's comma CSV (files.go:85-156)
-
-    A trailing ``.gz``/``.bz2``/``.deflate`` on any LINE format writes
-    that codec (out.csv.gz is a real gzip body — a plain-text body under
-    a codec name would re-read as garbage, the same mangled-round-trip
-    class the .tsv fix closed); columnar names reject codec suffixes
-    exactly like the read side.
-    """
-    _stem, ext, codec_ext = split_sink_name(path)
-    ext = ext.lower()
-    codec = _WRITE_CODECS[codec_ext.lower()] if codec_ext else None
-    if codec and ext in (".parquet", ".orc"):
-        # columnar + codec keeps its TARGETED message (checked before
-        # the line-format allowlist below, which would misadvise
-        # switching a parquet sink to CSV — round-12 review)
-        raise SemanticError(
-            f"cannot save {path}: .parquet/.orc files are internally "
-            f"compressed and take no codec suffix — drop it"
-        )
-    if codec and ext not in (
-        ".csv", ".tsv", ".txt", ".jsonl", ".ndjson", ".json"
-    ):
-        # 'out.gz' (no format) or 'out.tar.gz' (unknown format under the
-        # codec) — either would write bytes _load can never dispatch (it
-        # strips the codec and finds no known format lane); reject
-        # instead of silently writing unreadable data
-        raise SemanticError(
-            f"cannot save {path}: a codec suffix needs a known line "
-            f"format before it (out.csv.gz, out.tsv.gz, out.txt.gz, "
-            f"out.jsonl.gz, ...)"
-        )
-    if ext in (".parquet", ".orc"):
-        w = df.write.mode("overwrite")
-        (w.parquet if ext == ".parquet" else w.orc)(path)
-    elif ext == ".txt":
-        write_single_text(df, path, codec=codec)
-    elif ext in (".jsonl", ".ndjson", ".json"):
-        write_single_jsonl(df, path, codec=codec)
+    fmt, codec = file_format(path, "save")
+    fmt = fmt or FORMATS[DEFAULT_EXT]
+    if fmt.columnar:
+        getattr(df.write.mode("overwrite"), fmt.spark)(path)
+        return
+    if fmt.spark == "text":
+        out = _raw_lines(df, path)
     else:
-        write_single_csv(
-            df, path, sep="\t" if ext == ".tsv" else ",", codec=codec
+        out = _intervals_as_strings(df)
+    tmp = tempfile.mkdtemp(prefix="csvsink_")
+    try:
+        w = out.coalesce(1).write.mode("overwrite").options(**fmt.options)
+        if codec:
+            w = w.option("compression", codec)
+        getattr(w, fmt.spark)(f"{tmp}/out")
+        _copy_single_part(f"{tmp}/out", path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _intervals_as_strings(df: DataFrame) -> DataFrame:
+    """Dialect durations (day-time intervals) as their string form, the
+    shape the text sinks write."""
+    for f in df.schema.fields:
+        if isinstance(f.dataType, T.DayTimeIntervalType):
+            df = df.withColumn(f.name, F.col(f.name).cast("string"))
+    return df
+
+
+def _raw_lines(df: DataFrame, path: str) -> DataFrame:
+    """The raw-line shape: exactly one string-typed column, one value per
+    line, NO header — the inverse of ``_load``'s one-doc-per-line ingest.
+    Round-trip caveats (the format has no escaping, so these are inherent
+    to raw lines, not bugs): NULL is written as an empty line and reads
+    back as ``""``, and a value containing an embedded newline splits
+    into multiple rows on re-read — results needing exact NULL/newline
+    fidelity must pick a delimited or columnar format. A multi-column
+    result is an error, because a delimited body would re-read as
+    mangled raw lines."""
+    if len(df.columns) != 1:
+        raise SemanticError(
+            f"cannot save {path}: raw lines hold one string column; this "
+            f"result has {len(df.columns)} columns ({', '.join(df.columns)})"
+            f" — use a delimited or columnar format instead"
         )
+    # NULL -> empty line (the text writer rejects nulls)
+    return df.select(
+        F.coalesce(F.col(df.columns[0]).cast("string"), F.lit("")).alias("value")
+    )
 
 
 def _copy_single_part(tmp_dir: str, path: str) -> None:
@@ -443,102 +457,9 @@ def _copy_single_part(tmp_dir: str, path: str) -> None:
         if not p.endswith(".crc")
     ]
     if not parts:
-        # a zero-partition plan can leave no part-* file at all — surface
-        # a real error, not an IndexError (round-12 ADVICE)
+        # a zero-partition plan can leave no part-* file at all
         raise SemanticError(
             f"cannot save {path}: Spark produced no output part file "
             f"(empty zero-partition result)"
         )
     shutil.copy(parts[0], path)
-
-
-def write_single_csv(
-    df: DataFrame, path: str, sep: str = ",", codec: str | None = None
-) -> None:
-    """Single-file CSV/TSV sink. coalesce(1) matches the reference's
-    one-file contract for interactive use; large extracts should use
-    ``df.write.csv(dir)`` (one file per partition) instead."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="csvsink_")
-    try:
-        out = df
-        for f in df.schema.fields:
-            if isinstance(f.dataType, T.DayTimeIntervalType):
-                out = out.withColumn(f.name, F.col(f.name).cast("string"))
-        w = out.coalesce(1).write.mode("overwrite").option(
-            "header", True
-        ).option("sep", sep)
-        if codec:
-            w = w.option("compression", codec)
-        w.csv(f"{tmp}/out")
-        _copy_single_part(f"{tmp}/out", path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def write_single_jsonl(
-    df: DataFrame, path: str, codec: str | None = None
-) -> None:
-    """Single-file JSON-lines sink — the inverse of ``_load``'s .jsonl
-    lane. Nulls are written EXPLICITLY (ignoreNullFields=false): Spark's
-    default omits null fields, and a column that happens to be all-null
-    in this result would otherwise vanish from the file entirely."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="jsonsink_")
-    try:
-        out = df
-        for f in df.schema.fields:
-            if isinstance(f.dataType, T.DayTimeIntervalType):
-                out = out.withColumn(f.name, F.col(f.name).cast("string"))
-        w = out.coalesce(1).write.mode("overwrite").option(
-            "ignoreNullFields", False
-        )
-        if codec:
-            w = w.option("compression", codec)
-        w.json(f"{tmp}/out")
-        _copy_single_part(f"{tmp}/out", path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def write_single_text(
-    df: DataFrame, path: str, codec: str | None = None
-) -> None:
-    """Single-file raw-line sink for ``.txt`` outputs: exactly one
-    string-typed column, one value per line, NO header — the inverse of
-    ``_load``'s one-doc-per-line ingest. Round-trip caveats (the format
-    has no escaping, so these are inherent to raw lines, not bugs):
-    NULL is written as an empty line and reads back as ``""``, and a
-    value containing an embedded newline splits into multiple rows on
-    re-read — results needing exact NULL/newline fidelity must pick
-    ``.csv``/``.tsv`` (quoted) or a columnar extension. Multi-column
-    results must pick a delimited extension instead (a CSV body under a
-    .txt name would re-read as mangled raw lines — round-10 review)."""
-    import shutil
-    import tempfile
-
-    if len(df.columns) != 1:
-        raise SemanticError(
-            f".txt writes one string column as raw lines; this result has "
-            f"{len(df.columns)} columns ({', '.join(df.columns)}) — use "
-            f".csv/.tsv/.parquet/.orc instead"
-        )
-    tmp = tempfile.mkdtemp(prefix="txtsink_")
-    try:
-        # NULL -> empty line (the text writer rejects nulls)
-        out = df.select(
-            F.coalesce(
-                F.col(df.columns[0]).cast("string"), F.lit("")
-            ).alias("value")
-        )
-        w = out.coalesce(1).write.mode("overwrite")
-        if codec:
-            w = w.option("compression", codec)
-        w.text(f"{tmp}/out")
-        _copy_single_part(f"{tmp}/out", path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

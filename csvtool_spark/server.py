@@ -130,44 +130,6 @@ class QueryJob:
                 return
 
 
-def check_save_path(path: str) -> str:
-    """Behavior twin of the reference's ``pathChecker`` (files.go:158-178):
-    expand ``~``, require an existing target directory (a bare directory
-    path is invalid — a file name is required), and append ``.csv`` when
-    the name has no extension. Raises ValueError on a bad path."""
-    p = os.path.expanduser(path)
-    if p.rstrip("/") != p:
-        if p.rstrip("/").lower().endswith((".parquet", ".orc")):
-            # normalize 'out.parquet/' so splitext sees the extension — a
-            # trailing slash would otherwise get '.csv' appended and (for
-            # a FIRST-TIME save, where no directory exists yet) the copy
-            # into the nonexistent dir would raise a raw
-            # FileNotFoundError (round-11 review + round-12 ADVICE)
-            p = p.rstrip("/")
-        else:
-            # a trailing slash on any OTHER name is a directory request
-            # only columnar sinks can satisfy — reject cleanly here
-            # ('out.csv/' used to fall through splitext as
-            # extensionless, gain a '.csv', and die in shutil.copy with
-            # a raw FileNotFoundError — round-12 second review)
-            raise ValueError(
-                f"Invalid path: {path} (directory, need a file name)"
-            )
-    if os.path.isdir(p):
-        # an existing DIRECTORY is valid only when it's a columnar sink
-        # target being overwritten (Spark writes .parquet/.orc as dirs —
-        # round-11 review: re-saving to your own out.parquet was rejected)
-        if not p.lower().endswith((".parquet", ".orc")):
-            raise ValueError(
-                f"Invalid path: {path} (directory, need a file name)"
-            )
-    if not os.path.isdir(os.path.dirname(os.path.abspath(p))):
-        raise ValueError(f"Invalid path: {path}")
-    if not os.path.splitext(p)[1]:
-        p += ".csv"
-    return p
-
-
 def query_response(engine, text: str, runner=None, password: str | None = None,
                    save_path: str | None = None) -> dict:
     """Run ``text`` and build the ReturnData dict (pure function — the
@@ -188,12 +150,12 @@ def query_response(engine, text: str, runner=None, password: str | None = None,
     ``save_path``: the GUI save flow (reference: the query request
     carries FileIO|F_CSV + SavePath, server.go:126-130 + main.go:124-131;
     the GUI re-runs the page's statements with the picked path,
-    help.js:15). Each statement's FULL result is written as one csv
-    file — multi-statement pages get ``-N`` suffixes before the
-    extension, the ``engine.save_csv`` contract (files.go:85-156) — and
-    the success message becomes ``Saved to <path>``. Display entries are
-    still returned (the reference streams rows to the GUI and the saver
-    in the same pass)."""
+    help.js:15). Each statement's FULL result is written by
+    ``engine.write_single_result`` under ``engine.save_csv``'s name
+    rule — multi-statement pages get ``-N`` suffixes before the
+    extension (files.go:85-156) — and the success message becomes
+    ``Saved to <path>``. Display entries are still returned (the
+    reference streams rows to the GUI and the saver in the same pass)."""
     from csvtool_spark.engine import _dialect_type
 
     ret: dict = {
@@ -212,16 +174,20 @@ def query_response(engine, text: str, runner=None, password: str | None = None,
         finally:
             set_thread_password_provider(None)
     try:
-        from csvtool_spark.engine import write_single_result
+        from csvtool_spark.engine import (
+            numbered_sink_path,
+            sink_path,
+            write_single_result,
+        )
 
         stmts = [s for s in text.split(";") if s.strip()]
         out_paths: list[str | None] = [None] * len(stmts)
         if save_path:
-            from csvtool_spark.engine import numbered_sink_path
-
-            base = check_save_path(save_path)
-            # codec-aware -N suffixing (out.jsonl.gz -> out-2.jsonl.gz,
-            # never out.jsonl-2.gz) — same helper as engine.save_csv
+            # engine.save_csv's name rule, plus the reference's check
+            # that the target's directory exists (files.go:158-170)
+            base = sink_path(save_path)
+            if not os.path.isdir(os.path.dirname(os.path.abspath(base))):
+                raise ValueError(f"Invalid path: {save_path}")
             out_paths = [
                 numbered_sink_path(base, i, len(stmts))
                 for i in range(len(stmts))
@@ -248,10 +214,6 @@ def query_response(engine, text: str, runner=None, password: str | None = None,
                     # saver off the same scan, scanner.go). The write runs
                     # under the job wrapper so it's cancellable like collects.
                     df = caching.persist(df)
-                    # the SAME extension dispatch as engine.save_csv
-                    # (.tsv tab / .txt raw lines / .parquet/.orc
-                    # columnar) — a GUI save to out.tsv must not
-                    # produce a comma body
                     write = lambda: write_single_result(df, out_path)  # noqa: E731,B023
                     if runner is not None:
                         runner(write)
@@ -282,7 +244,7 @@ def query_response(engine, text: str, runner=None, password: str | None = None,
             ret["message"] = f"Showing only top {cap}"
         if save_path:
             # server.go:130 — the save run reports the path, not the rows.
-            # Report the paths actually WRITTEN (.csv appended, -N
+            # Report the paths actually WRITTEN (extension appended, -N
             # suffixes for multi-statement), not the raw request — a
             # script acting on the message must find the files.
             written = [p for p in out_paths if p is not None]
@@ -355,26 +317,17 @@ def explain_response(engine, text: str, password: str | None = None) -> dict:
     return ret
 
 
-#: extensions the engine's ``_load`` can actually read (engine._load's
-#: dispatch); the reference lists only `.csv$` (files.go:193) — widened
-#: here because this engine also scans parquet/ORC, TSV, JSONL, raw
-#: text, and compressed LINE-format shards (columnar files are
-#: internally compressed — no codec suffix lane for them)
-_LINE_EXTS = (".csv", ".tsv", ".txt", ".jsonl", ".ndjson", ".json")
-_BROWSE_EXTS = tuple(
-    base + codec
-    for base in _LINE_EXTS
-    for codec in ("", ".gz", ".bz2", ".deflate")
-) + (".parquet", ".orc")
-
-
 def browse_dir(path: str, mode: str = "open") -> dict:
     """Directory listing for the file browser — the behavior twin of the
     reference's fileBrowser (files.go:192-220): cleaned path, ``parent``
     for up-navigation, hidden directories skipped, files filtered to what
-    the engine can open.  Names are basenames (the UI joins with
-    ``path``); the reference returns full paths — display plumbing only,
-    no query semantics."""
+    the engine can open — by the engine's format table, which widens the
+    reference's CSV-only filter (files.go:193); a columnar directory, as
+    Spark writes it, lists as a file, since it opens as one table.
+    Names are basenames (the UI joins with ``path``); the reference
+    returns full paths — display plumbing only, no query semantics."""
+    from csvtool_spark.engine import table_format
+
     # abspath, not just normpath: dirname('.') is '' which would report
     # the parent of the cwd as '/' — up-navigation must climb one level
     path = os.path.abspath(os.path.expanduser(path) or "/")
@@ -387,11 +340,13 @@ def browse_dir(path: str, mode: str = "open") -> dict:
     }
     try:
         for entry in sorted(os.listdir(path)):
-            full = os.path.join(path, entry)
-            if os.path.isdir(full):
+            fmt = table_format(entry)
+            if os.path.isdir(os.path.join(path, entry)) and not (
+                fmt and fmt.columnar
+            ):
                 if not entry.startswith("."):
                     out["dirs"].append(entry)
-            elif entry.lower().endswith(_BROWSE_EXTS):
+            elif fmt:
                 out["files"].append(entry)
     except OSError:
         out["status"] = DAT_BADPATH

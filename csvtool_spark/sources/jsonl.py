@@ -1,4 +1,4 @@
-"""JSONL (newline-delimited JSON) source and sink — the interchange format
+"""JSONL (newline-delimited JSON) source — the interchange format
 of LLM training-data pipelines (one document object per line).
 
 Scale design:
@@ -60,22 +60,3 @@ def read_jsonl(
         df = df.drop(CORRUPT_COL)
     return df
 
-
-def write_jsonl(df: DataFrame, path: str, compression: str | None = None) -> None:
-    """Distributed JSONL sink: one shard per partition (the layout every
-    downstream trainer expects); optional gzip/zstd per-shard compression."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
-
-
-def write_jsonl_file(df: DataFrame, path: str) -> int:
-    """Single-FILE JSONL for small results (driver-side, row count
-    returned) — the CSV single-file sink's JSONL twin. Use ``write_jsonl``
-    for anything big."""
-    rows = df.toJSON().collect()
-    with open(path, "w", encoding="utf-8") as f:
-        for line in rows:
-            f.write(line + "\n")
-    return len(rows)

@@ -493,10 +493,9 @@ def test_encrypt_prompts_via_getpass_in_cli(eng, monkeypatch, capsys):
 
 
 def test_csv_sink_bare_name_gets_csv_extension(eng, tmp_path):
-    """A bare -o name gets '.csv' appended in BOTH branches (reference
-    pathChecker rule, files.go:173-178) — the CLI lane calls save_csv
-    without the server's check_save_path, and round-11's second review
-    caught 'out' (one statement) vs 'out-1.csv' (two) inconsistency."""
+    """A bare -o name gets '.csv' appended for one statement and for
+    several alike (reference pathChecker rule, files.go:173-178) — not
+    'out' for one statement but 'out-1.csv' for two."""
     single = eng.save_csv("select top 2 plate from" + V,
                           str(tmp_path / "bare"))
     assert [os.path.basename(p) for p in single] == ["bare.csv"]

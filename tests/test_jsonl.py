@@ -5,12 +5,7 @@ from __future__ import annotations
 import json
 
 from csvtool_spark.engine import CsvEngine
-from csvtool_spark.sources.jsonl import (
-    infer_jsonl_schema,
-    read_jsonl,
-    write_jsonl,
-    write_jsonl_file,
-)
+from csvtool_spark.sources.jsonl import infer_jsonl_schema, read_jsonl
 
 
 def _write(path, lines):
@@ -60,21 +55,18 @@ def test_corrupt_lines_do_not_kill_the_read(spark, tmp_path):
     assert len(bad) == 1 and "not json" in bad[0]["_corrupt_record"]
 
 
-def test_jsonl_roundtrip_dir_and_file(spark, tmp_path):
+def test_jsonl_single_file_sink_roundtrip(spark, tmp_path):
     p = str(tmp_path / "in.jsonl")
     _write(p, [json.dumps({"a": i, "b": f"x{i}"}) for i in range(10)])
-    df = read_jsonl(spark, p)
-
-    out_dir = str(tmp_path / "out_dir")
-    write_jsonl(df, out_dir)
-    back = read_jsonl(spark, out_dir + "/*.json", sample_lines=5)
-    assert back.count() == 10
-
     out_file = str(tmp_path / "out.jsonl")
-    n = write_jsonl_file(df.orderBy("a"), out_file)
-    assert n == 10
-    first = json.loads(open(out_file).read().splitlines()[0])
-    assert first == {"a": 0, "b": "x0"}
+    eng = CsvEngine(spark)
+    assert eng.save_csv(f"select a, b from '{p}' order by a asc", out_file) == [
+        out_file
+    ]
+    lines = open(out_file).read().splitlines()
+    assert len(lines) == 10
+    assert json.loads(lines[0]) == {"a": 0, "b": "x0"}
+    assert eng.sql(f"select a from '{out_file}'").count() == 10
 
 
 def test_engine_reads_jsonl_in_dialect_query(spark, tmp_path):

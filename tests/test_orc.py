@@ -87,8 +87,9 @@ def test_orc_pipe_chain_runs(spark, tmp_path):
 
 def test_orc_sink_round_trip_and_multi_statement(spark, tmp_path):
     """save_parquet's extension dispatch writes ORC for .orc paths; a
-    two-statement text gets the -N suffix BEFORE the extension so both
-    outputs stay readable back through the read-side dispatch."""
+    two-statement text numbers every output (-1, -2) BEFORE the
+    extension so both stay readable back through the read-side
+    dispatch."""
     eng = CsvEngine(spark)
     src = "/root/testdata/sf0.001/orders.parquet"
     out = str(tmp_path / "out.orc")
@@ -97,7 +98,7 @@ def test_orc_sink_round_trip_and_multi_statement(spark, tmp_path):
         f"select o_orderpriority, count(*) as n from '{src}' group by o_orderpriority"
     )
     written = eng.save_parquet(text, out)
-    assert written == [out, str(tmp_path / "out-2.orc")]
+    assert written == [str(tmp_path / "out-1.orc"), str(tmp_path / "out-2.orc")]
     first = eng.sql(f"select o_orderkey, o_totalprice from '{written[0]}'")
     want = eng.sql(
         f"select o_orderkey, o_totalprice from '{src}' where o_totalprice > 300000"
@@ -285,20 +286,61 @@ def test_sink_read_round_trips_close_review_findings(spark, tmp_path):
                              str(tmp_path / bad))
 
 
-def test_browser_lists_every_readable_format(tmp_path):
+def test_browser_lists_every_readable_format(spark, tmp_path):
     """The server file browser must show exactly what _load can read —
     .tsv/.txt/.orc were invisible after the format wave (round-10
-    third review)."""
+    third review). Driven by the engine's format table: every format x
+    codec name it accepts is written by save_csv, read back by eng.sql
+    with the same row count and listed by browse_dir (a columnar
+    directory lists as a file); every name it rejects fails on both the
+    read and the write side and is not listed."""
+    import pytest
+
+    from csvtool_spark.dialect.errors import SemanticError
+    from csvtool_spark.engine import CODECS, FORMATS
     from csvtool_spark.server import browse_dir
 
+    static = tmp_path / "static"
+    static.mkdir()
     names = [
         "a.csv", "b.tsv", "c.txt", "d.parquet", "e.orc", "f.jsonl",
         "g.txt.gz", "H.CSV", "skip.xyz", "i.parquet.gz",
     ]
     for n in names:
-        (tmp_path / n).write_text("x")
-    got = set(browse_dir(str(tmp_path))["files"])
+        (static / n).write_text("x")
+    got = set(browse_dir(str(static))["files"])
     assert got == {
         "a.csv", "b.tsv", "c.txt", "d.parquet", "e.orc", "f.jsonl",
         "g.txt.gz", "H.CSV",
     }  # no .xyz; no .parquet.gz (columnar formats have no codec lane)
+
+    eng = CsvEngine(spark)
+    src = "/root/testdata/sf0.001/documents.parquet"
+    out = tmp_path / "table"
+    out.mkdir()
+    accepted, rejected = [], ["out.tar.gz", "out.gz"]
+    for i, (ext, fmt) in enumerate(FORMATS.items()):
+        for codec in ("", *CODECS):
+            name = f"t{i}{ext}{codec}"
+            if codec and fmt.columnar:
+                rejected.append(name)
+                continue
+            # upper-case every other name: the table is case-insensitive
+            accepted.append(name.upper() if len(accepted) % 2 else name)
+    for name in accepted:
+        p = out / name
+        eng.save_csv(f"select source from '{src}' where doc_id < 6", str(p))
+        n = eng.sql(f"select count(*) as n from '{p}'").collect()[0][0]
+        assert n == 6, name
+    assert set(browse_dir(str(out))["files"]) == set(accepted)
+
+    bad = tmp_path / "rejected"
+    bad.mkdir()
+    for name in rejected:
+        p = bad / name
+        with pytest.raises(SemanticError):
+            eng.save_csv(f"select source from '{src}' where doc_id < 6", str(p))
+        p.write_bytes(b"\x1f\x8b\x08\x00junk")
+        with pytest.raises(SemanticError):
+            eng.sql(f"select a from '{p}'")
+    assert browse_dir(str(bad))["files"] == []

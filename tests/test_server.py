@@ -542,7 +542,7 @@ def test_save_flow_dispatches_on_extension(eng, tmp_path, spark):
     assert ret["status"] & DAT_GOOD
     assert spark.read.parquet(str(pq)).count() == 3
     # re-saving over your own columnar output must OVERWRITE, not hit
-    # check_save_path's existing-directory rejection (round-11 review)
+    # the sink name rule's existing-directory rejection
     ret = query_response(eng, "select top 2 plate fine from" + V,
                          save_path=str(pq))
     assert ret["status"] & DAT_GOOD
