@@ -146,7 +146,7 @@ def resolve_value(node: ast.Lit, env: Env) -> ast.Expr:
         if idx is not None:
             return _col(f, idx)
     # literal
-    node.dtype = narrowest_type(value) if not node.quoted else narrowest_type(value)
+    node.dtype = narrowest_type(value)
     return node
 
 

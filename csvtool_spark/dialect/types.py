@@ -13,7 +13,10 @@ Reference semantics (/root/reference/utils.go:353-404):
 from __future__ import annotations
 
 import re
-from datetime import datetime
+from collections.abc import Iterator
+from datetime import datetime, timedelta, timezone
+
+import _strptime
 
 T_NULL, T_INT, T_FLOAT, T_DATE, T_DURATION, T_STRING = range(6)
 
@@ -115,21 +118,54 @@ def parse_duration_seconds(s: str) -> float | None:
     return None
 
 
-def parse_date(s: str) -> datetime | None:
-    t = s.strip()
-    for fmt in DATE_FORMATS:
+#: LC_TIME locale -> [(format, compiled strptime regex)] for DATE_FORMATS.
+#: Threads racing on a missing key build equal ladders; either write wins.
+_LADDERS: dict[object, list[tuple[str, re.Pattern]]] = {}
+
+
+def _date_ladder() -> list[tuple[str, re.Pattern]]:
+    """DATE_FORMATS paired with the regexes strptime itself compiles for
+    them, built once per LC_TIME locale (the key the stdlib uses, so
+    ``%b``/``%B``/``%a`` keep strptime's meaning). The stdlib keeps only
+    five format regexes and clears them when full, so handing it the whole
+    ladder cell by cell would recompile a regex on almost every attempt."""
+    lang = _strptime._getlang()
+    ladder = _LADDERS.get(lang)
+    if ladder is None:
+        time_re = _strptime.TimeRE()
+        ladder = _LADDERS[lang] = [(fmt, time_re.compile(fmt)) for fmt in DATE_FORMATS]
+    return ladder
+
+
+def date_ladder_hits(t: str) -> Iterator[tuple[int, datetime]]:
+    """Yield ``(index into DATE_FORMATS, parsed value)`` for every ladder
+    format that parses the trimmed cell ``t``, in ladder order.
+
+    A format is tried only when its regex matches the whole cell — exactly
+    the case in which strptime gets past "does not match format" and
+    "unconverted data remains" — so ``datetime.strptime`` runs only on hits
+    and still applies its range checks (``2/30/2020`` parses nowhere)."""
+    for i, (fmt, regex) in enumerate(_date_ladder()):
+        m = regex.match(t)
+        if m is None or m.end() != len(t):
+            continue
         try:
-            return datetime.strptime(t, fmt)
+            d = datetime.strptime(t, fmt)
         except ValueError:
             continue
+        yield i, d
+
+
+def parse_date(s: str) -> datetime | None:
+    t = s.strip()
+    for _, d in date_ladder_hits(t):
+        return d
     # dateparse.ParseAny breadth (utils.go:393): bare epoch numerics —
     # 10 digits = seconds, 13 = milliseconds (naive UTC, matching the
     # Spark-side timestamp_seconds/timestamp_millis twins under a UTC
     # session). Inference never reaches here for digit strings (Atoi wins
     # first, exactly like the reference); this is conversion breadth for
     # literals compared against DATE columns.
-    from datetime import timedelta, timezone
-
     if t.isdigit() and len(t) in (10, 13):
         # exact integer arithmetic — float seconds would drift a microsecond
         # against Spark's timestamp_millis for some millisecond values;

@@ -16,8 +16,13 @@ JVM-side expressions:
 - null tokens ''/'null'/'NA' → real SQL nulls in every column type
   (utils.go:384, selector.go:302-304)
 
-The cast pipeline is pure pyspark.sql.functions — no UDFs; at 100 TB the
-inference cost is one bounded head read and the casts stay in codegen.
+The cast pipeline is pure pyspark.sql.functions — no UDFs, so the casts
+stay in codegen. Inference is not free, though: every read collects the
+head to the driver and folds it in Python, once per distinct cell value
+and column. Each cell runs the int/float/duration regexes and then one
+compiled-regex test per date-ladder format (``dialect.types
+.date_ladder_hits``); ``datetime.strptime`` runs only on a regex hit.
+That fold, not the head read, is most of a small query's fixed cost.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from csvtool_spark.dialect.types import (
     T_INT,
     T_NULL,
     T_STRING,
+    date_ladder_hits,
     is_null_token,
     narrowest_type,
     widen,
@@ -220,17 +226,13 @@ def cast_column(col: Column, t: int, date_formats: list[str] | None = None) -> C
 def observed_date_formats(samples: list[str]) -> list[str]:
     """The subset of the format ladder that parses ≥1 sampled value, in
     ladder order — the full-scan cast tries only these."""
-    from datetime import datetime
-
-    from csvtool_spark.dialect.types import DATE_FORMATS
-
     hit: set[int] = set()
     epoch: list[str] = []
-    for v in samples:
+    for t in dict.fromkeys(v.strip() for v in samples):
         # A DATE column can carry bare epoch numerics alongside formatted
         # dates (widen(T_INT, T_DATE) = T_DATE; the reference converts both
         # via dateparse.ParseAny) — collect the epoch sentinel for them.
-        sh = _epoch_shape(v)
+        sh = _epoch_shape(t)
         if sh is not None:
             if sh not in epoch:
                 epoch.append(sh)
@@ -238,14 +240,7 @@ def observed_date_formats(samples: list[str]) -> list[str]:
         # Collect EVERY matching ladder entry (no break): one python shape
         # can fan out to several Java twins (e.g. %z → XXX and XX), and the
         # full-scan coalesce must be able to try each of them.
-        for i, (pyfmt, _sparkfmt) in enumerate(zip(DATE_FORMATS, SPARK_DATE_FORMATS)):
-            if i in hit:
-                continue
-            try:
-                datetime.strptime(v.strip(), pyfmt)
-                hit.add(i)
-            except ValueError:
-                continue
+        hit.update(i for i, _ in date_ladder_hits(t))
     # If NO ladder format matched (the [:200] sample slice may be all-epoch
     # while the date string that made this column T_DATE sits beyond it),
     # keep the full-ladder fallback — epoch sentinels alone must never
@@ -255,19 +250,23 @@ def observed_date_formats(samples: list[str]) -> list[str]:
 
 
 def infer_types(sample_rows: list[list[str | None]], width: int) -> list[int]:
-    types = [T_NULL] * width
+    """Each column's type: the ``widen`` fold over its sampled cells.
+    ``widen`` is ``max``, so the fold visits each distinct cell once
+    (day, category and flag columns repeat most of their values) and
+    stops once a column pins to STRING, the top of the lattice (a text
+    cell would otherwise run the whole date ladder)."""
+    columns: list[set[str | None]] = [set() for _ in range(width)]
     for row in sample_rows:
-        for i in range(min(width, len(row))):
-            if types[i] == T_STRING:
-                # lattice max — widen(T_STRING, x) is T_STRING for every x,
-                # so the per-cell parse ladder (whose date rung costs ~26
-                # strptime exception attempts on long text cells) is pure
-                # waste once a column has pinned to STRING. Behavior
-                # identical; sample inference on the sf0.1 documents TSV
-                # drops 4.5 s -> ~0.2 s (round 13).
-                continue
-            v = row[i]
-            types[i] = widen(types[i], narrowest_type(v if v is not None else ""))
+        for i, v in enumerate(row[:width]):
+            columns[i].add(v)
+    types = []
+    for cells in columns:
+        t = T_NULL
+        for v in cells:
+            t = widen(t, narrowest_type(v if v is not None else ""))
+            if t == T_STRING:
+                break
+        types.append(t)
     return types
 
 
