@@ -9,10 +9,10 @@ Tables come from these places (superset of the reference, which only
 accepts ``.csv`` paths — utils.go:508,531):
 - file paths (quoted or bare, ``~`` expanded, shard globs allowed), read
   by the format table ``FORMATS``: CSV / TSV through sampling schema
-  inference (sources/csv.py), JSONL with bounded inference
-  (sources/jsonl.py), raw text lines as one ``line`` column, and
-  parquet / ORC typed straight from the file footer; line formats may
-  carry a ``CODECS`` suffix;
+  inference (sources/csv.py, once per file version per engine), JSONL
+  with bounded inference (sources/jsonl.py), raw text lines as one
+  ``line`` column, and parquet / ORC typed straight from the file
+  footer; line formats may carry a ``CODECS`` suffix;
 - names registered via ``register(name, df)`` (engine extension) — dialect
   types derived from the Spark schema.
 
@@ -193,6 +193,8 @@ class CsvEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._registry: dict[str, DataFrame] = {}
+        #: CSV shapes inferred per file version (``sources.csv.read_csv``)
+        self._shapes: dict = {}
 
     def register(self, name: str, df: DataFrame) -> None:
         self._registry[name] = df
@@ -232,6 +234,7 @@ class CsvEngine:
             return read_csv(
                 self.spark, path, noheader=ref.noheader,
                 multiline=ref.multiline, sep=fmt.options["sep"],
+                shapes=self._shapes,
             )
         if fmt.spark == "json":
             from csvtool_spark.sources.jsonl import read_jsonl

@@ -67,6 +67,10 @@ def get_spark(
     )
     conf = dict(_BASE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or par)
+    # A limit collect (the GUI's clipped display, the inference head)
+    # scans one wave of partitions in its first job, not one partition:
+    # a selective query then finishes in one job instead of two.
+    conf["spark.sql.limit.initialNumPartitions"] = str(par)
     conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     if extra_conf:
         conf.update(extra_conf)

@@ -17,18 +17,27 @@ JVM-side expressions:
   (utils.go:384, selector.go:302-304)
 
 The cast pipeline is pure pyspark.sql.functions — no UDFs, so the casts
-stay in codegen. Inference is not free, though: every read collects the
-head to the driver and folds it in Python, once per distinct cell value
-and column. Each cell runs the int/float/duration regexes and then one
-compiled-regex test per date-ladder format (``dialect.types
-.date_ladder_hits``); ``datetime.strptime`` runs only on a regex hit.
-That fold, not the head read, is most of a small query's fixed cost.
+stay in codegen. Inference is not free, though: Spark's header job, the
+head collect, and a Python fold over the head that visits each distinct
+cell value of each column once. Each cell runs the int/float/duration
+regexes and then one compiled-regex test per date-ladder format
+(``dialect.types.date_ladder_hits``); ``datetime.strptime`` runs only on
+a regex hit. So ``CsvEngine`` memoizes the inferred ``Shape`` per file
+version (``file_signature``): an unchanged file is inferred once per
+engine, and later queries scan it with the cached all-string schema and
+cast projection.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import stat
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from csvtool_spark.dialect.types import (
     EPOCH_S_MAX,
@@ -241,10 +250,10 @@ def observed_date_formats(samples: list[str]) -> list[str]:
         # can fan out to several Java twins (e.g. %z → XXX and XX), and the
         # full-scan coalesce must be able to try each of them.
         hit.update(i for i, _ in date_ladder_hits(t))
-    # If NO ladder format matched (the [:200] sample slice may be all-epoch
-    # while the date string that made this column T_DATE sits beyond it),
-    # keep the full-ladder fallback — epoch sentinels alone must never
-    # narrow a DATE column into silently nulling its formatted cells.
+    # If NO ladder format matched (the cells given may be all-epoch while
+    # the date string that made the column T_DATE is not among them), keep
+    # the full-ladder fallback — epoch sentinels alone must never narrow a
+    # DATE column into silently nulling its formatted cells.
     ladder = [SPARK_DATE_FORMATS[i] for i in sorted(hit)] or SPARK_DATE_FORMATS
     return ladder + epoch
 
@@ -270,41 +279,41 @@ def infer_types(sample_rows: list[list[str | None]], width: int) -> list[int]:
     return types
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    noheader: bool = False,
-    multiline: bool = False,
-    epoch_promotion: bool = True,
-    sep: str = ",",
-) -> tuple[DataFrame, list[str], list[int]]:
-    """Read a CSV with inferred dialect types.
+class Shape(NamedTuple):
+    """What inference learns about one version of a CSV file: the column
+    names (Spark's header names, with its own renaming of duplicate and
+    empty headers, or ``col1..colN`` under ``noheader``), each column's
+    dialect type, and the date formats of each DATE column."""
 
-    ``multiline=True`` supports quoted fields containing newlines (the
-    reference's encoding/csv always does) at the cost of intra-file split
-    parallelism — Spark must read each multiline file as one unit, so keep
-    it off for large single files and shard such data upstream.
+    names: list[str]
+    types: list[int]
+    date_formats: dict[int, list[str]]
 
-    ``epoch_promotion=False`` disables the column-level epoch-timestamp
-    promotion (see ``_epoch_shape`` for the numeric-ID hazard it trades
-    against); epoch cells inside mixed DATE columns still convert.
 
-    Returns (typed DataFrame, display names, dialect type per column).
-    """
-    raw = (
-        spark.read.option("header", "false" if noheader else "true")
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("sep", sep)
-        .option("multiLine", "true" if multiline else "false")
-        .option("mode", "PERMISSIVE")
-        .csv(path)
-    )
-    if noheader:
-        names = [f"col{i + 1}" for i in range(len(raw.columns))]
-        raw = raw.toDF(*names)
-    else:
-        names = list(raw.columns)
+def file_signature(path: str) -> tuple | None:
+    """``(path, size, mtime_ns, ctime_ns, inode)`` of every regular file
+    ``path`` names or its glob matches: the quick check rsync and
+    CPython's ``.pyc`` invalidation use. None when the path reaches a
+    directory (Spark lists its files itself) or nothing."""
+    paths = set(glob.glob(path, include_hidden=True))
+    if os.path.exists(path):
+        paths.add(path)
+    sig = []
+    try:
+        for p in sorted(paths):
+            st = os.stat(p)
+            if not stat.S_ISREG(st.st_mode):
+                return None
+            sig.append((p, st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino))
+    except OSError:
+        return None
+    return tuple(sig) or None
+
+
+def infer_shape(raw: DataFrame, epoch_promotion: bool) -> Shape:
+    """The shape of the all-string scan ``raw``: its first
+    ``SAMPLE_ROWS`` rows, collected and folded on the driver."""
+    names = list(raw.columns)
     sample = [[row[i] for i in range(len(names))] for row in raw.limit(SAMPLE_ROWS).collect()]
     types = infer_types(sample, len(names))
     # Lock DATE casts to the observed formats (usually one) so the full
@@ -312,8 +321,9 @@ def read_csv(
     fmts: dict[int, list[str]] = {}
     for i, t in enumerate(types):
         if t == T_DATE:
-            vals = [r[i] for r in sample if r[i] is not None][:200]
-            fmts[i] = observed_date_formats(vals)
+            # every sampled cell: a format first seen late in the sample
+            # would otherwise read as null in the full scan
+            fmts[i] = observed_date_formats([r[i] for r in sample if r[i] is not None])
         elif t == T_INT and epoch_promotion:
             # Column-level epoch promotion: an INT column whose every
             # sampled value is a 10-digit epoch-second (or 13-digit milli)
@@ -327,20 +337,84 @@ def read_csv(
                 for r in sample
                 if r[i] is not None and not is_null_token(r[i].strip())
             ]
-            shapes = {_epoch_shape(v) for v in vals}
-            if vals and None not in shapes and len(shapes) == 1:
+            kinds = {_epoch_shape(v) for v in vals}
+            if vals and None not in kinds and len(kinds) == 1:
                 types[i] = T_DATE
-                fmts[i] = [shapes.pop()]
+                fmts[i] = [kinds.pop()]
+    return Shape(names, types, fmts)
+
+
+def typed_projection(shape: Shape) -> list[Column]:
+    """The cast of each all-string column of ``shape`` to its dialect
+    type. The casts name their input columns unresolved, so one list
+    serves every later scan of the same file version; building it costs
+    hundreds of py4j calls."""
     # Backtick-quote raw column references: a header like 'a.b' would
     # otherwise parse as struct-field access and crash the read.
-    typed = raw.select(
-        *[
-            cast_column(
-                F.col("`" + raw.columns[i].replace("`", "``") + "`"),
-                types[i],
-                fmts.get(i),
-            ).alias(names[i])
-            for i in range(len(names))
-        ]
+    return [
+        cast_column(
+            F.col("`" + n.replace("`", "``") + "`"),
+            shape.types[i],
+            shape.date_formats.get(i),
+        ).alias(n)
+        for i, n in enumerate(shape.names)
+    ]
+
+
+def read_csv(
+    spark: SparkSession,
+    path: str,
+    noheader: bool = False,
+    multiline: bool = False,
+    epoch_promotion: bool = True,
+    sep: str = ",",
+    shapes: dict | None = None,
+) -> tuple[DataFrame, list[str], list[int]]:
+    """Read a CSV with inferred dialect types.
+
+    ``multiline=True`` supports quoted fields containing newlines (the
+    reference's encoding/csv always does) at the cost of intra-file split
+    parallelism — Spark must read each multiline file as one unit, so keep
+    it off for large single files and shard such data upstream.
+
+    ``epoch_promotion=False`` disables the column-level epoch-timestamp
+    promotion (see ``_epoch_shape`` for the numeric-ID hazard it trades
+    against); epoch cells inside mixed DATE columns still convert.
+
+    ``shapes`` is the caller's memo of inferred shapes (``CsvEngine``
+    keeps one): one entry per path and read options, valid while
+    ``file_signature`` is unchanged. On a hit the scan gets the cached
+    all-string schema, so Spark runs no header job and nothing is
+    sampled, and the cached ``typed_projection`` casts it; the data
+    itself is scanned fresh every time. A directory path is never
+    memoized.
+
+    Returns (typed DataFrame, display names, dialect type per column).
+    """
+    reader = (
+        spark.read.option("header", "false" if noheader else "true")
+        .option("quote", '"')
+        .option("escape", '"')
+        .option("sep", sep)
+        .option("multiLine", "true" if multiline else "false")
+        .option("mode", "PERMISSIVE")
     )
-    return typed, names, types
+    key = (path, noheader, multiline, sep, epoch_promotion)
+    sig = file_signature(path) if shapes is not None else None
+    memo = shapes.get(key) if sig is not None else None
+    if memo is not None and memo[0] == sig:
+        _, shape, projection = memo
+        raw = reader.schema(
+            T.StructType([T.StructField(n, T.StringType()) for n in shape.names])
+        ).csv(path)
+    else:
+        raw = reader.csv(path)
+        if noheader:
+            raw = raw.toDF(*[f"col{i + 1}" for i in range(len(raw.columns))])
+        shape = infer_shape(raw, epoch_promotion)
+        projection = typed_projection(shape)
+        if sig is not None:
+            # concurrent misses may both infer; either write wins
+            shapes[key] = (sig, shape, projection)
+    # copies: the memo's shape is shared by every later read
+    return raw.select(*projection), list(shape.names), list(shape.types)

@@ -24,3 +24,24 @@ def duck():
     from csvtool_spark.oracle import duck_connect
 
     return duck_connect(SF_SMALL)
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), number of Spark jobs fn submitted)``,
+    counted under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-{uuid.uuid4().hex[:12]}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -6,12 +6,14 @@ header names Spark would otherwise parse as struct access."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 
 from csvtool_spark.dialect.types import (
     T_DATE,
     T_DURATION,
+    T_INT,
     T_STRING,
     narrowest_type,
 )
@@ -304,9 +306,9 @@ def test_epoch_cast_range_guard(spark):
 
 
 def test_observed_formats_keep_ladder_fallback_when_only_epoch_sampled():
-    # a DATE column whose first 200 non-null values are all epoch must not
-    # lose the format ladder — the date string that made it DATE may sit
-    # beyond the [:200] slice
+    # cells that are all epoch must not narrow a DATE column off the
+    # format ladder — the date string that made it DATE may not be among
+    # them
     from csvtool_spark.sources.csv import (
         EPOCH_SECONDS,
         SPARK_DATE_FORMATS,
@@ -320,3 +322,284 @@ def test_observed_formats_keep_ladder_fallback_when_only_epoch_sampled():
     fmts2 = observed_date_formats(["2021-01-01", "1609459200"])
     assert "yyyy-MM-dd" in fmts2 and fmts2[-1] == EPOCH_SECONDS
     assert len(fmts2) < 6
+
+
+def test_date_formats_seen_after_the_200th_sampled_cell(spark, tmp_path):
+    # the full scan tries the formats of EVERY sampled date cell: a second
+    # format first seen past the 200th cell must not read as null
+    rows = [f"{i},2020-01-{i % 28 + 1:02d}" for i in range(250)]
+    rows += [f"{i},3/{i % 28 + 1}/2021" for i in range(250, 300)]
+    path = _write(tmp_path, "late_format.csv", "id,d\n" + "\n".join(rows) + "\n")
+    df, _, types = read_csv(spark, path)
+    assert types[1] == T_DATE
+    by_id = {r.id: r.d for r in df.collect()}
+    assert len(by_id) == 300 and None not in by_id.values()
+    assert by_id[0] == datetime.datetime(2020, 1, 1)
+    assert by_id[299] == datetime.datetime(2021, 3, 20)
+
+
+# ---------------------------------------------------------------------------
+# the engine's shape memo: one inference per file version
+# ---------------------------------------------------------------------------
+
+_VIOLATIONS = "tests/data/violations.csv"
+
+
+def _file(name: str, text: str, query: str):
+    def write(tmp_path):
+        (tmp_path / name).write_text(text)
+        return lambda eng: eng.sql(query.format(d=tmp_path))
+
+    return write
+
+
+def _gzip_violations(tmp_path):
+    import gzip
+    import shutil
+
+    with open(_VIOLATIONS, "rb") as f, gzip.open(tmp_path / "v.csv.gz", "wb") as g:
+        shutil.copyfileobj(f, g)
+    return lambda eng: eng.sql(f"select * from '{tmp_path}/v.csv.gz'")
+
+
+def _shard_violations(tmp_path):
+    with open(_VIOLATIONS) as f:
+        head, *body = f.readlines()
+    for k in range(3):
+        (tmp_path / f"part{k}.csv").write_text(head + "".join(body[k::3]))
+    return lambda eng: eng.sql(f"select * from '{tmp_path}/part*.csv'")
+
+
+def _epoch(promote: bool):
+    # the dialect has no epoch switch, so these read through read_csv with
+    # the engine's memo
+    def write(tmp_path):
+        path = _write(tmp_path, "e.csv", "id,created\n1,1609459200\n2,1612137600\n")
+        return lambda eng: read_csv(
+            eng.spark, path, epoch_promotion=promote, shapes=eng._shapes
+        )[0]
+
+    return write
+
+
+#: name -> writes the case's files under a directory and returns a
+#: reader of them through a given engine
+_SHAPES = {
+    "dotted_duplicate_empty_headers": _file(
+        "h.csv", "a.b,a,a,,x\n1,p,2020-01-01,3,1.5\n2,q,2020-01-02,,NA\n",
+        "select * from '{d}/h.csv'"),
+    "nh_option": _file(
+        "nh.csv", "1,x,10 days\n2,y,3h\n3,,NA\n", "nh select * from '{d}/nh.csv'"),
+    "tsv": _file(
+        "t.tsv", "id\tname\tts\n1\ta,b\t2021-03-04 10:00:00\n2\tc\t\n",
+        "select * from '{d}/t.tsv'"),
+    "csv_gz": _gzip_violations,
+    "multiline_quoted": _file(
+        "ml.csv", 'id,note,n\n1,"line one\nline two",3\n2,"a ""q""",4\n',
+        "select * from '{d}/ml.csv' ml"),
+    "ragged_rows": _file(
+        "r.csv", "a,b,c\n1,2\n3,4,5,6\n7,8,9\n", "select * from '{d}/r.csv'"),
+    "shard_glob": _shard_violations,
+    "epoch_promotion_on": _epoch(True),
+    "epoch_promotion_off": _epoch(False),
+}
+
+
+def _rows(df) -> list:
+    return sorted(map(repr, df.collect()))
+
+
+@pytest.fixture
+def count_inference(monkeypatch):
+    """The number of ``infer_types`` calls so far (one per inferred file)."""
+    import csvtool_spark.sources.csv as csv_source
+
+    calls = []
+    infer = csv_source.infer_types
+
+    def counted(*a, **k):
+        calls.append(1)
+        return infer(*a, **k)
+
+    monkeypatch.setattr(csv_source, "infer_types", counted)
+    return lambda: len(calls)
+
+
+@pytest.mark.parametrize("case", sorted(_SHAPES))
+def test_warm_read_equals_cold_read(spark, tmp_path, count_inference, case):
+    from csvtool_spark.engine import CsvEngine
+
+    read = _SHAPES[case](tmp_path)
+    eng = CsvEngine(spark)
+    read(eng)
+    inferred = count_inference()
+    warm = read(eng)
+    assert count_inference() == inferred  # the second read is a memo hit
+    cold = read(CsvEngine(spark))
+    assert warm.columns == cold.columns
+    assert warm.dtypes == cold.dtypes
+    assert _rows(warm) == _rows(cold)
+
+
+def test_epoch_promotion_settings_are_separate_entries(spark, tmp_path):
+    path = _write(tmp_path, "e.csv", "id,created\n1,1609459200\n2,1612137600\n")
+    shapes: dict = {}
+    for _ in range(2):
+        on = read_csv(spark, path, epoch_promotion=True, shapes=shapes)[2]
+        off = read_csv(spark, path, epoch_promotion=False, shapes=shapes)[2]
+        assert (on[1], off[1]) == (T_DATE, T_INT)
+    assert len(shapes) == 2
+
+
+def _rewrite_header(p):
+    p.write_text("id,when\n1,2021-01-01\n2,2021-01-02\n")
+
+
+def _rewrite_types(p):
+    p.write_text("id,name\n1,x\n2,y\n")
+
+
+def _same_size_then_utime(p):
+    st = p.stat()
+    p.write_text("id,name\n1,x\n2,y\n".replace("1", "9"))
+    assert p.stat().st_size == st.st_size
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+
+
+def _append_rows(p):
+    with open(p, "a") as f:
+        f.write("3,text\n")
+
+
+def _add_shard(p):
+    p.with_name("f2.csv").write_text("id,name\n3,text\n")
+
+
+@pytest.mark.parametrize(
+    "change",
+    [_rewrite_header, _rewrite_types, _same_size_then_utime, _append_rows, _add_shard],
+    ids=lambda f: f.__name__.strip("_"),
+)
+def test_changed_file_is_inferred_again(spark, tmp_path, count_inference, change):
+    from csvtool_spark.engine import CsvEngine
+
+    p = tmp_path / "f.csv"
+    p.write_text("id,name\n1,7\n2,8\n")
+    # a glob, so that a new matching shard is a change too
+    q = f"select * from '{tmp_path}/f*.csv'"
+    eng = CsvEngine(spark)
+    eng.sql(q)
+    change(p)
+    before = count_inference()
+    got = eng.sql(q)
+    assert count_inference() == before + 1
+    fresh = CsvEngine(spark).sql(q)
+    assert got.columns == fresh.columns and got.dtypes == fresh.dtypes
+    assert _rows(got) == _rows(fresh)
+
+
+def test_deleted_file_still_fails_to_open(spark, tmp_path):
+    from csvtool_spark.dialect.errors import SemanticError
+    from csvtool_spark.engine import CsvEngine
+
+    p = tmp_path / "gone.csv"
+    p.write_text("id\n1\n")
+    eng = CsvEngine(spark)
+    eng.sql(f"select * from '{p}'")
+    p.unlink()
+    with pytest.raises(SemanticError, match="cannot open file"):
+        eng.sql(f"select * from '{p}'")
+
+
+def test_failed_inference_leaves_no_entry(spark, tmp_path, monkeypatch):
+    import csvtool_spark.sources.csv as csv_source
+    from csvtool_spark.engine import CsvEngine
+
+    p = _write(tmp_path, "f.csv", "id\n1\n")
+    eng = CsvEngine(spark)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("inference failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(csv_source, "infer_types", boom)
+        with pytest.raises(RuntimeError):
+            eng.sql(f"select * from '{p}'")
+    assert eng._shapes == {}
+    assert eng.sql(f"select * from '{p}'").collect()[0].id == 1
+
+
+def test_directory_path_is_never_memoized(spark, tmp_path):
+    from csvtool_spark.engine import CsvEngine
+    from csvtool_spark.sources.csv import file_signature
+
+    d = tmp_path / "dir.csv"
+    d.mkdir()
+    (d / "part-0.csv").write_text("id\n1\n")
+    assert file_signature(str(d)) is None
+    eng = CsvEngine(spark)
+    assert eng.sql(f"select * from '{d}'").collect()[0].id == 1
+    assert eng._shapes == {}
+
+
+def test_warm_sql_submits_no_jobs(spark, tmp_path, count_jobs, count_inference,
+                                  monkeypatch):
+    """Work-count guard: a cold read costs Spark's header job and the head
+    collect per file; a warm ``engine.sql`` on unchanged files submits no
+    job before its action, folds nothing and builds no cast."""
+    import csvtool_spark.sources.csv as csv_source
+    from csvtool_spark.engine import CsvEngine
+
+    casts = []
+    cast = csv_source.cast_column
+    monkeypatch.setattr(
+        csv_source, "cast_column", lambda *a, **k: casts.append(1) or cast(*a, **k)
+    )
+
+    a = _write(tmp_path, "a.csv", "k,v\n1,2021-01-01\n2,2021-01-02\n")
+    b = _write(tmp_path, "b.csv", "k,w\n1,x\n2,y\n")
+    q = f"select a.k a.v b.w from '{a}' a join '{b}' b on a.k = b.k"
+    eng = CsvEngine(spark)
+    _, cold_jobs = count_jobs(lambda: eng.sql(q))
+    assert cold_jobs == 2 * 2 and count_inference() == 2 and len(casts) == 4
+    df, warm_jobs = count_jobs(lambda: eng.sql(q))
+    assert warm_jobs == 0 and count_inference() == 2 and len(casts) == 4
+    assert len(df.collect()) == 2
+
+
+def test_concurrent_reads_share_one_memo(spark, tmp_path):
+    """Server threads race on a miss: each may infer, either write wins,
+    and every read sees the file's own shape."""
+    import sys
+    import threading
+
+    from csvtool_spark.engine import CsvEngine
+    from csvtool_spark.sources.csv import file_signature
+
+    p = _write(tmp_path, "f.csv", "id,d\n1,2021-01-01\n2,3/4/2021\n")
+    eng = CsvEngine(spark)
+    results, errors = [], []
+
+    def query():
+        try:
+            for _ in range(2):
+                df = eng.sql(f"select * from '{p}'")
+                results.append((df.dtypes, _rows(df)))
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=query) for _ in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(results) == 12 and len(set(map(repr, results))) == 1
+    assert results[0][0] == [("id", "bigint"), ("d", "timestamp")]
+    (sig, _shape, _projection), = eng._shapes.values()
+    assert sig == file_signature(p)

@@ -871,3 +871,34 @@ def test_explain_surface_pins_parquet_pushdown(eng):
     assert "GreaterThan(l_quantity,30" in pushed[1].split("]", 1)[0], plan
     schema = plan.split("ReadSchema:", 1)[1].split("\n", 1)[0]
     assert "l_returnflag" in schema and "l_shipdate" not in schema, schema
+
+
+def test_query_response_warm_query_submits_only_the_collect(spark, tmp_path, count_jobs):
+    """A repeated query reuses the file's inferred shape: it submits the
+    display collect's jobs and neither of inference's two (Spark's header
+    job and the head collect)."""
+    import shutil
+
+    src = tmp_path / "v.csv"
+    shutil.copy("tests/data/violations.csv", src)
+    q = f"select plate fine from '{src}' where fine > 100"
+    eng = CsvEngine(spark)
+    cold, cold_jobs = count_jobs(lambda: query_response(eng, q))
+    warm, warm_jobs = count_jobs(lambda: query_response(eng, q))
+    assert warm["entries"] == cold["entries"]
+    show = cold["entries"][0]["showLimit"]
+    _, collect_jobs = count_jobs(lambda: eng.sql(q).limit(show + 1).collect())
+    assert warm_jobs == collect_jobs == cold_jobs - 2
+
+
+def test_display_collect_of_a_selective_query_is_one_job(spark, count_jobs):
+    """The display collect scans one wave of partitions first: rows that
+    only the last partition holds arrive in one job, not in a one-partition
+    probe followed by a second job over the rest."""
+    from csvtool_spark.session import default_parallelism
+
+    par = default_parallelism()
+    df = spark.range(0, 100 * par, 1, par).filter(f"id >= {100 * par - 5}")
+    rows, jobs = count_jobs(lambda: df.limit(10).collect())
+    assert [r.id for r in rows] == list(range(100 * par - 5, 100 * par))
+    assert jobs == 1
