@@ -9,10 +9,10 @@ Tables come from these places (superset of the reference, which only
 accepts ``.csv`` paths — utils.go:508,531):
 - file paths (quoted or bare, ``~`` expanded, shard globs allowed), read
   by the format table ``FORMATS``: CSV / TSV through sampling schema
-  inference (sources/csv.py, once per file version per engine), JSONL
-  with bounded inference (sources/jsonl.py), raw text lines as one
-  ``line`` column, and parquet / ORC typed straight from the file
-  footer; line formats may carry a ``CODECS`` suffix;
+  inference (sources/csv.py), JSONL with bounded inference
+  (sources/jsonl.py), raw text lines as one ``line`` column, and parquet
+  / ORC typed from the file footer, each inferred once per file version
+  (sources/cache.py); line formats may carry a ``CODECS`` suffix;
 - names registered via ``register(name, df)`` (engine extension) — dialect
   types derived from the Spark schema.
 
@@ -23,7 +23,10 @@ reads back and shows in the browser."""
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,7 +46,9 @@ from csvtool_spark.dialect.types import (
     T_STRING,
 )
 from csvtool_spark.functions.caching import persist_scope
+from csvtool_spark.sources.cache import SourceCache
 from csvtool_spark.sources.csv import read_csv
+from csvtool_spark.sources.parquet import read_columnar, read_table
 
 
 def _dialect_type(dt: T.DataType) -> int:
@@ -193,15 +198,13 @@ class CsvEngine:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._registry: dict[str, DataFrame] = {}
-        #: CSV shapes inferred per file version (``sources.csv.read_csv``)
-        self._shapes: dict = {}
+        #: what each reader inferred, per file version
+        self._sources = SourceCache()
 
     def register(self, name: str, df: DataFrame) -> None:
         self._registry[name] = df
 
     def register_dir(self, sf_dir: str, names: list[str]) -> None:
-        from csvtool_spark.sources.parquet import read_table
-
         for n in names:
             self.register(n, read_table(self.spark, sf_dir, n))
 
@@ -217,29 +220,22 @@ class CsvEngine:
         fmt, _codec = file_format(path, "open file")
         if fmt is None:
             raise SemanticError(f"unknown table or file {ref.path!r}")
-        # Shard globs ('shards/*.csv') read as ONE table — the multi-file
-        # scan a single-process engine cannot do; Spark lists and splits
-        # the matches. The existence check becomes "glob matches something
-        # OR the literal name exists" (a file literally named 'data[1].csv'
-        # must not be rejected because '[' looks like a glob); an empty
-        # pattern still fails with a clear error. Hadoop brace globs
-        # ('{a,b}') are not recognized here.
-        import glob
-
-        if not os.path.exists(path) and not (
-            any(ch in path for ch in "*?[") and glob.glob(path)
-        ):
+        # Shard globs ('shards/*.csv') read as ONE table, which Spark lists
+        # and splits. A path exists if the literal name does (a file named
+        # 'data[1].csv') or its glob matches something; an empty pattern
+        # fails here. Hadoop brace globs ('{a,b}') are not recognized.
+        if not os.path.exists(path) and not glob.glob(path):
             raise SemanticError(f"cannot open file {ref.path}")
         if fmt.spark == "csv":
             return read_csv(
                 self.spark, path, noheader=ref.noheader,
                 multiline=ref.multiline, sep=fmt.options["sep"],
-                shapes=self._shapes,
+                cache=self._sources,
             )
         if fmt.spark == "json":
             from csvtool_spark.sources.jsonl import read_jsonl
 
-            return _typed(read_jsonl(self.spark, path))
+            return _typed(read_jsonl(self.spark, path, cache=self._sources))
         if fmt.spark == "text":
             # one row per line, single string column ``line`` — the
             # one-document-per-line corpus shape the curation pipe ingests
@@ -247,7 +243,7 @@ class CsvEngine:
                 self.spark.read.text(path).withColumnRenamed("value", "line")
             )
         # columnar formats are typed straight from the file footer
-        return _typed(getattr(self.spark.read, fmt.spark)(path))
+        return _typed(read_columnar(self.spark, path, fmt.spark, self._sources))
 
     # --- query execution --------------------------------------------------
 
@@ -395,9 +391,6 @@ def write_single_result(df: DataFrame, path: str) -> None:
     extracts go through ``save_csv_dir``), compressed when the name has
     a codec suffix. A name the table does not know gets the reference's
     comma CSV (files.go:85-156)."""
-    import shutil
-    import tempfile
-
     fmt, codec = file_format(path, "save")
     fmt = fmt or FORMATS[DEFAULT_EXT]
     if fmt.columnar:
@@ -452,9 +445,6 @@ def _raw_lines(df: DataFrame, path: str) -> DataFrame:
 def _copy_single_part(tmp_dir: str, path: str) -> None:
     """Copy the one part file Spark wrote under ``tmp_dir`` to ``path``
     (codec suffixes vary, so match any part-* data file)."""
-    import glob
-    import shutil
-
     parts = [
         p for p in glob.glob(f"{tmp_dir}/part-*")
         if not p.endswith(".crc")

@@ -15,13 +15,14 @@ the rule's guard is ``fields.forall(_.deterministic)``, so staging the
 projection with one non-deterministic sentinel column keeps the filter
 ABOVE the projection, where the predicate reads the already-computed
 attribute. The sentinel must survive ColumnPruning, so it is anchored by
-an always-true conjunct in the filter itself (``rand()`` is in [0, 1),
-always >= -1; ``monotonically_increasing_id`` would also work in batch
-but is rejected by the streaming UnsupportedOperationChecker, and the
-dialect per-row stages run on streaming frames too) and dropped by the
-projection the caller puts on top. Scale note: this is pure plan
-shaping — no extra pass, no state; the sentinel is one double per
-in-flight row.
+an always-true conjunct in the filter itself (``rand(0)`` is in [0, 1),
+always >= -1, and its fixed seed gives every build of a statement one
+plan, so one set of generated classes; ``monotonically_increasing_id``
+would also work in batch but is rejected by the streaming
+UnsupportedOperationChecker, and the dialect per-row stages run on
+streaming frames too) and dropped by the projection the caller puts on
+top. Scale note: this is pure plan shaping — no extra pass, no state;
+the sentinel is one double per in-flight row.
 """
 
 from __future__ import annotations
@@ -42,5 +43,5 @@ def filter_computed(df: DataFrame, cond: Column) -> DataFrame:
     expected to project the final column list on top (both to drop the
     staged helper columns and because that top projection is what keeps
     the sentinel out of the result schema)."""
-    anchored = df.select("*", F.rand().alias(_ND))
+    anchored = df.select("*", F.rand(0).alias(_ND))
     return anchored.filter(cond & (F.col(_ND) >= -1.0)).drop(_ND)

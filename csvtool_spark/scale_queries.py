@@ -230,8 +230,6 @@ def _shingle_cte(table: str = "documents") -> str:
     return dedup.shingle_cte_sql(table)
 
 
-_SHINGLE_CTE = _shingle_cte()
-
 _JACC = """round(CAST(len(list_intersect(x.ts, y.ts)) AS DOUBLE)
              / (CASE WHEN len(list_distinct(list_concat(x.ts, y.ts))) > 0
                      THEN CAST(len(list_distinct(list_concat(x.ts, y.ts))) AS DOUBLE)

@@ -22,17 +22,13 @@ head collect, and a Python fold over the head that visits each distinct
 cell value of each column once. Each cell runs the int/float/duration
 regexes and then one compiled-regex test per date-ladder format
 (``dialect.types.date_ladder_hits``); ``datetime.strptime`` runs only on
-a regex hit. So ``CsvEngine`` memoizes the inferred ``Shape`` per file
-version (``file_signature``): an unchanged file is inferred once per
-engine, and later queries scan it with the cached all-string schema and
-cast projection.
+a regex hit. So ``read_csv`` keeps the ``Shape`` and its cast projection
+in the caller's ``SourceCache`` (``sources/cache.py``), once per file
+version.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import stat
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -53,6 +49,7 @@ from csvtool_spark.dialect.types import (
     narrowest_type,
     widen,
 )
+from csvtool_spark.sources.cache import SourceCache
 
 SAMPLE_ROWS = 10_000
 
@@ -88,8 +85,6 @@ SPARK_DATE_FORMATS = [
     "EEE, d MMM yyyy HH:mm:ss",
     "yyyy.M.d",
 ]
-
-_NULL_TOKENS = ("", "null", "na")
 
 #: Sentinel "formats" for unix-epoch numeric timestamps (reference
 #: dateparse.ParseAny accepts bare epoch numerics, utils.go:393). They ride
@@ -227,9 +222,7 @@ def cast_column(col: Column, t: int, date_formats: list[str] | None = None) -> C
         return parse_date_col(base, date_formats)
     if t == T_DURATION:
         return parse_duration_col(base)
-    if t == T_NULL:
-        return base.cast("string")  # all-null column
-    return base.cast("string")
+    return base.cast("string")  # STRING, and NULL: an all-null column
 
 
 def observed_date_formats(samples: list[str]) -> list[str]:
@@ -290,26 +283,6 @@ class Shape(NamedTuple):
     date_formats: dict[int, list[str]]
 
 
-def file_signature(path: str) -> tuple | None:
-    """``(path, size, mtime_ns, ctime_ns, inode)`` of every regular file
-    ``path`` names or its glob matches: the quick check rsync and
-    CPython's ``.pyc`` invalidation use. None when the path reaches a
-    directory (Spark lists its files itself) or nothing."""
-    paths = set(glob.glob(path, include_hidden=True))
-    if os.path.exists(path):
-        paths.add(path)
-    sig = []
-    try:
-        for p in sorted(paths):
-            st = os.stat(p)
-            if not stat.S_ISREG(st.st_mode):
-                return None
-            sig.append((p, st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino))
-    except OSError:
-        return None
-    return tuple(sig) or None
-
-
 def infer_shape(raw: DataFrame, epoch_promotion: bool) -> Shape:
     """The shape of the all-string scan ``raw``: its first
     ``SAMPLE_ROWS`` rows, collected and folded on the driver."""
@@ -368,7 +341,7 @@ def read_csv(
     multiline: bool = False,
     epoch_promotion: bool = True,
     sep: str = ",",
-    shapes: dict | None = None,
+    cache: SourceCache | None = None,
 ) -> tuple[DataFrame, list[str], list[int]]:
     """Read a CSV with inferred dialect types.
 
@@ -381,13 +354,9 @@ def read_csv(
     promotion (see ``_epoch_shape`` for the numeric-ID hazard it trades
     against); epoch cells inside mixed DATE columns still convert.
 
-    ``shapes`` is the caller's memo of inferred shapes (``CsvEngine``
-    keeps one): one entry per path and read options, valid while
-    ``file_signature`` is unchanged. On a hit the scan gets the cached
-    all-string schema, so Spark runs no header job and nothing is
-    sampled, and the cached ``typed_projection`` casts it; the data
-    itself is scanned fresh every time. A directory path is never
-    memoized.
+    ``cache`` keeps the shape and its ``typed_projection`` per file
+    version; without one every call infers. The scan gets the shape's
+    all-string schema, so a hit runs no header job and samples nothing.
 
     Returns (typed DataFrame, display names, dialect type per column).
     """
@@ -399,22 +368,19 @@ def read_csv(
         .option("multiLine", "true" if multiline else "false")
         .option("mode", "PERMISSIVE")
     )
-    key = (path, noheader, multiline, sep, epoch_promotion)
-    sig = file_signature(path) if shapes is not None else None
-    memo = shapes.get(key) if sig is not None else None
-    if memo is not None and memo[0] == sig:
-        _, shape, projection = memo
-        raw = reader.schema(
-            T.StructType([T.StructField(n, T.StringType()) for n in shape.names])
-        ).csv(path)
-    else:
+
+    def infer() -> tuple[Shape, list[Column]]:
         raw = reader.csv(path)
         if noheader:
             raw = raw.toDF(*[f"col{i + 1}" for i in range(len(raw.columns))])
         shape = infer_shape(raw, epoch_promotion)
-        projection = typed_projection(shape)
-        if sig is not None:
-            # concurrent misses may both infer; either write wins
-            shapes[key] = (sig, shape, projection)
-    # copies: the memo's shape is shared by every later read
+        return shape, typed_projection(shape)
+
+    shape, projection = (cache or SourceCache()).lookup(
+        path, ("csv", noheader, multiline, sep, epoch_promotion), infer
+    )
+    raw = reader.schema(
+        T.StructType([T.StructField(n, T.StringType()) for n in shape.names])
+    ).csv(path)
+    # copies: a cached shape is shared by every later read
     return raw.select(*projection), list(shape.names), list(shape.types)

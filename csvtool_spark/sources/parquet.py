@@ -7,16 +7,22 @@ common precision) with pure integer arithmetic, JVM-side. Generated
 testdata has shipped ``events.ts`` both as nanos and as micros across
 rounds, so the conversion only fires when the column actually arrives as a
 long (micros files read natively as TIMESTAMP_NTZ and pass through).
+
+Footer schemas are read once per file version (``read_columnar``, under
+the ``sources/cache.py`` rule), for ``read_table`` and for the parquet
+and ORC files the engine opens.
 """
 
 from __future__ import annotations
 
 import threading
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from csvtool_spark.sources.cache import SourceCache
 
 #: Columns stored as TIMESTAMP(NANOS) in the driver-generated testdata.
 _NANOS_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
@@ -57,45 +63,25 @@ def scoped_nanos_as_long(spark: SparkSession):
                 spark.conf.set(_NANOS_CONF, prev)
 
 
-#: Per-session parquet schema cache: (applicationId, path, mtime_ns) -> schema.
-#: ``spark.read.parquet`` re-infers the schema from file footers on EVERY
-#: call (~95 ms per table measured at sf0.1 — the dominant cost of building
-#: a multi-table query); passing the schema explicitly drops that to ~15 ms.
-#: This caches plan METADATA only — every execution still scans the parquet
-#: files for data — and the mtime key invalidates on rewrite. Keyed by
-#: applicationId so a new session never sees a stale entry. The guide's
-#: "measure first" profiling showed query *construction* (driver-side,
-#: core-count-independent) was ~34% of the bench total; this is the fix.
-_SCHEMA_CACHE: dict[tuple[str, str, int], T.StructType] = {}
+#: ``read_table``'s footer schemas: reading with a cached schema skips
+#: the ~95 ms footer job per table and call (sf0.1).
+_SOURCES = SourceCache()
 
 
-def _table_mtime_ns(path: str) -> int:
-    import os
-
-    try:
-        st = os.stat(path)
-    except OSError:
-        return -1
-    return st.st_mtime_ns
-
-
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path, _table_mtime_ns(path))
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+def read_columnar(spark: SparkSession, path: str, fmt: str, cache: SourceCache):
+    """``spark.read.<fmt>(path)`` for parquet or orc, with the footer
+    schema read once per file version and session (it depends on session
+    conf, ``nanosAsLong``): a hit runs no footer job."""
+    key = (fmt, spark.sparkContext.applicationId)
+    schema = cache.lookup(path, key, lambda: getattr(spark.read, fmt)(path).schema)
+    return getattr(spark.read.schema(schema), fmt)(path)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table, normalizing nanos timestamps."""
     nanos_cols = _NANOS_TS_COLS.get(name, [])
-    if not nanos_cols:
-        return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    with scoped_nanos_as_long(spark):
-        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    with scoped_nanos_as_long(spark) if nanos_cols else nullcontext():
+        df = read_columnar(spark, f"{sf_dir}/{name}.parquet", "parquet", _SOURCES)
     for c in nanos_cols:
         if isinstance(df.schema[c].dataType, T.LongType):
             # Integer division (not /1000.0): epoch-nanos exceed 2^53, double

@@ -6,7 +6,9 @@ header names Spark would otherwise parse as struct access."""
 from __future__ import annotations
 
 import datetime
+import json
 import os
+from typing import Callable, NamedTuple
 
 import pytest
 
@@ -339,10 +341,66 @@ def test_date_formats_seen_after_the_200th_sampled_cell(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# the engine's shape memo: one inference per file version
+# the engine's source cache: one inference per file version, every format
 # ---------------------------------------------------------------------------
 
 _VIOLATIONS = "tests/data/violations.csv"
+
+
+def _csv_line(row: dict) -> str:
+    return ",".join(map(str, row.values()))
+
+
+def _write_csv(p, rows: list[dict]) -> None:
+    p.write_text(",".join(rows[0]) + "\n" + "".join(_csv_line(r) + "\n" for r in rows))
+
+
+def _write_jsonl(p, rows: list[dict]) -> None:
+    p.write_text("".join(json.dumps(r) + "\n" for r in rows))
+
+
+def _write_parquet(p, rows: list[dict]) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.Table.from_pylist(rows), str(p))
+
+
+def _appender(line: Callable):
+    def append(p, row: dict) -> None:
+        with open(p, "a") as f:
+            f.write(line(row) + "\n")
+
+    return append
+
+
+def _append_parquet(p, row: dict) -> None:
+    # a parquet file cannot grow in place: rewrite it one row longer
+    import pyarrow.parquet as pq
+
+    _write_parquet(p, pq.read_table(str(p)).to_pylist() + [row])
+
+
+class _Fmt(NamedTuple):
+    """How a test writes one input format: ``extra`` is the ``name``
+    value of an appended row or a new shard (a text value widens a line
+    format's column; a parquet file keeps its column type), ``reader``
+    the DataFrameReader method its inference calls."""
+
+    ext: str
+    write: Callable
+    append: Callable
+    extra: object
+    reader: str
+
+
+_FMTS = {
+    "csv": _Fmt(".csv", _write_csv, _appender(_csv_line), "text", "csv"),
+    "jsonl": _Fmt(".jsonl", _write_jsonl, _appender(json.dumps), "text", "json"),
+    "parquet": _Fmt(".parquet", _write_parquet, _append_parquet, 9, "parquet"),
+}
+
+_ROWS = [{"id": 1, "name": 7}, {"id": 2, "name": 8}]
 
 
 def _file(name: str, text: str, query: str):
@@ -372,14 +430,47 @@ def _shard_violations(tmp_path):
 
 def _epoch(promote: bool):
     # the dialect has no epoch switch, so these read through read_csv with
-    # the engine's memo
+    # the engine's cache
     def write(tmp_path):
         path = _write(tmp_path, "e.csv", "id,created\n1,1609459200\n2,1612137600\n")
         return lambda eng: read_csv(
-            eng.spark, path, epoch_promotion=promote, shapes=eng._shapes
+            eng.spark, path, epoch_promotion=promote, cache=eng._sources
         )[0]
 
     return write
+
+
+_MIXED_ROWS = [
+    {"id": 1, "v": 1.5, "s": "a", "when": datetime.datetime(2021, 1, 2, 3, 4)},
+    {"id": 2, "v": None, "s": None, "when": None},
+    {"id": 3, "v": -2.0, "s": "c", "when": datetime.datetime(2022, 5, 6)},
+]
+
+
+def _columnar(ext: str):
+    def write(tmp_path):
+        import pyarrow as pa
+
+        table = pa.Table.from_pylist(_MIXED_ROWS)
+        if ext == ".orc":
+            import pyarrow.orc as orc
+
+            orc.write_table(table, str(tmp_path / "t.orc"))
+        else:
+            import pyarrow.parquet as pq
+
+            pq.write_table(table, str(tmp_path / "t.parquet"))
+        return lambda eng: eng.sql(f"select * from '{tmp_path}/t{ext}'")
+
+    return write
+
+
+def _jsonl_shards(tmp_path):
+    for k in range(3):
+        (tmp_path / f"part{k}.jsonl").write_text(
+            f'{{"id": {k}, "tag": "t{k}"}}\n' + ('{"id": 9, "x": 1.5}\n' if k else "")
+        )
+    return lambda eng: eng.sql(f"select * from '{tmp_path}/part*.jsonl'")
 
 
 #: name -> writes the case's files under a directory and returns a
@@ -402,6 +493,14 @@ _SHAPES = {
     "shard_glob": _shard_violations,
     "epoch_promotion_on": _epoch(True),
     "epoch_promotion_off": _epoch(False),
+    "jsonl_mixed_and_missing_fields": _file(
+        "j.jsonl",
+        '{"id": 1, "v": 1.5, "s": "a"}\n{"id": 2, "v": 2}\n'
+        '{"id": 3, "s": null, "extra": true}\nnot json\n',
+        "select * from '{d}/j.jsonl'"),
+    "jsonl_shard_glob": _jsonl_shards,
+    "parquet": _columnar(".parquet"),
+    "orc": _columnar(".orc"),
 }
 
 
@@ -425,16 +524,33 @@ def count_inference(monkeypatch):
     return lambda: len(calls)
 
 
+@pytest.fixture
+def count_misses(monkeypatch):
+    """The number of inferences any ``SourceCache`` ran so far, whatever
+    the format."""
+    from csvtool_spark.sources.cache import SourceCache
+
+    calls = []
+    lookup = SourceCache.lookup
+
+    def counted(self, path, options, infer):
+        return lookup(self, path, options, lambda: calls.append(1) or infer())
+
+    monkeypatch.setattr(SourceCache, "lookup", counted)
+    return lambda: len(calls)
+
+
 @pytest.mark.parametrize("case", sorted(_SHAPES))
-def test_warm_read_equals_cold_read(spark, tmp_path, count_inference, case):
+def test_warm_read_equals_cold_read(spark, tmp_path, count_misses, case):
     from csvtool_spark.engine import CsvEngine
 
     read = _SHAPES[case](tmp_path)
     eng = CsvEngine(spark)
     read(eng)
-    inferred = count_inference()
+    inferred = count_misses()
+    assert inferred >= 1
     warm = read(eng)
-    assert count_inference() == inferred  # the second read is a memo hit
+    assert count_misses() == inferred  # the second read is a cache hit
     cold = read(CsvEngine(spark))
     assert warm.columns == cold.columns
     assert warm.dtypes == cold.dtypes
@@ -442,68 +558,91 @@ def test_warm_read_equals_cold_read(spark, tmp_path, count_inference, case):
 
 
 def test_epoch_promotion_settings_are_separate_entries(spark, tmp_path):
+    from csvtool_spark.sources.cache import SourceCache
+
     path = _write(tmp_path, "e.csv", "id,created\n1,1609459200\n2,1612137600\n")
-    shapes: dict = {}
+    cache = SourceCache()
     for _ in range(2):
-        on = read_csv(spark, path, epoch_promotion=True, shapes=shapes)[2]
-        off = read_csv(spark, path, epoch_promotion=False, shapes=shapes)[2]
+        on = read_csv(spark, path, epoch_promotion=True, cache=cache)[2]
+        off = read_csv(spark, path, epoch_promotion=False, cache=cache)[2]
         assert (on[1], off[1]) == (T_DATE, T_INT)
-    assert len(shapes) == 2
+    assert len(cache.entries) == 2
 
 
-def _rewrite_header(p):
-    p.write_text("id,when\n1,2021-01-01\n2,2021-01-02\n")
+def _rewrite_header(p, fmt):
+    fmt.write(p, [{"id": 1, "when": "2021-01-01"}, {"id": 2, "when": "2021-01-02"}])
 
 
-def _rewrite_types(p):
-    p.write_text("id,name\n1,x\n2,y\n")
+def _rewrite_types(p, fmt):
+    fmt.write(p, [{"id": 1, "name": "x"}, {"id": 2, "name": "y"}])
 
 
-def _same_size_then_utime(p):
+def _same_size_then_utime(p, fmt):
+    # a renamed column of the same length: only the ctime tells the
+    # versions apart once the old mtime is restored
     st = p.stat()
-    p.write_text("id,name\n1,x\n2,y\n".replace("1", "9"))
+    fmt.write(p, [{"id": r["id"], "nick": r["name"]} for r in _ROWS])
     assert p.stat().st_size == st.st_size
-    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
 
 
-def _append_rows(p):
-    with open(p, "a") as f:
-        f.write("3,text\n")
+def _append_rows(p, fmt):
+    fmt.append(p, {"id": 3, "name": fmt.extra})
 
 
-def _add_shard(p):
-    p.with_name("f2.csv").write_text("id,name\n3,text\n")
+def _add_shard(p, fmt):
+    fmt.write(p.with_name("f2" + fmt.ext), [{"id": 3, "name": fmt.extra}])
 
 
+@pytest.mark.parametrize("fmt", sorted(_FMTS))
 @pytest.mark.parametrize(
     "change",
     [_rewrite_header, _rewrite_types, _same_size_then_utime, _append_rows, _add_shard],
     ids=lambda f: f.__name__.strip("_"),
 )
-def test_changed_file_is_inferred_again(spark, tmp_path, count_inference, change):
+def test_changed_file_is_inferred_again(spark, tmp_path, count_misses, change, fmt):
     from csvtool_spark.engine import CsvEngine
 
-    p = tmp_path / "f.csv"
-    p.write_text("id,name\n1,7\n2,8\n")
+    fmt = _FMTS[fmt]
+    p = tmp_path / f"f{fmt.ext}"
+    fmt.write(p, _ROWS)
     # a glob, so that a new matching shard is a change too
-    q = f"select * from '{tmp_path}/f*.csv'"
+    q = f"select * from '{tmp_path}/f*{fmt.ext}'"
     eng = CsvEngine(spark)
     eng.sql(q)
-    change(p)
-    before = count_inference()
+    change(p, fmt)
+    before = count_misses()
     got = eng.sql(q)
-    assert count_inference() == before + 1
+    assert count_misses() == before + 1
     fresh = CsvEngine(spark).sql(q)
     assert got.columns == fresh.columns and got.dtypes == fresh.dtypes
     assert _rows(got) == _rows(fresh)
 
 
-def test_deleted_file_still_fails_to_open(spark, tmp_path):
+def test_rewritten_parquet_table_with_restored_mtime_is_read_fresh(spark, tmp_path):
+    """A rewrite that restores the old mtime is still a new file version:
+    ``read_table`` returns its columns, not the old column all NULL."""
+    from csvtool_spark.sources.parquet import read_table
+
+    p = tmp_path / "t.parquet"
+    _write_parquet(p, [{"a": 1}, {"a": 2}])
+    assert read_table(spark, str(tmp_path), "t").columns == ["a"]
+    st = p.stat()
+    _write_parquet(p, [{"b": 3, "c": "x"}, {"b": 4, "c": "y"}])
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
+    df = read_table(spark, str(tmp_path), "t")
+    assert df.columns == ["b", "c"]
+    assert sorted(tuple(r) for r in df.collect()) == [(3, "x"), (4, "y")]
+
+
+@pytest.mark.parametrize("fmt", sorted(_FMTS))
+def test_deleted_file_still_fails_to_open(spark, tmp_path, fmt):
     from csvtool_spark.dialect.errors import SemanticError
     from csvtool_spark.engine import CsvEngine
 
-    p = tmp_path / "gone.csv"
-    p.write_text("id\n1\n")
+    fmt = _FMTS[fmt]
+    p = tmp_path / f"gone{fmt.ext}"
+    fmt.write(p, _ROWS)
     eng = CsvEngine(spark)
     eng.sql(f"select * from '{p}'")
     p.unlink()
@@ -511,35 +650,41 @@ def test_deleted_file_still_fails_to_open(spark, tmp_path):
         eng.sql(f"select * from '{p}'")
 
 
-def test_failed_inference_leaves_no_entry(spark, tmp_path, monkeypatch):
-    import csvtool_spark.sources.csv as csv_source
+@pytest.mark.parametrize("fmt", sorted(_FMTS))
+def test_failed_inference_leaves_no_entry(spark, tmp_path, monkeypatch, fmt):
+    from pyspark.sql.readwriter import DataFrameReader
+
     from csvtool_spark.engine import CsvEngine
 
-    p = _write(tmp_path, "f.csv", "id\n1\n")
+    fmt = _FMTS[fmt]
+    p = tmp_path / f"f{fmt.ext}"
+    fmt.write(p, _ROWS)
     eng = CsvEngine(spark)
 
     def boom(*_a, **_k):
         raise RuntimeError("inference failed")
 
     with monkeypatch.context() as m:
-        m.setattr(csv_source, "infer_types", boom)
+        m.setattr(DataFrameReader, fmt.reader, boom)
         with pytest.raises(RuntimeError):
             eng.sql(f"select * from '{p}'")
-    assert eng._shapes == {}
+    assert eng._sources.entries == {}
     assert eng.sql(f"select * from '{p}'").collect()[0].id == 1
 
 
-def test_directory_path_is_never_memoized(spark, tmp_path):
+@pytest.mark.parametrize("fmt", sorted(_FMTS))
+def test_directory_path_is_never_memoized(spark, tmp_path, fmt):
     from csvtool_spark.engine import CsvEngine
-    from csvtool_spark.sources.csv import file_signature
+    from csvtool_spark.sources.cache import file_signature
 
-    d = tmp_path / "dir.csv"
+    fmt = _FMTS[fmt]
+    d = tmp_path / f"dir{fmt.ext}"
     d.mkdir()
-    (d / "part-0.csv").write_text("id\n1\n")
+    fmt.write(d / f"part-0{fmt.ext}", _ROWS)
     assert file_signature(str(d)) is None
     eng = CsvEngine(spark)
     assert eng.sql(f"select * from '{d}'").collect()[0].id == 1
-    assert eng._shapes == {}
+    assert eng._sources.entries == {}
 
 
 def test_warm_sql_submits_no_jobs(spark, tmp_path, count_jobs, count_inference,
@@ -567,6 +712,25 @@ def test_warm_sql_submits_no_jobs(spark, tmp_path, count_jobs, count_inference,
     assert len(df.collect()) == 2
 
 
+@pytest.mark.parametrize("fmt, cold", [("jsonl", 2), ("parquet", 1)])
+def test_warm_sql_over_jsonl_and_parquet_submits_no_jobs(
+    spark, tmp_path, count_jobs, fmt, cold
+):
+    """A cold JSONL read costs the head collect and ``spark.read.json``
+    over it, a cold parquet read the footer job; a warm one neither."""
+    from csvtool_spark.engine import CsvEngine
+
+    fmt = _FMTS[fmt]
+    p = tmp_path / f"f{fmt.ext}"
+    fmt.write(p, _ROWS)
+    q = f"select id name from '{p}' where id > 1"
+    eng = CsvEngine(spark)
+    _, cold_jobs = count_jobs(lambda: eng.sql(q))
+    df, warm_jobs = count_jobs(lambda: eng.sql(q))
+    assert (cold_jobs, warm_jobs) == (cold, 0)
+    assert [tuple(r) for r in df.collect()] == [(2, 8)]
+
+
 def test_concurrent_reads_share_one_memo(spark, tmp_path):
     """Server threads race on a miss: each may infer, either write wins,
     and every read sees the file's own shape."""
@@ -574,7 +738,7 @@ def test_concurrent_reads_share_one_memo(spark, tmp_path):
     import threading
 
     from csvtool_spark.engine import CsvEngine
-    from csvtool_spark.sources.csv import file_signature
+    from csvtool_spark.sources.cache import file_signature
 
     p = _write(tmp_path, "f.csv", "id,d\n1,2021-01-01\n2,3/4/2021\n")
     eng = CsvEngine(spark)
@@ -601,5 +765,5 @@ def test_concurrent_reads_share_one_memo(spark, tmp_path):
     assert not any(t.is_alive() for t in threads) and not errors
     assert len(results) == 12 and len(set(map(repr, results))) == 1
     assert results[0][0] == [("id", "bigint"), ("d", "timestamp")]
-    (sig, _shape, _projection), = eng._shapes.values()
+    (sig, (_shape, _projection)), = eng._sources.entries.values()
     assert sig == file_signature(p)

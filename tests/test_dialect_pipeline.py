@@ -139,6 +139,24 @@ def test_quality_min_filters(eng):
     assert len(kept) < len(rows)  # the cut actually bites on this corpus
 
 
+def test_same_pipe_builds_the_same_plan(eng):
+    """``filter_computed``'s sentinel has a fixed seed: two builds of one
+    statement optimize to the same plan, so Spark reuses the generated
+    classes of the first. Expression ids and pyspark's lambda-variable
+    names count up per build and are masked."""
+    import re
+
+    q = "select doc_id, text from documents |> quality(text, min=0.7)"
+
+    def plan() -> str:
+        text = eng.sql(q)._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+|\bx_\d+", "#", text)
+
+    first = plan()
+    assert "__planshape_nd" in first
+    assert plan() == first
+
+
 def test_hash_sample_and_split(eng, docs):
     from csvtool_spark.functions.hashing import md5_prefix_long
     from csvtool_spark.operators.sampling import split_label
