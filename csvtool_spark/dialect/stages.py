@@ -11,6 +11,10 @@ select/where/group/order/limit and see the user-visible output columns.
 Design rules:
 - every stage is a thin adapter over ``csvtool_spark.operators`` — no
   semantics live here, so the SQL surface and the Python API cannot drift;
+- a per-row stage returns steps (``planshape.Select``/``Where``) and
+  never filters itself: ``planshape.place`` places every predicate. The
+  per-row stages are the streaming-safe set; a DataFrame stage (dedup,
+  neardup, ...) declares only the columns it adds or rewrites;
 - stages stay deterministic and cross-engine oracle-pairable (md5 coins,
   md5 MinHash lanes, pure Column expressions) — the dialect surface is the
   reproducibility lane, same policy as the ``sample`` clause;
@@ -21,11 +25,13 @@ Design rules:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from csvtool_spark.dialect import ast
 from csvtool_spark.dialect.errors import SemanticError
+from csvtool_spark.operators.planshape import Select, Where, columns, place
 
 
 def apply_stages(
@@ -34,15 +40,16 @@ def apply_stages(
     """Apply the parsed ``|>`` chain. ``engine`` is the calling CsvEngine —
     table-referencing stages (``decontaminate(..., ref=t)``) resolve their
     ref through it; column-only stages ignore it."""
-    for st in stages:
-        impl = STAGES.get(st.name)
-        if impl is None:
+
+    def bound(st: ast.Stage):
+        if st.name not in STAGES:
             raise SemanticError(
                 f"unknown pipeline stage '{st.name}' (available: "
                 f"{', '.join(sorted(STAGES))})"
             )
-        df = impl(df, st, engine)
-    return df
+        return lambda cur: STAGES[st.name](cur, st, engine)
+
+    return place(df, map(bound, stages))
 
 
 # --- arg plumbing -----------------------------------------------------------
@@ -69,26 +76,32 @@ def _text_arg(df: DataFrame, st: ast.Stage) -> str:
         raise SemanticError(
             f"stage '{st.name}' takes exactly one column argument"
         )
-    col = _resolve_col(df, st, st.args[0])
-    from pyspark.sql import types as T
+    return _typed(df, st, st.args[0], T.StringType, "the column must be a string")
 
+
+def _typed(df: DataFrame, st: ast.Stage, arg, kind: type, what: str) -> str:
+    """``arg``'s column when its type is a ``kind``, else an error saying
+    ``what``."""
+    col = _resolve_col(df, st, arg)
     dt = df.schema[col].dataType
-    if not isinstance(dt, T.StringType):
+    if not isinstance(dt, kind):
         raise SemanticError(
-            f"stage '{st.name}': column '{col}' must be a string "
-            f"(got {dt.simpleString()})"
+            f"stage '{st.name}': {what}; '{col}' is {dt.simpleString()}"
         )
     return col
 
 
-def _id_kwarg(df: DataFrame, st: ast.Stage) -> str:
-    arg = st.kwargs.get("id")
+def _col_kwarg(df: DataFrame, st: ast.Stage, key: str, why: str = "") -> str:
+    arg = st.kwargs.get(key)
     if arg is None:
-        raise SemanticError(
-            f"stage '{st.name}' requires id=<column> (the keep-lowest "
-            "representative rule needs a unique id)"
-        )
+        raise SemanticError(f"stage '{st.name}' requires {key}=<column>{why}")
     return _resolve_col(df, st, arg)
+
+
+def _id_kwarg(df: DataFrame, st: ast.Stage) -> str:
+    return _col_kwarg(
+        df, st, "id", " (the keep-lowest representative rule needs a unique id)"
+    )
 
 
 def _float_kwarg(st: ast.Stage, key: str, default: float | None) -> float | None:
@@ -151,6 +164,17 @@ def _out_name(df: DataFrame, st: ast.Stage, default: str) -> str:
     return name
 
 
+def _fresh(st: ast.Stage, have: list[str], *names: str) -> None:
+    """Reject a fixed output column name the stage appends that ``have``
+    already holds."""
+    taken = {c.lower() for c in have}
+    for n in names:
+        if n.lower() in taken:
+            raise SemanticError(
+                f"stage '{st.name}': output column '{n}' already exists"
+            )
+
+
 def _no_extra_kwargs(st: ast.Stage, allowed: set[str]) -> None:
     extra = set(st.kwargs) - allowed
     if extra:
@@ -196,8 +220,6 @@ def _stage_dedup(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     DESC NULLS LAST, ties → lowest id) — the neardup ``by=`` rule at
     exact granularity. Numeric-only: a string score would ride each
     engine's collation."""
-    from pyspark.sql import Window
-
     from csvtool_spark.operators.dedup import normalized
 
     _no_extra_kwargs(st, {"id", "by"})
@@ -205,14 +227,7 @@ def _stage_dedup(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     by = st.kwargs.get("by")
     order = [F.col(idc)]
     if by is not None:
-        from pyspark.sql.types import NumericType
-
-        byc = _resolve_col(df, st, by)
-        if not isinstance(df.schema[byc].dataType, NumericType):
-            raise SemanticError(
-                f"stage 'dedup': by= needs a numeric score column; "
-                f"'{byc}' is {df.schema[byc].dataType.simpleString()}"
-            )
+        byc = _typed(df, st, by, T.NumericType, "by= needs a numeric score column")
         order = [F.col(byc).desc_nulls_last(), F.col(idc)]
     w = Window.partitionBy("__h").orderBy(*order)
     return (
@@ -273,26 +288,15 @@ def _stage_neardup(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
                 "member) applies only with transitive=1 — the pairwise "
                 "rule has no cluster to pick a best member from"
             )
-        from pyspark.sql.types import NumericType
-
-        byc = _resolve_col(df, st, by)
-        if not isinstance(df.schema[byc].dataType, NumericType):
-            raise SemanticError(
-                f"stage 'neardup': by= needs a numeric score column; "
-                f"'{byc}' is {df.schema[byc].dataType.simpleString()}"
-            )
+        byc = _typed(df, st, by, T.NumericType, "by= needs a numeric score column")
     if transitive:
-        from pyspark.sql.types import IntegralType
-
         # validated with the other arguments, before the pair pipeline
         # is built: a rejected stage builds nothing
-        if not isinstance(df.schema[idc].dataType, IntegralType):
-            raise SemanticError(
-                f"stage 'neardup': transitive=1 needs an integral id "
-                f"column; '{idc}' is "
-                f"{df.schema[idc].dataType.simpleString()} — derive a "
-                f"surrogate long id first, or use transitive=0"
-            )
+        _typed(
+            df, st, st.kwargs["id"], T.IntegralType,
+            "transitive=1 needs an integral id column (derive a surrogate "
+            "long id first, or use transitive=0)",
+        )
     pairs = near_dup_pairs_minhash(
         df,
         text,
@@ -326,7 +330,7 @@ def _stage_neardup(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     return out
 
 
-def _stage_langid(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_langid(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``langid(text [, as=lang_guess] [, keep=en])`` — append the
     n-gram-marker language guess (operators.textstats.lang_id, JVM
     kernel: the dialect surface stays whole-stage-codegen, no Python
@@ -337,7 +341,7 @@ def _stage_langid(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     _no_extra_kwargs(st, {"as", "keep"})
     text = _text_arg(df, st)
     name = _out_name(df, st, "lang_guess")
-    out = df.withColumn(name, lang_id(F.col(text), kernel="jvm"))
+    steps = [columns({name: lang_id(F.col(text), kernel="jvm")})]
     keep = st.kwargs.get("keep")
     if keep is not None:
         # C4-style language gate: keep only the requested guess. Validate
@@ -352,15 +356,11 @@ def _stage_langid(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
                 f"stage 'langid': keep= must be one of "
                 f"{', '.join(sorted(allowed))}; got '{keep.val}'"
             )
-        # gate ABOVE the langid projection (planshape): pushed below, the
-        # packed-marker aggregate fold would run twice per row
-        from csvtool_spark.operators.planshape import filter_computed
-
-        out = filter_computed(out, F.col(name) == F.lit(want))
-    return out
+        steps.append(Where(F.col(name) == F.lit(want), (name,)))
+    return steps
 
 
-def _stage_quality(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_quality(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``quality(text [, min=x] [, as=quality])`` — append the composite
     quality heuristic; with min= also drop rows below the cut (the
     C4-style pre-filter)."""
@@ -369,30 +369,24 @@ def _stage_quality(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     _no_extra_kwargs(st, {"as", "min"})
     text = _text_arg(df, st)
     name = _out_name(df, st, "quality")
-    out = df.withColumn(name, quality_score(F.col(text)))
+    steps = [columns({name: quality_score(F.col(text))})]
     lo = _float_kwarg(st, "min", None)
     if lo is not None:
-        # gate ABOVE the scoring projection: a plain filter is pushed
-        # below it and re-evaluates the whole quality tree (three split
-        # passes per row) in the Filter as well as the Project
-        # (round-14 plan evidence on q_dialect_curate)
-        from csvtool_spark.operators.planshape import filter_computed
-
-        out = filter_computed(out, F.col(name) >= F.lit(lo))
-    return out
+        steps.append(Where(F.col(name) >= F.lit(lo), (name,)))
+    return steps
 
 
-def _stage_tokens(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_tokens(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``tokens(text [, as=n_tokens])`` — whitespace token count."""
     from csvtool_spark.operators.textstats import token_count
 
     _no_extra_kwargs(st, {"as"})
     text = _text_arg(df, st)
     name = _out_name(df, st, "n_tokens")
-    return df.withColumn(name, token_count(F.col(text)))
+    return [columns({name: token_count(F.col(text))})]
 
 
-def _stage_fingerprint(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_fingerprint(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``fingerprint(text [, as=content_fp])`` — order-independent content
     fingerprint (md5 of the sorted distinct token set)."""
     from csvtool_spark.operators.textstats import content_fingerprint
@@ -400,20 +394,20 @@ def _stage_fingerprint(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     _no_extra_kwargs(st, {"as"})
     text = _text_arg(df, st)
     name = _out_name(df, st, "content_fp")
-    return df.withColumn(name, content_fingerprint(F.col(text)))
+    return [columns({name: content_fingerprint(F.col(text))})]
 
 
-def _stage_pii_scrub(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_pii_scrub(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``pii_scrub(text)`` — replace the column in place with every PII
     match substituted by its <TYPE> token (operators.redact patterns)."""
     from csvtool_spark.operators.redact import redact_pii
 
     _no_extra_kwargs(st, set())
     text = _text_arg(df, st)
-    return df.withColumn(text, redact_pii(F.col(text)))
+    return [columns({text: redact_pii(F.col(text))})]
 
 
-def _stage_hash_sample(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_hash_sample(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``hash_sample(frac, key=k)`` — deterministic keyed Bernoulli thinning:
     keep rows whose 32-bit md5 coin on the KEY falls under frac. Unlike the
     ``sample`` clause (scan-order numbering — a range shuffle + count job),
@@ -440,17 +434,14 @@ def _stage_hash_sample(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
         ) from None
     if not 0.0 <= frac <= 1.0:
         raise SemanticError("stage 'hash_sample': fraction must be in [0, 1]")
-    key = st.kwargs.get("key")
-    if key is None:
-        raise SemanticError("stage 'hash_sample' requires key=<column>")
-    keyc = _resolve_col(df, st, key)
+    keyc = _col_kwarg(df, st, "key")
     coin = md5_prefix_long(
         F.concat(F.lit("hash_sample:"), F.col(keyc).cast("string"))
     )
-    return df.filter(coin < F.lit(int(frac * 4294967296)))
+    return [Where(coin < F.lit(int(frac * 4294967296)), (keyc,))]
 
 
-def _stage_split(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_split(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``split(key=k, train=0.9, test=0.1 [, as=split])`` — deterministic
     key-hash split labels (operators.sampling.hash_split buckets). Every
     non-reserved kwarg is a label=fraction pair.
@@ -465,10 +456,7 @@ def _stage_split(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     item 7). NULL keys get a NULL label."""
     from csvtool_spark.operators.sampling import split_label
 
-    key = st.kwargs.get("key")
-    if key is None:
-        raise SemanticError("stage 'split' requires key=<column>")
-    keyc = _resolve_col(df, st, key)
+    keyc = _col_kwarg(df, st, "key")
     if st.args:
         raise SemanticError("stage 'split' takes keyword arguments only")
     name = _out_name(df, st, "split")
@@ -490,7 +478,7 @@ def _stage_split(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
         expr = split_label(F.col(keyc), fractions)
     except ValueError as e:  # fractions sum > 1
         raise SemanticError(f"stage 'split': {e}") from None
-    return df.withColumn(name, expr)
+    return [columns({name: expr})]
 
 
 def _stage_decontaminate(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
@@ -639,33 +627,19 @@ def _stage_quota(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     cap = _int_kwarg(st, "cap", 0)
     if cap < 1:
         raise SemanticError("stage 'quota' requires cap=<positive integer>")
-    order = st.kwargs.get("order")
-    if order is None:
-        raise SemanticError(
-            "stage 'quota' requires order=<column> (the deterministic "
-            "keep rule)"
-        )
+    order = _col_kwarg(df, st, "order", " (the deterministic keep rule)")
     tie = st.kwargs.get("tie")
     tiec = _resolve_col(df, st, tie) if tie is not None else None
     tok = st.kwargs.get("tokens")
     if tok is not None:
-        from pyspark.sql.types import NumericType
-
-        tokc = _resolve_col(df, st, tok)
-        if not isinstance(df.schema[tokc].dataType, NumericType):
-            raise SemanticError(
-                f"stage 'quota': tokens= needs a numeric count column; "
-                f"'{tokc}' is {df.schema[tokc].dataType.simpleString()}"
-            )
-        return token_quota(
-            df, group, _resolve_col(df, st, order), tokc, cap, tie_col=tiec
+        tokc = _typed(
+            df, st, tok, T.NumericType, "tokens= needs a numeric count column"
         )
-    return source_quota(
-        df, group, _resolve_col(df, st, order), cap, tie_col=tiec
-    )
+        return token_quota(df, group, order, tokc, cap, tie_col=tiec)
+    return source_quota(df, group, order, cap, tie_col=tiec)
 
 
-def _stage_chunk(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_chunk(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``chunk(text, id=k [, size=128, overlap=16])`` — split documents
     into overlapping token windows (operators.pipeline.chunk_documents):
     the context-length prep before packing/tokenization. One output row
@@ -684,54 +658,23 @@ def _stage_chunk(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
         raise SemanticError(
             f"stage 'chunk': overlap ({overlap}) must be < size ({size})"
         )
-    for extra in ("chunk_id", "n_chunk_tokens"):
-        if extra.lower() in {c.lower() for c in df.columns}:
-            raise SemanticError(
-                f"stage 'chunk': output column '{extra}' already exists"
-            )
+    _fresh(st, df.columns, "chunk_id", "n_chunk_tokens")
     others = tuple(c for c in df.columns if c not in (idc, text))
-    ch = chunk_documents(
-        df, text, idc, chunk_tokens=size, overlap=overlap, extras=others
-    )
-    return ch.select(
-        *[
-            F.col("chunk_text").alias(text) if c == text else F.col(c)
-            for c in df.columns
-        ],
-        F.col("chunk_id"),
-        F.col("n_chunk_tokens"),
-    )
 
+    def build(d: DataFrame) -> DataFrame:
+        ch = chunk_documents(
+            d, text, idc, chunk_tokens=size, overlap=overlap, extras=others
+        )
+        return ch.select(
+            *[
+                F.col("chunk_text").alias(text) if c == text else F.col(c)
+                for c in d.columns
+            ],
+            F.col("chunk_id"),
+            F.col("n_chunk_tokens"),
+        )
 
-#: Stages whose semantics are per-row (projections, filters, bounded
-#: explodes) — legal and IDENTICAL on a Structured Streaming frame. The
-#: multi-pass stages are excluded with streaming twins named in the
-#: error: dedup → dropDuplicatesWithinWatermark (streaming.curated_stream),
-#: decontaminate → the Bloom-literal gate (streaming.decontaminated_stream);
-#: neardup/despan/quota need cross-row aggregation a micro-batch cannot
-#: see past and stay batch-only.
-STREAM_SAFE = {
-    "langid", "quality", "tokens", "fingerprint", "pii_scrub",
-    "hash_sample", "split", "chunk", "bpe", "clean", "gopher", "shard",
-    "normalize", "filter",
-}
-
-
-def _stream_safe(st: ast.Stage) -> bool:
-    """Per-STAGE-CALL streaming legality: unconditional members of
-    STREAM_SAFE, plus ``mixture(rates=1)`` — the apply mode is a pure
-    CASE + coin filter (no global token counts), while share mode stays
-    batch-only. A malformed ``rates=`` value passes the gate on purpose
-    so the user sees the stage's own "expects an integer" error, not a
-    misleading not-streaming-safe one (round-9 review)."""
-    if st.name in STREAM_SAFE:
-        return True
-    if st.name == "mixture":
-        r = st.kwargs.get("rates")
-        if r is None:
-            return False
-        return not r.val.isdigit() or int(r.val) != 0
-    return False
+    return [Select((text, "chunk_id", "n_chunk_tokens"), build)]
 
 
 def apply_stages_streaming(
@@ -740,9 +683,14 @@ def apply_stages_streaming(
     """``apply_stages`` with the streaming gate: reject stages whose
     batch semantics cannot hold per micro-batch, so the SAME stage chain
     text drives batch SQL and a readStream frame with equal results
-    (batch-equality pinned in tests/test_streaming.py)."""
+    (batch-equality pinned in tests/test_streaming.py). Besides
+    STREAM_SAFE, ``mixture(rates=1)`` passes: a pure CASE + coin filter,
+    while share mode needs global token counts. A malformed ``rates=``
+    passes on purpose, so the user sees the stage's own error."""
     for st in stages:
-        if st.name in STAGES and not _stream_safe(st):
+        r = st.kwargs.get("rates")
+        rates = r is not None and (not r.val.isdigit() or int(r.val) != 0)
+        if st.name in FRAME_STAGES and not (st.name == "mixture" and rates):
             raise SemanticError(
                 f"stage '{st.name}' is not streaming-safe (needs cross-row "
                 f"state; streaming twins: dedup -> curated_stream, "
@@ -753,7 +701,7 @@ def apply_stages_streaming(
     return apply_stages(df, stages, engine)
 
 
-def _stage_bpe(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_bpe(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``bpe(text, merges='path' [, as=bpe_tokens])`` — subword-tokenize
     the text column with a TRAINED merge artifact (operators.bpe:
     ``bpe_train`` + ``save_merges`` produce it; the stage loads it with
@@ -773,21 +721,20 @@ def _stage_bpe(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
             "artifact; see operators.bpe.save_merges)"
         )
     name = _out_name(df, st, "bpe_tokens")
-    if (
-        "n_bpe_tokens" in {c.lower() for c in df.columns}
-        or name.lower() == "n_bpe_tokens"
-    ):
-        raise SemanticError(
-            "stage 'bpe': output column 'n_bpe_tokens' already exists "
-            "(the stage appends it alongside the token array)"
-        )
+    # the stage appends n_bpe_tokens alongside the token array
+    _fresh(st, [*df.columns, name], "n_bpe_tokens")
     try:
         merges = load_merges(df.sparkSession, marg.val)
     except Exception as e:  # noqa: BLE001 — surface a dialect-shaped error
         raise SemanticError(
             f"stage 'bpe': cannot load merges from '{marg.val}': {e}"
         ) from None
-    return bpe_encode(df, text, merges, out_col=name)
+    return [
+        Select(
+            (name, "n_bpe_tokens"),
+            lambda d: bpe_encode(d, text, merges, out_col=name),
+        )
+    ]
 
 
 def _stage_pack(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
@@ -811,11 +758,7 @@ def _stage_pack(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     budget = _int_kwarg(st, "budget", 0)
     if budget < 1:
         raise SemanticError("stage 'pack' requires budget=<positive integer>")
-    for extra in ("seq_id", "seq_offset", "n_tok"):
-        if extra.lower() in {c.lower() for c in df.columns}:
-            raise SemanticError(
-                f"stage 'pack': output column '{extra}' already exists"
-            )
+    _fresh(st, df.columns, "seq_id", "seq_offset", "n_tok")
     # NULL counts (a null-text document through the tokens stage) pack as
     # zero-token docs — without the coalesce the explode over a NULL
     # sequence silently DROPS the document (review-confirmed), while the
@@ -831,7 +774,7 @@ def _stage_pack(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     )
 
 
-def _stage_clean(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_clean(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``clean(text [, min_words=3, terminal=1])`` — C4-style cleaning
     (Raffel et al. 2020 §2.2, operators.textstats): the text column is
     rewritten keeping only lines with ≥ min_words words, a
@@ -849,12 +792,14 @@ def _stage_clean(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     term = _int_kwarg(st, "terminal", 1) != 0
     # NULL text is not a page-drop (the flag is NULL there) — it rides
     # through as NULL, same as the Column lane
-    return df.filter(
-        ~F.coalesce(c4_page_flags(F.col(text)), F.lit(False))
-    ).withColumn(
-        text,
-        c4_clean_lines(F.col(text), min_words=mw, require_terminal=term),
-    )
+    return [
+        Where(~F.coalesce(c4_page_flags(F.col(text)), F.lit(False)), (text,)),
+        columns({
+            text: c4_clean_lines(
+                F.col(text), min_words=mw, require_terminal=term
+            )
+        }),
+    ]
 
 
 def _stage_derep(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
@@ -873,7 +818,7 @@ def _stage_derep(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     return _join_back_rewritten(df, rewritten, text, idc)
 
 
-def _stage_gopher(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_gopher(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``gopher(text [, filter=1])`` — Gopher repetition signals
     (Rae et al. 2021 Table A1, line AND paragraph granularity;
     ``textstats.gopher_repetition``): append ``dup_line_frac``,
@@ -895,28 +840,30 @@ def _stage_gopher(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
 
     _no_extra_kwargs(st, {"filter"})
     text = _text_arg(df, st)
-    lower = {c.lower() for c in df.columns}
-    for c in GOPHER_THRESHOLDS:
-        if c in lower:
-            raise SemanticError(
-                f"stage 'gopher': output column '{c}' already exists"
-            )
+    _fresh(st, df.columns, *GOPHER_THRESHOLDS)
     # collision-proof struct alias: a user column literally named '__g'
     # would otherwise make the second select's '__g.*' ambiguous
     # (round-9 third review, verified AnalysisException)
     tmp = "__g"
-    while tmp in lower:
+    while tmp in {c.lower() for c in df.columns}:
         tmp += "_"
-    out = df.select(
-        *df.columns, _gopher_arrow(F.col(text)).alias(tmp)
-    ).select(*df.columns, f"{tmp}.*")
+    steps = [
+        Select(
+            tuple(GOPHER_THRESHOLDS),
+            lambda d: d.select(
+                *d.columns, _gopher_arrow(F.col(text)).alias(tmp)
+            ).select(*d.columns, f"{tmp}.*"),
+        )
+    ]
     if _int_kwarg(st, "filter", 0):
+        keep = F.lit(True)
         for c, thr in GOPHER_THRESHOLDS.items():
-            out = out.filter(F.coalesce(F.col(c), F.lit(0.0)) <= F.lit(thr))
-    return out
+            keep = keep & (F.coalesce(F.col(c), F.lit(0.0)) <= F.lit(thr))
+        steps.append(Where(keep, tuple(GOPHER_THRESHOLDS)))
+    return steps
 
 
-def _stage_filter(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_filter(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``filter(col, min=x [, max=y])`` — inclusive numeric range gate on
     ANY current column, including ones earlier stages appended (the
     query's own WHERE runs before the pipe, so it cannot see
@@ -928,19 +875,12 @@ def _stage_filter(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     Lane rule: integer-lexeme bounds (``min=30``) compare in the exact
     int64 lane on integral columns; fractional bounds (``min=0.5``)
     compare in the double lane, exact only to 2^53 (_num_kwarg)."""
-    from pyspark.sql.types import NumericType
-
     _no_extra_kwargs(st, {"min", "max"})
     if len(st.args) != 1:
         raise SemanticError(
             "stage 'filter' takes exactly one column argument"
         )
-    col = _resolve_col(df, st, st.args[0])
-    if not isinstance(df.schema[col].dataType, NumericType):
-        raise SemanticError(
-            f"stage 'filter': column '{col}' must be numeric "
-            f"(got {df.schema[col].dataType.simpleString()})"
-        )
+    col = _typed(df, st, st.args[0], T.NumericType, "the column must be numeric")
     lo = _num_kwarg(st, "min", None)
     hi = _num_kwarg(st, "max", None)
     if lo is None and hi is None:
@@ -952,10 +892,10 @@ def _stage_filter(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
         cond = cond & (F.col(col) >= F.lit(lo))
     if hi is not None:
         cond = cond & (F.col(col) <= F.lit(hi))
-    return df.filter(cond)
+    return [Where(cond, (col,))]
 
 
-def _stage_normalize(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_normalize(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``normalize(text)`` — rewrite the column in place with
     ``textstats.normalize_text``: C0-control strip (tab/newline kept),
     then NFC composition, then space/tab-run collapse + trim. The pass
@@ -966,10 +906,10 @@ def _stage_normalize(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
 
     _no_extra_kwargs(st, set())
     text = _text_arg(df, st)
-    return df.withColumn(text, normalize_text(F.col(text)))
+    return [columns({text: normalize_text(F.col(text))})]
 
 
-def _stage_shard(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_shard(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``shard(n=N, key=k [, as=shard, repartition=0])`` — deterministic
     output sharding: append ``shard`` = 32-bit md5 coin of
     ``'shard:' + key`` mod N, the balanced write-layout step (md5 is
@@ -990,18 +930,15 @@ def _stage_shard(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     n = _int_kwarg(st, "n", 0)
     if n < 1:
         raise SemanticError("stage 'shard' requires n=<positive integer>")
-    key = st.kwargs.get("key")
-    if key is None:
-        raise SemanticError("stage 'shard' requires key=<column>")
-    keyc = _resolve_col(df, st, key)
+    keyc = _col_kwarg(df, st, "key")
     name = _out_name(df, st, "shard")
     coin = md5_prefix_long(
         F.concat(F.lit("shard:"), F.col(keyc).cast("string"))
     )
-    out = df.withColumn(name, (coin % F.lit(n)).cast("long"))
+    step = columns({name: (coin % F.lit(n)).cast("long")})
     if _int_kwarg(st, "repartition", 0):
-        out = out.repartition(n, F.col(name))
-    return out
+        return [Select(step.names, lambda d: step.build(d).repartition(n, name))]
+    return [step]
 
 
 def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
@@ -1044,6 +981,7 @@ def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
             "stage 'mixture' takes exactly one source column argument"
         )
     source = _resolve_col(df, st, st.args[0])
+    _fresh(st, df.columns, "keep_ppm")
     rates_mode = bool(_int_kwarg(st, "rates", 0))
     temp = _float_kwarg(st, "temperature", None)
     key = st.kwargs.get("key")
@@ -1073,10 +1011,6 @@ def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
                 f"from the corpus — explicit <source>=<ppm> values "
                 f"({', '.join(extra)}) are not allowed"
             )
-        if "keep_ppm" in {c.lower() for c in df.columns}:
-            raise SemanticError(
-                "stage 'mixture': output column 'keep_ppm' already exists"
-            )
         return temperature_mixture(
             df,
             source,
@@ -1097,10 +1031,6 @@ def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
             "stage 'mixture' requires key=<column> and tokens=<column>"
         )
     keyc = _resolve_col(df, st, key)
-    if "keep_ppm" in {c.lower() for c in df.columns}:
-        raise SemanticError(
-            "stage 'mixture': output column 'keep_ppm' already exists"
-        )
     target: dict[str, int] = {}
     for k2, v in st.kwargs.items():
         if k2 in ("key", "tokens", "rates"):
@@ -1127,9 +1057,23 @@ def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     return mixture_resample(df, source, keyc, tokc, target)
 
 
-STAGES = {
-    "dedup": _stage_dedup,
-    "neardup": _stage_neardup,
+def _frame(body, computes=lambda st: ()):
+    """A DataFrame stage as one ``Select``: ``body`` builds the frame,
+    ``computes(st)`` names the columns it adds or rewrites."""
+
+    def stage(df: DataFrame, st: ast.Stage, ctx=None) -> list:
+        return [Select(computes(st), lambda d: body(d, st, ctx))]
+
+    return stage
+
+
+def _text_rewrite(st: ast.Stage) -> tuple[str, ...]:
+    return tuple(a.val for a in st.args[:1])
+
+
+#: per-row stages, built from steps only: legal and IDENTICAL on a
+#: Structured Streaming frame
+ROW_STAGES = {
     "langid": _stage_langid,
     "quality": _stage_quality,
     "tokens": _stage_tokens,
@@ -1137,17 +1081,29 @@ STAGES = {
     "pii_scrub": _stage_pii_scrub,
     "hash_sample": _stage_hash_sample,
     "split": _stage_split,
-    "decontaminate": _stage_decontaminate,
-    "despan": _stage_despan,
-    "quota": _stage_quota,
     "chunk": _stage_chunk,
-    "pack": _stage_pack,
     "bpe": _stage_bpe,
     "clean": _stage_clean,
-    "derep": _stage_derep,
-    "mixture": _stage_mixture,
     "gopher": _stage_gopher,
     "shard": _stage_shard,
     "normalize": _stage_normalize,
     "filter": _stage_filter,
 }
+
+#: DataFrame stages: cross-row passes a micro-batch cannot see past (the
+#: streaming gate's error names the twins of dedup, decontaminate, mixture)
+FRAME_STAGES = {
+    "dedup": _frame(_stage_dedup),
+    "neardup": _frame(_stage_neardup),
+    "decontaminate": _frame(_stage_decontaminate),
+    "despan": _frame(_stage_despan, _text_rewrite),
+    "quota": _frame(_stage_quota),
+    "pack": _frame(_stage_pack, lambda st: ("seq_id", "seq_offset", "n_tok")),
+    "derep": _frame(_stage_derep, _text_rewrite),
+    "mixture": _frame(_stage_mixture, lambda st: ("keep_ppm",)),
+}
+
+STAGES = {**ROW_STAGES, **FRAME_STAGES}
+
+#: the streaming-safe stages, derived: exactly the ones built from steps
+STREAM_SAFE = frozenset(ROW_STAGES)

@@ -38,40 +38,28 @@ def curate(
     """
     from pyspark.sql import Window
 
-    from csvtool_spark.operators.planshape import filter_computed
+    from csvtool_spark.operators.planshape import Where, columns, place
 
     t = F.col(text_col)
-    annotated = df.select(
-        F.col(id_col),
-        t.alias(text_col),
-        textstats.quality_score(t).alias("quality"),
-        textstats.lang_id(t).alias("lang_guess"),
-        textstats.token_count(t).alias("n_tokens"),
-    )
-    # Gate ABOVE the annotate projection (planshape): a plain .filter
-    # pushes the quality predicate below it, re-evaluating the whole
-    # quality tree (three split passes per row) in the Filter and again
-    # in the Project (round-14 plan evidence: the pushed Filter carried
-    # the full CASE/split battery below the ArrowEvalPython node).
-    kept = filter_computed(
-        annotated,
+    annotate = columns({
+        "quality": textstats.quality_score(t),
+        "lang_guess": textstats.lang_id(t),
+        "n_tokens": textstats.token_count(t),
+    })
+    gate = Where(
         (F.col("quality") >= min_quality) & F.col("lang_guess").isin(*languages),
+        ("quality", "lang_guess"),
     )
+    kept = place(df.select(id_col, text_col), [lambda _: [annotate, gate]])
 
     # exact dedup: min-id survivor per hash, as ONE window over the hash
-    # partition — the same one-pass shape as the dialect dedup stage.
-    # Round 13 tried to share one repartition("__h") exchange between a
-    # survivor aggregate and the row-side join, but column pruning makes
-    # the two exchange subtrees differ, so nothing is reused: the
-    # round-14 executed plan showed 2 parquet scans and 2 ArrowEvalPython
-    # nodes — the whole annotate pass, including the lang_id Arrow
-    # kernel's Python boundary crossing of the corpus, ran twice. The
-    # window form has a single branch by construction: one scan, one
-    # Arrow crossing, one exchange (guide §2.1/§4). min() needs no
-    # orderBy, and rows with id == their group min are exactly the old
-    # min-id survivors (ids are unique). Skew note: a viral duplicated
-    # document makes its __h partition hot either way — the old shape
-    # explicitly repartitioned the corpus by __h too.
+    # partition — the same one-pass shape as the dialect dedup stage. A
+    # survivor aggregate joined back ran the annotate pass, Arrow
+    # crossing included, twice (round-14 plan: 2 scans, 2
+    # ArrowEvalPython); the window has one branch: one scan, one
+    # crossing, one exchange (guide §2.1/§4). Ids are unique, so id ==
+    # group min is exactly the min-id survivor. Skew: a viral duplicated
+    # document makes its __h partition hot either way.
     kept = kept.withColumn("__h", F.md5(dedup.normalized(F.col(text_col))))
     kept = (
         kept.withColumn(

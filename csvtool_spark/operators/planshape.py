@@ -1,31 +1,38 @@
-"""Plan-shaping helpers: keep Catalyst from re-evaluating expensive
-projected expressions.
+"""Plan shaping: one rule decides where every per-row filter goes.
 
-``PushPredicateThroughNonJoin`` pushes a filter below a projection by
-substituting the projected aliases into the predicate — so a query that
-projects an expensive column (a regex battery, a quality score) and then
-filters on it evaluates the whole expression tree TWICE per row: once in
-the pushed-down Filter and once in the Project above it (round-14
-measurement: q_pii_scrub's 4-pattern progressive regex battery ran 2x,
-1.19 s vs 0.46 s warm over sf0.1 documents). Codegen subexpression
-elimination dedups within one operator but never across Filter/Project.
+Per-row curation is a run of steps: a ``Select`` (columns added or
+rewritten, by name) or a ``Where`` (a predicate and the columns it
+reads). ``place`` applies them in order, tracks the columns computed so
+far, and places each ``Where``:
 
-``filter_computed`` blocks that pushdown without materializing anything:
-the rule's guard is ``fields.forall(_.deterministic)``, so staging the
-projection with one non-deterministic sentinel column keeps the filter
-ABOVE the projection, where the predicate reads the already-computed
-attribute. The sentinel must survive ColumnPruning, so it is anchored by
-an always-true conjunct in the filter itself (``rand(0)`` is in [0, 1),
-always >= -1, and its fixed seed gives every build of a statement one
-plan, so one set of generated classes; ``monotonically_increasing_id``
-would also work in batch but is rejected by the streaming
-UnsupportedOperationChecker, and the dialect per-row stages run on
-streaming frames too) and dropped by the projection the caller puts on
-top. Scale note: this is pure plan shaping — no extra pass, no state;
-the sentinel is one double per in-flight row.
+- one that reads a computed column is gated ABOVE that projection, where
+  it was written, so it reads the computed attribute;
+- one that reads only the frame's own columns stays a plain ``filter``,
+  so Catalyst still pushes it toward the scan;
+- consecutive ``Where``s are one filter of each kind (one sentinel).
+
+Why: ``PushPredicateThroughNonJoin`` pushes a filter below a projection
+by substituting the projected aliases into the predicate, so a filter on
+an expensive projected column (a regex battery, a quality score, an
+Arrow UDF) evaluates the expression TWICE per row, in the Filter and in
+the Project (round-14: q_pii_scrub's regex battery, 1.19 s vs 0.46 s
+warm at sf0.1). Codegen subexpression elimination never spans the two.
+
+How: the rule's guard is ``fields.forall(_.deterministic)``, so one
+non-deterministic sentinel column on the projection keeps the filter
+above it, materializing nothing. An always-true conjunct in the filter
+keeps the sentinel from being pruned (``rand(0)`` is in [0, 1); the
+fixed seed gives every build of a statement one plan, so one set of
+generated classes; ``monotonically_increasing_id`` is rejected on
+streaming frames, where the per-row stages also run); the sentinel is
+dropped after. No extra pass, no state: one double per in-flight row.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import and_
+from typing import Callable, Iterable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,14 +41,59 @@ from pyspark.sql import functions as F
 _ND = "__planshape_nd"
 
 
-def filter_computed(df: DataFrame, cond: Column) -> DataFrame:
+class Select(NamedTuple):
+    """Columns added or rewritten, by name; ``build`` makes them."""
+
+    names: tuple[str, ...]
+    build: Callable[[DataFrame], DataFrame]
+
+
+class Where(NamedTuple):
+    """A row predicate and the names of the columns it reads."""
+
+    cond: Column
+    reads: tuple[str, ...]
+
+
+def columns(exprs: dict[str, Column]) -> Select:
+    """A ``Select`` of named expressions (``withColumns``)."""
+    return Select(tuple(exprs), lambda df: df.withColumns(exprs))
+
+
+def place(
+    df: DataFrame, stages: Iterable[Callable[[DataFrame], list[Select | Where]]]
+) -> DataFrame:
+    """Apply every stage's steps to ``df`` in order, placing each
+    ``Where`` by the module's rule. A stage validates against the frame
+    as it stands (pending ``Where``s change no column); a ``Select``'s
+    ``build`` gets the frame with every earlier ``Where`` applied."""
+    computed: set[str] = set()
+    gated: list[Column] = []
+    plain: list[Column] = []
+
+    def flush(df: DataFrame) -> DataFrame:
+        if plain:
+            df = df.filter(reduce(and_, plain))
+        if gated:
+            df = _filter_computed(df, reduce(and_, gated))
+        plain.clear()
+        gated.clear()
+        return df
+
+    for stage in stages:
+        for step in stage(df):
+            if isinstance(step, Where):
+                reads = {c.lower() for c in step.reads}
+                (gated if reads & computed else plain).append(step.cond)
+            else:
+                df = step.build(flush(df))
+                computed.update(c.lower() for c in step.names)
+    return flush(df)
+
+
+def _filter_computed(df: DataFrame, cond: Column) -> DataFrame:
     """``df.filter(cond)`` with the predicate evaluated ABOVE ``df``'s
     projection (one evaluation of every projected expression per row)
-    instead of being pushed below it (re-evaluation in the Filter).
-
-    ``cond`` must reference ``df``'s output columns. The caller is
-    expected to project the final column list on top (both to drop the
-    staged helper columns and because that top projection is what keeps
-    the sentinel out of the result schema)."""
+    instead of being pushed below it (re-evaluation in the Filter)."""
     anchored = df.select("*", F.rand(0).alias(_ND))
     return anchored.filter(cond & (F.col(_ND) >= -1.0)).drop(_ND)

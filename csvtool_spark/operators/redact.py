@@ -101,7 +101,7 @@ def redact_documents(
     ``STRICT_PATTERNS``. Returns (id, text, n_pii, pii_fraction); null
     text passes (density 0)."""
     from csvtool_spark.operators.dedup import normalized
-    from csvtool_spark.operators.planshape import filter_computed
+    from csvtool_spark.operators.planshape import Where, columns, place
     from csvtool_spark.operators.textstats import tokens
 
     pats = patterns or STRICT_PATTERNS
@@ -111,10 +111,8 @@ def redact_documents(
         n_pii = n_pii + counts[name]
     # null text → size null → greatest picks 1; empty text → [''] → 1
     n_toks = F.greatest(F.size(tokens(normalized(F.col(text_col)))), F.lit(1))
-    # Stage the per-row work ONCE and gate above it (planshape): a plain
-    # select+filter re-evaluates the whole battery in the pushed-down
-    # Filter — 2x the regex work per row (round-14: 1.19 → 0.46 s warm
-    # at sf0.1, rows identical). The staged text carries the first
+    # Stage the per-row work ONCE; the density gate reads the staged
+    # counts (planshape places it). The staged text carries the first
     # len(pats)-1 replaces (the shared prefix of the progressive count
     # chain, so codegen CSE covers it); only the last replace runs after
     # the gate, on surviving rows. The fraction is recomputed above the
@@ -137,19 +135,19 @@ def redact_documents(
     for _, pat, _ in pats:
         probe = F.col(text_col).rlike(pat)
         dirty = probe if dirty is None else dirty | probe
-    staged = df.select(
-        F.col(id_col),
-        F.when(~dirty, F.col(text_col))
-        .otherwise(redact_pii(F.col(text_col), pats[:-1]))
-        .alias("__t_prefix"),
-        F.when(~dirty, F.lit(0).cast("long")).otherwise(n_pii).alias("__n_pii"),
-        n_toks.alias("__n_toks"),
-        F.coalesce(~dirty, F.lit(False)).alias("__clean"),
-    )
+    staged = columns({
+        "__t_prefix": F.when(~dirty, F.col(text_col)).otherwise(
+            redact_pii(F.col(text_col), pats[:-1])
+        ),
+        "__n_pii": F.when(~dirty, F.lit(0).cast("long")).otherwise(n_pii),
+        "__n_toks": n_toks,
+        "__clean": F.coalesce(~dirty, F.lit(False)),
+    })
     frac = F.round(
         F.col("__n_pii").cast("double") / F.col("__n_toks").cast("double"), 6
     )
-    gated = filter_computed(staged, frac <= float(max_pii_fraction))
+    gate = Where(frac <= float(max_pii_fraction), ("__n_pii", "__n_toks"))
+    gated = place(df.select(id_col, text_col), [lambda _: [staged, gate]])
     _, last_pat, last_repl = pats[-1]
     return gated.select(
         F.col(id_col),

@@ -12,15 +12,19 @@ from typing import Callable
 
 def file_signature(path: str) -> tuple | None:
     """``(path, size, mtime_ns, ctime_ns, inode)`` of every regular file
-    ``path`` names or its glob matches: the quick check rsync and
-    CPython's ``.pyc`` invalidation use. None when the path reaches a
-    directory (Spark lists its files itself) or nothing."""
+    ``path`` names, its glob matches or a matched directory holds, at any
+    depth (a partitioned write's part files count): the quick check
+    rsync and CPython's ``.pyc`` invalidation use. None when that is no
+    file, or one is not a regular file."""
     paths = set(glob.glob(path, include_hidden=True))
     if os.path.exists(path):
         paths.add(path)
+    files = {p for p in paths if not os.path.isdir(p)}
+    for p in paths - files:
+        files.update(os.path.join(r, n) for r, _, names in os.walk(p) for n in names)
     sig = []
     try:
-        for p in sorted(paths):
+        for p in sorted(files):
             st = os.stat(p)
             if not stat.S_ISREG(st.st_mode):
                 return None
@@ -39,7 +43,7 @@ class SourceCache:
         """What ``infer()`` returns for this version of ``path``, read
         with ``options`` (the read options the value depends on). A hit
         needs an unchanged ``file_signature``; a miss infers and stores,
-        unless the signature is None (a directory) or ``infer`` raised.
+        unless the signature is None (no file) or ``infer`` raised.
         Concurrent misses may both infer; either write wins."""
         key = (path, *options)
         sig = file_signature(path)

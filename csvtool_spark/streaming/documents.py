@@ -6,11 +6,11 @@ micro-batch, and the curation operators run incrementally.
 - ``streaming_vocab``: running corpus token counts (update mode) — the
   incremental twin of ``textstats.heavy_hitters``. State is one row per
   distinct token (Zipf-bounded), with map-side partial combine per batch.
-- ``curated_stream``: quality-gate + ingest-dedup chain — stateless
-  scoring/filtering plus ``dropDuplicatesWithinWatermark`` keyed on the
-  content hash, so a shard replayed by an at-least-once source (or the
-  same document arriving from two crawls inside the watermark) is
-  emitted once. Documents carry no event time, so dedup state is bounded
+- ``curated_stream``: quality-gate + ingest-dedup chain — the
+  ``quality(text, min=…)`` pipe (stateless scoring/filtering) plus
+  ``dropDuplicatesWithinWatermark`` keyed on the content hash, so a
+  shard replayed by an at-least-once source (or the same document
+  arriving from two crawls inside the watermark) is emitted once. Documents carry no event time, so dedup state is bounded
   by PROCESSING-time watermark on an ingest timestamp — the standard
   ingest-dedup pattern when the payload has no clock.
 """
@@ -67,27 +67,21 @@ def curated_stream(
     min_quality: float = 0.3,
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Incremental ingest curation: score (stateless) → quality filter →
-    content-hash dedup with processing-time-bounded state. Emits the
-    surviving documents with their quality score and content hash."""
-    from csvtool_spark.operators.planshape import filter_computed
+    """Incremental ingest curation: the ``quality(text, min=…)`` pipe
+    (stateless score and gate, ``piped_stream``) → content-hash dedup
+    with processing-time-bounded state. Emits the surviving documents
+    with their quality score and content hash."""
+    from decimal import Decimal
 
-    # gate ABOVE the scoring projection (planshape): a plain filter is
-    # pushed below it and re-evaluates the quality tree twice per row in
-    # every micro-batch (rand-sentinel form — streaming-legal)
-    scored = filter_computed(
-        stream.select(
-            "doc_id",
-            "source",
-            F.col("text"),
-            textstats.quality_score(F.col("text")).alias("quality"),
-            F.md5(dedup.normalized(F.col("text"))).alias("text_hash"),
-            F.current_timestamp().alias("__ingest_ts"),
-        ),
-        F.col("quality") >= float(min_quality),
-    )
+    # the cut as an exact positional literal; a quality score is never
+    # negative, so a negative cut keeps what 0 keeps
+    cut = format(Decimal(max(float(min_quality), 0.0)), "f")
+    scored = piped_stream(
+        stream.select("doc_id", "source", "text"), f"quality(text, min={cut})"
+    ).withColumn("text_hash", F.md5(dedup.normalized(F.col("text"))))
     return (
-        scored.withWatermark("__ingest_ts", watermark)
+        scored.withColumn("__ingest_ts", F.current_timestamp())
+        .withWatermark("__ingest_ts", watermark)
         .dropDuplicatesWithinWatermark(["text_hash"])
         .drop("__ingest_ts")
     )
@@ -177,10 +171,12 @@ def classified_stream(
     (None keeps everything, annotated). Emits (doc_id, source, pred,
     score_pred). Deterministic — replayed shards classify identically."""
     from csvtool_spark.operators import classify
+    from csvtool_spark.operators.planshape import Select, Where, place
 
-    scored = classify.nb_score_map(stream, model)
+    steps = [Select(("pred", "score_pred"), lambda d: classify.nb_score_map(d, model))]
     if keep is not None:
-        scored = scored.filter(F.col("pred").isin(*keep))
+        steps.append(Where(F.col("pred").isin(*keep), ("pred",)))
+    scored = place(stream, [lambda _: steps])
     return scored.select("doc_id", "source", "pred", "score_pred")
 
 

@@ -672,19 +672,81 @@ def test_failed_inference_leaves_no_entry(spark, tmp_path, monkeypatch, fmt):
     assert eng.sql(f"select * from '{p}'").collect()[0].id == 1
 
 
+def _add_part(d, fmt):
+    fmt.write(d / f"part-2{fmt.ext}", [{"id": 4, "name": fmt.extra}])
+
+
+def _rewrite_part(d, fmt):
+    _same_size_then_utime(d / f"part-0{fmt.ext}", fmt)
+
+
+def _delete_part(d, fmt):
+    (d / f"part-1{fmt.ext}").unlink()
+
+
 @pytest.mark.parametrize("fmt", sorted(_FMTS))
-def test_directory_path_is_never_memoized(spark, tmp_path, fmt):
+@pytest.mark.parametrize(
+    "change", [_add_part, _rewrite_part, _delete_part],
+    ids=lambda f: f.__name__.strip("_"),
+)
+def test_directory_table_is_inferred_once_per_version(
+    spark, tmp_path, count_misses, change, fmt
+):
+    """A directory table (a ``save_csv_dir`` or ``save_parquet`` output)
+    is one file version per listing of its part files: a warm read is a
+    cache hit equal to a cold read, and any part file added, rewritten
+    or deleted is a new version."""
     from csvtool_spark.engine import CsvEngine
-    from csvtool_spark.sources.cache import file_signature
 
     fmt = _FMTS[fmt]
     d = tmp_path / f"dir{fmt.ext}"
     d.mkdir()
     fmt.write(d / f"part-0{fmt.ext}", _ROWS)
-    assert file_signature(str(d)) is None
+    fmt.write(d / f"part-1{fmt.ext}", [{"id": 3, "name": fmt.extra}])
+    q = f"select * from '{d}'"
     eng = CsvEngine(spark)
-    assert eng.sql(f"select * from '{d}'").collect()[0].id == 1
-    assert eng._sources.entries == {}
+    cold = eng.sql(q)
+    inferred = count_misses()
+    assert inferred >= 1
+    warm = eng.sql(q)
+    assert count_misses() == inferred
+    assert (warm.columns, warm.dtypes, _rows(warm)) == (
+        cold.columns, cold.dtypes, _rows(cold)
+    )
+    change(d, fmt)
+    got = eng.sql(q)
+    assert count_misses() == inferred + 1
+    fresh = CsvEngine(spark).sql(q)
+    assert (got.columns, got.dtypes, _rows(got)) == (
+        fresh.columns, fresh.dtypes, _rows(fresh)
+    )
+
+
+def test_partitioned_parquet_output_is_inferred_once_per_version(
+    spark, tmp_path, count_misses
+):
+    """Spark's own partitioned write (``partition_by``: part files one
+    directory down, plus ``_SUCCESS`` and ``.crc`` files): warm reads hit,
+    and a new partition is a new version."""
+    from csvtool_spark.engine import CsvEngine
+
+    d = str(tmp_path / "out.parquet")
+    spark.createDataFrame([(1, 0), (2, 1)], "id long, shard long").write.partitionBy(
+        "shard"
+    ).parquet(d)
+    eng = CsvEngine(spark)
+    q = f"select * from '{d}'"
+    eng.sql(q)
+    inferred = count_misses()
+    assert inferred >= 1
+    eng.sql(q)
+    assert count_misses() == inferred
+    spark.createDataFrame([(3, 2)], "id long, shard long").write.mode(
+        "append"
+    ).partitionBy("shard").parquet(d)
+    got = eng.sql(q)
+    assert count_misses() == inferred + 1
+    assert sorted(r.id for r in got.collect()) == [1, 2, 3]
 
 
 def test_warm_sql_submits_no_jobs(spark, tmp_path, count_jobs, count_inference,

@@ -23,14 +23,53 @@ SF = "/root/testdata/sf0.001"
 SKIP = {"bpe"}
 
 
-def _stage_makers(rng: random.Random) -> dict:
+def _appended_numeric() -> dict[str, list[tuple[str, bool]]]:
+    """stage -> the numeric columns it appends, as (name, is_fraction)."""
+    from csvtool_spark.operators.textstats import GOPHER_THRESHOLDS
+
+    return {
+        "tokens": [("n_tokens", False)],
+        "quality": [("quality", True)],
+        "gopher": [(c, True) for c in GOPHER_THRESHOLDS],
+        "chunk": [("n_chunk_tokens", False)],
+        "shard": [("shard", False)],
+    }
+
+
+def _filter_maker(rng: random.Random, numeric: list[tuple[str, bool]]):
+    """A range gate on ``doc_id`` or on a numeric column an earlier stage
+    appended, so gate placement over computed columns is fuzzed too.
+    Bounds keep most rows (fractions: quality and the gopher signals)."""
+
+    def make() -> str:
+        appended = numeric[1:]
+        col, frac = (
+            rng.choice(appended)
+            if appended and rng.random() < 0.7
+            else numeric[0]
+        )
+        if col == "doc_id":
+            return f"filter(doc_id, min={rng.randrange(0, 200)})"
+        if frac:
+            bound = rng.choice(["min=0.1", "min=0.3", "max=0.5", "max=0.9"])
+        else:
+            bound = rng.choice(
+                ["min=1", f"min={rng.randrange(0, 30)}", f"max={rng.randrange(3, 60)}"]
+            )
+        return f"filter({col}, {bound})"
+
+    return make
+
+
+def _stage_makers(rng: random.Random, numeric=None) -> dict:
+    numeric = numeric if numeric is not None else [("doc_id", False)]
     return {
         "langid": lambda: "langid(text)"
         if rng.random() < 0.5
         else "langid(text, keep=en)",
         "quality": lambda: f"quality(text, min={rng.choice([0.3, 0.5])})",
         "tokens": lambda: "tokens(text)",
-        "filter": lambda: f"filter(doc_id, min={rng.randrange(0, 200)})",
+        "filter": _filter_maker(rng, numeric),
         "fingerprint": lambda: "fingerprint(text)",
         "pii_scrub": lambda: "pii_scrub(text)",
         "normalize": lambda: "normalize(text)",
@@ -54,7 +93,8 @@ def _stage_makers(rng: random.Random) -> dict:
 def _gen_stream_chain(rng: random.Random) -> str:
     from csvtool_spark.dialect.stages import STREAM_SAFE
 
-    makers = _stage_makers(rng)
+    numeric = [("doc_id", False)]
+    makers = _stage_makers(rng, numeric)
     assert set(makers) | SKIP == STREAM_SAFE, (
         "streaming fuzz generator out of sync with STREAM_SAFE: "
         f"{sorted((set(makers) | SKIP) ^ STREAM_SAFE)}"
@@ -62,7 +102,10 @@ def _gen_stream_chain(rng: random.Random) -> str:
     # each appending stage at most once (fixed output names); 2-4 stages,
     # plus sometimes the conditionally-legal mixture(rates=1)
     names = rng.sample(sorted(makers), rng.randint(2, 4))
-    parts = [makers[n]() for n in names]
+    parts = []
+    for n in names:
+        parts.append(makers[n]())
+        numeric.extend(_appended_numeric().get(n, []))
     if rng.random() < 0.3:
         srcs = rng.sample([f"src{i}" for i in range(20)], 6)
         kw = ", ".join(f"{s}={rng.randrange(200_000, 1_000_001)}" for s in sorted(srcs))
@@ -116,6 +159,18 @@ def test_every_stream_safe_stage_matches_batch(spark, stage):
     if stage == "shard":
         pipe = "shard(n=4, key=doc_id, repartition=1)"
     _assert_stream_matches_batch(spark, pipe, f"pipe_stage_{stage}")
+
+
+def test_gates_over_computed_columns_stream_matches_batch(spark):
+    """Directed batch≡stream parity for predicates over columns the pipe
+    computed (planshape.place gates them above the projection): a
+    stage's own gate, consecutive gates sharing one sentinel, and a
+    plain pushable gate after them."""
+    pipe = (
+        "tokens(text) |> gopher(text, filter=1) |> quality(text, min=0.3) "
+        "|> filter(n_tokens, min=20) |> hash_sample(0.7, key=doc_id)"
+    )
+    _assert_stream_matches_batch(spark, pipe, "pipe_computed_gates")
 
 
 def test_mixture_rates_stream_matches_batch_directed(spark):

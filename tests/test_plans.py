@@ -3,6 +3,8 @@ ARCHITECTURE.md must stay true as the code evolves."""
 
 from __future__ import annotations
 
+import pytest
+
 from csvtool_spark import queries as catalog
 from tests.conftest import SF_SMALL
 
@@ -233,6 +235,73 @@ def test_pipe_normalize_is_shuffle_free_projection(spark):
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "ArrowEvalPython" in plan
+    # the benchmark's full curation pipe: clean's page filter reads the
+    # normalized text, so it is gated above normalize's projection and
+    # the NFC kernel runs once per branch (10 nodes when it was pushed
+    # below and re-ran the kernel)
+    assert _pipe_plan(spark, _bench_pipe()).count("ArrowEvalPython") == 5
+
+
+def _bench_pipe() -> str:
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench")
+    )
+    from workloads import PIPE_STAGES
+
+    return PIPE_STAGES
+
+
+def _pipe_plan(spark, pipe: str) -> str:
+    from csvtool_spark.engine import CsvEngine
+
+    docs = f"{SF_SMALL}/documents.parquet"
+    return _plan(
+        CsvEngine(spark).sql(f"select doc_id, text, source from '{docs}' |> {pipe}")
+    )
+
+
+#: pipe -> check over (its plan, the plan of a reference pipe): a
+#: predicate over a column the pipe computed reads the computed attribute
+#: (planshape.place gates it above the projection), so the expression is
+#: evaluated once; a predicate over the query's own columns still pushes
+_GATE_CASES = {
+    "normalize_clean": (
+        "normalize(text) |> clean(text)",
+        None,
+        lambda p, ref: p.count("ArrowEvalPython") == 1,
+    ),
+    "gopher_filter": (
+        "gopher(text, filter=1)",
+        None,
+        lambda p, ref: p.count("ArrowEvalPython") == 1,
+    ),
+    "quality_filter": (
+        "quality(text) |> filter(quality, max=0.9)",
+        "quality(text, min=0.5)",
+        lambda p, ref: p.count("split(") == ref.count("split("),
+    ),
+    "tokens_filter": (
+        "tokens(text) |> filter(n_tokens, min=30)",
+        None,
+        lambda p, ref: p.count("size(split(") == 1,
+    ),
+    "quality_hash_sample": (
+        "quality(text) |> hash_sample(0.1, key=doc_id)",
+        None,
+        lambda p, ref: "__planshape_nd" not in p
+        and "hash_sample:" in p[p.index("AS quality"):],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_GATE_CASES))
+def test_pipe_gate_evaluates_each_stage_once(spark, case):
+    pipe, ref, check = _GATE_CASES[case]
+    plan = _pipe_plan(spark, pipe)
+    assert check(plan, ref and _pipe_plan(spark, ref)), plan
 
 
 def test_dialect_join_splits_skewed_partition_under_aqe(spark, tmp_path):
