@@ -900,8 +900,8 @@ def _stage_normalize(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     ``textstats.normalize_text``: C0-control strip (tab/newline kept),
     then NFC composition, then space/tab-run collapse + trim. The pass
     that makes byte-variant copies of the same text hash identically —
-    run it BEFORE dedup/fingerprint stages. Per-row (Arrow-batched NFC
-    kernel + JVM regexes) → streaming-safe."""
+    run it BEFORE dedup/fingerprint stages. Per-row (ICU4J NFC + JVM
+    regexes, no Python worker) → streaming-safe."""
     from csvtool_spark.operators.textstats import normalize_text
 
     _no_extra_kwargs(st, set())
@@ -941,7 +941,7 @@ def _stage_shard(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     return [step]
 
 
-def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
+def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> list:
     """``mixture(source, key=k, tokens=n_col, <src>=<ppm>, ...)`` —
     token-budget data mixing (operators.sampling.mixture_resample):
     downsample sources to target ppm shares with the deterministic
@@ -958,7 +958,8 @@ def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     (``sampling.mixture_apply``): the <src>=<ppm> values are
     PRE-COMPUTED keep rates (e.g. a prior batch run's ``keep_ppm``
     audit) rather than target shares — a pure CASE + coin filter with
-    no global counts, so the stage passes the streaming gate. The
+    no global counts, so the stage is per-row steps
+    (``sampling.mixture_apply_steps``) and passes the streaming gate. The
     ``tokens=`` kwarg is batch/share mode only (rates need no token
     totals); 'rates' joins the reserved source names above.
 
@@ -971,10 +972,13 @@ def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
     (IEEE sqrt), other exponents ride pow. Mutually exclusive with
     rates= and with explicit <src>=<ppm> values."""
     from csvtool_spark.operators.sampling import (
-        mixture_apply,
+        mixture_apply_steps,
         mixture_resample,
         temperature_mixture,
     )
+
+    def frame(body):
+        return [Select(("keep_ppm",), body, barrier=True)]
 
     if len(st.args) != 1:
         raise SemanticError(
@@ -1011,12 +1015,9 @@ def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
                 f"from the corpus — explicit <source>=<ppm> values "
                 f"({', '.join(extra)}) are not allowed"
             )
-        return temperature_mixture(
-            df,
-            source,
-            _resolve_col(df, st, key),
-            _resolve_col(df, st, tok),
-            alpha=temp,
+        keyc, tokc = _resolve_col(df, st, key), _resolve_col(df, st, tok)
+        return frame(
+            lambda d: temperature_mixture(d, source, keyc, tokc, alpha=temp)
         )
     if rates_mode:
         if tok is not None:
@@ -1052,9 +1053,9 @@ def _stage_mixture(df: DataFrame, st: ast.Stage, ctx=None) -> DataFrame:
             f"stage 'mixture' needs at least one <source>=<ppm> {what}"
         )
     if rates_mode:
-        return mixture_apply(df, source, keyc, target)
+        return mixture_apply_steps(source, keyc, target)
     tokc = _resolve_col(df, st, tok)
-    return mixture_resample(df, source, keyc, tokc, target)
+    return frame(lambda d: mixture_resample(d, source, keyc, tokc, target))
 
 
 def _frame(body, computes=lambda st: ()):
@@ -1062,7 +1063,7 @@ def _frame(body, computes=lambda st: ()):
     ``computes(st)`` names the columns it adds or rewrites."""
 
     def stage(df: DataFrame, st: ast.Stage, ctx=None) -> list:
-        return [Select(computes(st), lambda d: body(d, st, ctx))]
+        return [Select(computes(st), lambda d: body(d, st, ctx), barrier=True)]
 
     return stage
 
@@ -1091,7 +1092,8 @@ ROW_STAGES = {
 }
 
 #: DataFrame stages: cross-row passes a micro-batch cannot see past (the
-#: streaming gate's error names the twins of dedup, decontaminate, mixture)
+#: streaming gate's error names the twins of dedup, decontaminate, mixture;
+#: ``mixture(rates=1)`` alone is per-row steps)
 FRAME_STAGES = {
     "dedup": _frame(_stage_dedup),
     "neardup": _frame(_stage_neardup),
@@ -1100,7 +1102,7 @@ FRAME_STAGES = {
     "quota": _frame(_stage_quota),
     "pack": _frame(_stage_pack, lambda st: ("seq_id", "seq_offset", "n_tok")),
     "derep": _frame(_stage_derep, _text_rewrite),
-    "mixture": _frame(_stage_mixture, lambda st: ("keep_ppm",)),
+    "mixture": _stage_mixture,
 }
 
 STAGES = {**ROW_STAGES, **FRAME_STAGES}

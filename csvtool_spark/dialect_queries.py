@@ -751,8 +751,8 @@ def _pipe_normalize_oracle() -> str:
 dialect(
     "q_dialect_pipe_normalize",
     # the motivating composition: normalize BEFORE hashing so byte-variant
-    # copies of one text fingerprint identically (NFC via the Arrow
-    # kernel vs DuckDB's utf8proc — unicode probes pinned in pytest)
+    # copies of one text fingerprint identically (ICU4J NFC in the JVM
+    # vs DuckDB's utf8proc — unicode probes pinned in pytest)
     "select doc_id, text from documents |> normalize(text) "
     "|> fingerprint(text)",
     _pipe_normalize_oracle(),

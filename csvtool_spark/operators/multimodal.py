@@ -103,42 +103,6 @@ def decode_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def resize_media(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Arrow-batched resize plumbing: one output row per media row with the
-    re-encoded (smaller) binary and its new geometry. The pixel resample is
-    STUBBED (real impl: PIL ``Image.resize`` + re-encode in place of the
-    byte-slice) — the Spark contract around it is real: binary in/out
-    through Arrow, self-contained closure, deterministic output size
-    ``min(n_bytes, target_w*target_h//8)`` so downstream partition sizing
-    is testable without codecs."""
-    out_schema = (
-        "doc_id long, media binary, media_type string, "
-        "n_bytes long, width int, height int"
-    )
-    tw, th = int(target_w), int(target_h)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        cap = max(1, (tw * th) // 8)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            blobs = [bytes(b)[:cap] for b in pdf["media"]]
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64").to_numpy(),
-                    "media": blobs,
-                    "media_type": pdf["media_type"].to_numpy(),
-                    "n_bytes": [len(b) for b in blobs],
-                    "width": tw,
-                    "height": th,
-                }
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video-frame sampling plumbing: explode a (stubbed) frame index list;
     the real decoder would emit per-frame binaries instead of indexes."""

@@ -5,11 +5,18 @@ rewritten, by name) or a ``Where`` (a predicate and the columns it
 reads). ``place`` applies them in order, tracks the columns computed so
 far, and places each ``Where``:
 
-- one that reads a computed column is gated ABOVE that projection, where
+- one that reads a computed column is gated above that projection, where
   it was written, so it reads the computed attribute;
-- one that reads only the frame's own columns stays a plain ``filter``,
-  so Catalyst still pushes it toward the scan;
-- consecutive ``Where``s are one filter of each kind (one sentinel).
+- one that reads only the frame's own columns is a plain ``filter`` at
+  the start of its run (the steps since the last DataFrame stage), so it
+  drops rows before any per-row projection runs and Catalyst pushes it
+  toward the scan, also past a non-deterministic projection;
+- the ``Where``s between two ``Select``s are one filter of each kind
+  (one sentinel).
+
+A DataFrame stage (``Select(..., barrier=True)``: dedup, a join, a
+window) ends a run: no filter moves past it, because filters do not
+commute with cross-row passes.
 
 Why: ``PushPredicateThroughNonJoin`` pushes a filter below a projection
 by substituting the projected aliases into the predicate, so a filter on
@@ -42,10 +49,12 @@ _ND = "__planshape_nd"
 
 
 class Select(NamedTuple):
-    """Columns added or rewritten, by name; ``build`` makes them."""
+    """Columns added or rewritten, by name; ``build`` makes them.
+    ``barrier`` marks a DataFrame stage, which ends the per-row run."""
 
     names: tuple[str, ...]
     build: Callable[[DataFrame], DataFrame]
+    barrier: bool = False
 
 
 class Where(NamedTuple):
@@ -66,29 +75,55 @@ def place(
     """Apply every stage's steps to ``df`` in order, placing each
     ``Where`` by the module's rule. A stage validates against the frame
     as it stands (pending ``Where``s change no column); a ``Select``'s
-    ``build`` gets the frame with every earlier ``Where`` applied."""
+    ``build`` gets the frame with every earlier ``Where`` applied. A run
+    in which a plain ``Where`` follows a ``Select`` is built once more
+    from its start; any other run builds each ``Select`` once."""
     computed: set[str] = set()
-    gated: list[Column] = []
-    plain: list[Column] = []
+    base = df  # the frame the current run starts from
+    plain: list[Column] = []  # the run's plain predicates, applied at base
+    gated: list[Column] = []  # predicates waiting above the last Select
+    run: list[Callable[[DataFrame], DataFrame]] = []  # the run's steps
+    hoisted = False  # a plain Where came after a step of the run
 
-    def flush(df: DataFrame) -> DataFrame:
-        if plain:
-            df = df.filter(reduce(and_, plain))
-        if gated:
-            df = _filter_computed(df, reduce(and_, gated))
-        plain.clear()
+    def start() -> DataFrame:
+        return base.filter(reduce(and_, plain)) if plain else base
+
+    def apply(cur: DataFrame, fn: Callable[[DataFrame], DataFrame]) -> DataFrame:
+        cur = cur if run else start()
+        run.append(fn)
+        return fn(cur)
+
+    def gate(cur: DataFrame) -> DataFrame:
+        if not gated:
+            return cur
+        cond = reduce(and_, gated)
         gated.clear()
-        return df
+        return apply(cur, lambda d: _filter_computed(d, cond))
+
+    def end(cur: DataFrame) -> DataFrame:
+        cur = gate(cur)
+        if hoisted:
+            return reduce(lambda d, fn: fn(d), run, start())
+        return cur if run else start()
 
     for stage in stages:
-        for step in stage(df):
-            if isinstance(step, Where):
-                reads = {c.lower() for c in step.reads}
-                (gated if reads & computed else plain).append(step.cond)
+        for st in stage(df):
+            if isinstance(st, Where):
+                if {c.lower() for c in st.reads} & computed:
+                    gated.append(st.cond)
+                else:
+                    plain.append(st.cond)
+                    hoisted = hoisted or bool(run)
+                continue
+            if st.barrier:
+                df = base = st.build(end(df))
+                plain.clear()
+                run.clear()
+                hoisted = False
             else:
-                df = step.build(flush(df))
-                computed.update(c.lower() for c in step.names)
-    return flush(df)
+                df = apply(gate(df), st.build)
+            computed.update(c.lower() for c in st.names)
+    return end(df)
 
 
 def _filter_computed(df: DataFrame, cond: Column) -> DataFrame:

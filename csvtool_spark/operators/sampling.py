@@ -259,8 +259,21 @@ def mixture_apply(
     Pure Column machinery: the bounded rate table compiles to a CASE
     chain (no join, no shuffle, streaming-safe); sources without a rate
     are dropped; appends the ``keep_ppm`` audit column like the batch
-    operator."""
-    from csvtool_spark.functions.hashing import md5_prefix_long
+    operator. The gate goes through ``planshape.place``, so the CASE
+    chain is evaluated once per row (``mixture_apply_steps``)."""
+    from csvtool_spark.operators.planshape import place
+
+    steps = mixture_apply_steps(source_col, key_col, rates_ppm)
+    return place(df, [lambda _: steps])
+
+
+def mixture_apply_steps(
+    source_col: str, key_col: str, rates_ppm: dict[str, int]
+) -> list:
+    """``mixture_apply`` as ``planshape`` steps: the ``keep_ppm`` CASE
+    column, then the coin gate over it (also the dialect's
+    ``mixture(rates=1)`` stage, a per-row stage)."""
+    from csvtool_spark.operators.planshape import Where, columns
 
     bad = {
         s: p for s, p in rates_ppm.items()
@@ -275,9 +288,8 @@ def mixture_apply(
     for s, p in sorted(rates_ppm.items()):
         rate = F.when(F.col(source_col) == F.lit(s), F.lit(int(p))).otherwise(rate)
     coin = mixture_coin(F.col(key_col))
-    return df.withColumn("keep_ppm", rate.cast("long")).filter(
-        F.col("keep_ppm").isNotNull() & (coin < F.col("keep_ppm"))
-    )
+    keep = F.col("keep_ppm").isNotNull() & (coin < F.col("keep_ppm"))
+    return [columns({"keep_ppm": rate.cast("long")}), Where(keep, ("keep_ppm",))]
 
 
 def temperature_mixture(

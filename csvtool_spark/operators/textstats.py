@@ -753,32 +753,35 @@ def normalize_text(col: Column) -> Column:
     composes — exactly the byte-variance this stage exists to remove
     (round-9 second review).
 
-    NFC has no JVM builtin, so this is the repo's documented fallback: a
-    vectorized Arrow-batched pandas UDF (unicodedata.normalize) — the
-    regex/trim steps stay JVM-side. Per-row and stateless → streaming-
-    safe. DuckDB twin: ``normalize_sql_expr`` (utf8proc nfc_normalize +
-    the same pattern strings); NULL stays NULL on both engines."""
-    from pyspark.sql.functions import pandas_udf
+    NFC is ICU4J's ``Normalizer.compose(s, false)``, called through
+    Spark's ``reflect`` (icu4j ships in Spark's jars), so the stage is
+    JVM-only: no Python worker, no Arrow crossing. ``reflect`` is
+    non-deterministic to Catalyst, so no filter is pushed below this
+    projection; ``planshape.place`` puts filters over the frame's own
+    columns before it. The guard is on the INPUT column (NULL stays
+    NULL; ``reflect`` would raise on it), not on the regex result, which
+    would evaluate the control-char regex twice. Per-row and stateless
+    → streaming-safe.
 
-    @pandas_udf("string")
-    def _nfc(s):
-        import unicodedata
-
-        return s.map(
-            lambda v: unicodedata.normalize("NFC", v)
-            if isinstance(v, str)
-            else None
-        )
-
-    x = _nfc(F.regexp_replace(col, NORMALIZE_CTRL, ""))
+    Unicode version: the engine follows the JVM's ICU tables (ICU 77).
+    The DuckDB twin ``normalize_sql_expr`` (utf8proc ``nfc_normalize``,
+    the same pattern strings) and CPython 3.11's ``unicodedata`` are at
+    Unicode 14, so they differ only on composition pairs added after it,
+    which they leave decomposed (U+1611E U+1611E → U+16121 Gurung Khema,
+    U+113C2 U+113C2 → U+113C5 Tulu-Tigalari; pinned in tests)."""
+    stripped = F.regexp_replace(col, NORMALIZE_CTRL, "")
+    nfc = F.reflect(
+        F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), stripped, F.lit(False)
+    )
+    x = F.when(col.isNotNull(), nfc)
     return F.trim(F.regexp_replace(x, r"[ \t]+", " "))
 
 
 def normalize_sql_expr(text_col: str) -> str:
     """DuckDB twin expression of ``normalize_text`` — same pattern
-    strings (Java-regex ∩ RE2), utf8proc NFC vs Python unicodedata NFC
-    (both implement the Unicode algorithm; pinned equal on composed/
-    decomposed/control/CJK probes in tests)."""
+    strings (Java-regex ∩ RE2), utf8proc NFC vs ICU4J NFC (both
+    implement the Unicode algorithm, utf8proc at an older Unicode
+    version; pinned in tests, see ``normalize_text``)."""
     return (
         f"trim(regexp_replace(nfc_normalize(regexp_replace({text_col}, "
         f"'{NORMALIZE_CTRL}', '', 'g')), '[ \\t]+', ' ', 'g'))"

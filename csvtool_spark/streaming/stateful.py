@@ -42,7 +42,7 @@ def user_error_monitor(stream: DataFrame, idle_timeout_ms: int | None = None) ->
             return
         # GroupState.get is a PROPERTY in PySpark (calling the returned
         # tuple raised TypeError) — latent until a key carried state into
-        # a second micro-batch; caught by the forced two-batch funnel test
+        # a second micro-batch (test_error_monitor_state_carries_across_batches)
         n_events, n_errors = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n_events += len(pdf)
@@ -68,77 +68,3 @@ def user_error_monitor(stream: DataFrame, idle_timeout_ms: int | None = None) ->
         )
     )
 
-
-FUNNEL_OUT_SCHEMA = "user_id long, depth int, last_t long"
-FUNNEL_STATE_SCHEMA = "depth int, last_t long"
-
-
-def funnel_monitor(
-    stream: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    idle_timeout_ms: int | None = None,
-) -> DataFrame:
-    """Incremental funnel: per-user (depth, last step ts) state advanced
-    by the same greedy strict-progression chain as the batch
-    ``operators/funnel.py``, one emit per user per micro-batch.
-
-    Equivalence contract: equals the batch funnel when each user's step
-    events arrive in event-time order ACROSS micro-batches (the ingest
-    norm — shards land chronologically; within one batch events are
-    sorted before folding, so any within-batch order is fine). An
-    out-of-order straggler that batch would have woven into an earlier
-    chain position cannot retroactively advance streaming state — the
-    inherent append-only trade-off of every incremental funnel; replaying
-    the directory through the batch operator is the audit path.
-
-    State: two small integers per user — bounded by the user population,
-    with optional ProcessingTimeTimeout expiry for abandoned users
-    (same caveat as ``user_error_monitor``: leave None for availableNow
-    replays)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if not steps or len(set(steps)) != len(steps):
-        raise ValueError(f"steps must be non-empty and distinct, got {steps!r}")
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    steps_local = list(steps)
-    neg_inf = -(2**62)
-
-    def update(key, pdfs, state):
-        import pandas as _pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        # NB: GroupState.get is a property, not a method (see above)
-        depth, last_t = state.get if state.exists else (0, neg_inf)
-        evs = []
-        for pdf in pdfs:
-            evs.extend(zip(pdf["t"].tolist(), pdf["y"].tolist()))
-        evs.sort()
-        for t, y in evs:
-            if depth < len(steps_local) and y == steps_local[depth] and t > last_t:
-                depth += 1
-                last_t = t
-        state.update((depth, last_t))
-        if idle_timeout_ms:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield _pd.DataFrame(
-            {"user_id": [key[0]], "depth": [depth], "last_t": [last_t]}
-        )
-
-    projected = stream.filter(F.col(type_col).isin(*steps)).select(
-        F.col(user_col).alias("user_id"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-        F.col(type_col).alias("y"),
-    )
-    return projected.groupBy("user_id").applyInPandasWithState(
-        update, FUNNEL_OUT_SCHEMA, FUNNEL_STATE_SCHEMA, "update", timeout
-    )

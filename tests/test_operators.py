@@ -143,20 +143,6 @@ def test_multimodal_decode_plumbing(spark):
     assert len(frames) >= 2
 
 
-def test_multimodal_resize_plumbing(spark):
-    df = spark.createDataFrame(
-        [(1, "x" * 5000), (2, "tiny")], "doc_id long, text string"
-    )
-    media = multimodal.attach_fake_media(df, "text", "doc_id")
-    out = multimodal.resize_media(media, 64, 64)
-    assert dict(out.dtypes)["media"] == "binary"
-    by = {r.doc_id: r for r in out.collect()}
-    cap = 64 * 64 // 8
-    assert by[1].n_bytes == cap and len(by[1].media) == cap   # truncated
-    assert by[2].n_bytes == 4                                 # smaller kept
-    assert by[1].width == 64 and by[1].height == 64
-
-
 def test_minhash_arrow_and_jvm_kernels_identical(spark):
     """The Arrow numpy kernel and the JVM Column fold implement the same
     KM lane family — signatures must be bit-identical, so the LSH pair

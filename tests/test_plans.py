@@ -227,19 +227,20 @@ def test_pipe_quota_tokens_single_exchange(spark):
 
 def test_pipe_normalize_is_shuffle_free_projection(spark):
     """The promoted normalize -> fingerprint chain is a pure per-row
-    rewrite: one Arrow-batched Python projection (the NFC kernel — no
-    JVM builtin exists, see ROUND_NOTES r10 measurement) plus JVM
-    regex/hash projections. No Exchange, no Join — free at any corpus
-    size and the reason the stage is streaming-legal."""
+    rewrite in the JVM: ICU4J NFC through ``reflect`` plus regex/hash
+    projections. No Exchange, no Join — free at any corpus size and the
+    reason the stage is streaming-legal. No Python node either, in that
+    chain or in the benchmark's full curation pipe: the default pipe
+    starts no Python worker."""
+    from perfbench.spans import PYTHON_NODES
+
     plan = _plan(ALL_QUERIES["q_dialect_pipe_normalize"](spark, SF_SMALL))
     assert "Exchange" not in plan
     assert "Join" not in plan
-    assert "ArrowEvalPython" in plan
-    # the benchmark's full curation pipe: clean's page filter reads the
-    # normalized text, so it is gated above normalize's projection and
-    # the NFC kernel runs once per branch (10 nodes when it was pushed
-    # below and re-ran the kernel)
-    assert _pipe_plan(spark, _bench_pipe()).count("ArrowEvalPython") == 5
+    assert "com.ibm.icu.text.Normalizer" in plan
+    full = _pipe_plan(spark, _bench_pipe())
+    for node in PYTHON_NODES:
+        assert node not in plan and node not in full, node
 
 
 def _bench_pipe() -> str:
@@ -271,7 +272,7 @@ _GATE_CASES = {
     "normalize_clean": (
         "normalize(text) |> clean(text)",
         None,
-        lambda p, ref: p.count("ArrowEvalPython") == 1,
+        lambda p, ref: p.count("com.ibm.icu.text.Normalizer") == 1,
     ),
     "gopher_filter": (
         "gopher(text, filter=1)",
@@ -294,7 +295,39 @@ _GATE_CASES = {
         lambda p, ref: "__planshape_nd" not in p
         and "hash_sample:" in p[p.index("AS quality"):],
     ),
+    # a predicate over the query's own columns goes to the start of its
+    # run, below a non-deterministic projection (normalize's reflect) or
+    # a gated one (quality's sentinel): it reaches the scan
+    "normalize_hash_sample": (
+        "normalize(text) |> hash_sample(0.1, key=doc_id)",
+        None,
+        lambda p, ref: "hash_sample:" in _data_filters(p),
+    ),
+    "normalize_filter_id": (
+        "normalize(text) |> filter(doc_id, max=100)",
+        None,
+        lambda p, ref: "(doc_id#" in _data_filters(p)
+        and "<= 100)" in _data_filters(p),
+    ),
+    "quality_tokens_hash_sample": (
+        "quality(text, min=0.5) |> tokens(text) |> hash_sample(0.1, key=doc_id)",
+        None,
+        lambda p, ref: "hash_sample:" in _data_filters(p),
+    ),
+    # mixture(rates=1)'s coin gate reads its own keep_ppm CASE column:
+    # the CASE chain is evaluated once, in the projection
+    "mixture_rates": (
+        "mixture(source, key=doc_id, rates=1, src0=500000, src1=500000)",
+        None,
+        lambda p, ref: p.count("= src0)") == 1,
+    ),
 }
+
+
+def _data_filters(plan: str) -> str:
+    """The scan's ``DataFilters: [...]`` list (empty when there is none)."""
+    line = next((ln for ln in plan.splitlines() if "FileScan" in ln), "")
+    return line.partition("DataFilters: [")[2].partition("], Format:")[0]
 
 
 @pytest.mark.parametrize("case", sorted(_GATE_CASES))
@@ -302,6 +335,38 @@ def test_pipe_gate_evaluates_each_stage_once(spark, case):
     pipe, ref, check = _GATE_CASES[case]
     plan = _pipe_plan(spark, pipe)
     assert check(plan, ref and _pipe_plan(spark, ref)), plan
+
+
+def test_place_rebuilds_a_run_only_for_a_late_plain_where(spark):
+    """``planshape.place`` builds each ``Select`` once, unless a plain
+    ``Where`` follows a ``Select`` of its run: then the run is built once
+    more from its start, behind the hoisted filter. A DataFrame stage
+    (``barrier=True``) ends the run; no filter moves past it."""
+    from pyspark.sql import functions as F
+
+    from csvtool_spark.operators.planshape import Select, Where, columns, place
+
+    builds = []
+
+    def sel(name):
+        step = columns({name: F.col("id") + 1})
+        return Select(step.names, lambda d: builds.append(name) or step.build(d))
+
+    df = spark.range(10)
+    gated = Where(F.col("a") > 1, ("a",))
+    plain = Where(F.col("id") < 5, ("id",))
+    place(df, [lambda _: [sel("a"), gated, sel("b")]])
+    assert builds == ["a", "b"]
+    builds.clear()
+    out = place(df, [lambda _: [sel("a"), gated, sel("b"), plain]])
+    assert builds == ["a", "b", "a", "b"]
+    assert sorted(r.id for r in out.collect()) == [1, 2, 3, 4]
+    plan = _plan(out)
+    assert plan.rindex(" AS a#") < plan.index(" < 5)")  # below both
+
+    top3 = Select((), lambda d: d.orderBy("id").limit(3), barrier=True)
+    out = place(df, [lambda _: [top3, Where(F.col("id") >= 2, ("id",))]])
+    assert [r.id for r in out.collect()] == [2]
 
 
 def test_dialect_join_splits_skewed_partition_under_aqe(spark, tmp_path):

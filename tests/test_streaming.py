@@ -419,65 +419,6 @@ def test_confusion_stream_matches_batch_matrix(spark):
     assert got == exp and sum(got.values()) == batch.count()
 
 
-def test_funnel_monitor_matches_batch_depths(spark, tmp_path):
-    """The incremental funnel's final per-user state must equal the batch
-    greedy chain when shards arrive in event-time order — fed here as TWO
-    chronological shards so state genuinely carries across micro-batches."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from csvtool_spark.operators.funnel import funnel_user_depths
-    from csvtool_spark.streaming.events import _events_schema
-    from csvtool_spark.streaming.stateful import funnel_monitor
-
-    steps = ["signup", "click", "purchase"]
-    batch = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    exp = {r.user: r.depth for r in
-           funnel_user_depths(batch, "user_id", "ts", "event_type", steps)
-           .filter("depth > 0").collect()}
-
-    # split the shard at the median ts → chronological arrival
-    src = pq.read_table(f"{SF_SMALL}/events.parquet")
-    order = pa.compute.sort_indices(src, sort_keys=[("ts", "ascending")])
-    src = src.take(order)
-    half = src.num_rows // 2
-    d = tmp_path / "funnel_shards"
-    d.mkdir()
-    pq.write_table(src.slice(0, half), str(d / "a.parquet"))
-    pq.write_table(src.slice(half), str(d / "b.parquet"))
-
-    # maxFilesPerTrigger=1 → each shard is its OWN micro-batch, so the
-    # second batch must resume from the first's per-user state
-    raw = (
-        spark.readStream.schema(_events_schema(T.TimestampNTZType()))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(str(d))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    out = funnel_monitor(raw, steps)
-    q = (
-        out.writeStream.format("memory").queryName("funnel_mem")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    try:
-        q.awaitTermination(180)
-    finally:
-        q.stop()
-    # last emit per user is the final state
-    rows = spark.sql(
-        "SELECT user_id, depth FROM "
-        "(SELECT user_id, depth, row_number() OVER "
-        " (PARTITION BY user_id ORDER BY last_t DESC, depth DESC) rn "
-        " FROM funnel_mem) WHERE rn = 1"
-    ).collect()
-    got = {r.user_id: r.depth for r in rows if r.depth > 0}
-    assert got == exp and len(got) > 0
-
-
 def test_error_monitor_state_carries_across_batches(spark, tmp_path):
     """Regression for the GroupState.get property bug: counts must
     ACCUMULATE when a user appears in two separate micro-batches."""
